@@ -1,46 +1,49 @@
-"""Parameterized ANN index lifecycle — the public build/search API
-(round-7 verdict item 4).
-
-``operators/ann_index.py`` exercises this lifecycle with fixture
-constants so the driver can oracle-check it against DuckDB; THESE are
-the same implementations with every knob exposed, so a user can build
-an index over their own embedding table::
+"""IVF×PQ approximate nearest neighbours — the engine's one
+implementation, behind the public build/search API::
 
     import boltzmannclean_spark as bcs
     path = bcs.build_ann_index(vectors, "/data/idx", dims=768,
                                pq_m=96, pq_k=256, n_cells=4096)
     hits = bcs.ann_search(spark, path, queries, k=10, nprobe=8)
 
+Every ANN query in the engine shares this module's trainer
+(``_train``) and ADC top-k scorer (``_adc_topk``): ``build_ann_index``
+is quantize → ``_train`` → write, ``ann_search`` is read → ``_adc_topk``,
+and the registry's train-in-query operators
+(``operators/similarity.py``) call the two in memory with the fixture
+constants, so the DuckDB oracles check the same code the public API
+runs. ``operators/ann_index.py`` wraps the persisted lifecycle
+(fingerprinting, idempotence, atomic tmp-dir+rename) around
+``build_ann_index``.
+
 Design (FAISS IVF×PQ re-expressed as Spark dataflow, all exact-integer
 micro-unit arithmetic so training is deterministic and parquet
 round-trips losslessly):
 
-- **build**: PQ per-block codebooks via Lloyd rounds where assignment
-  is a grouped ``min_by`` over the broadcast codebook (map-side partial
-  aggregation — the corpus×K fan-out never shuffles) and the update
-  shuffles only (block, code, dim) partial sums — constant in corpus
-  size. Optional IVF coarse quantizer trained the same way over the
-  full vectors. Artifacts land as parquet: ``codebook/`` (pq_m×pq_k
-  rows), ``codes/`` (corpus×pq_m rows — 1 byte/block/vector at scale),
-  ``cells/`` + ``ivf_centroids/`` (when ``n_cells``), ``meta.json``.
-- **search**: broadcast the stored codebook, compute each query's
-  exact block-distance LUT (queries×pq_m×pq_k rows, broadcast), score
-  by a code-table equi-join + sum (ADC), salted two-stage top-k. With
-  ``nprobe`` the stored cell table restricts the scan to each query's
+- **train**: PQ per-block codebooks and the optional IVF coarse
+  quantizer via the vectorized Lloyd trainer (``functions/lloyd.py``:
+  one mapInArrow pass + codebook-sized partial sums per round, the
+  codebook materialized on the driver). Artifacts: ``codebook``
+  (pq_m×pq_k rows), ``codes`` (corpus×pq_m rows — 1 byte/block/vector
+  at scale), ``cells`` + ``ivf_centroids`` (IVF builds), persisted as
+  parquet directories of those names plus ``meta.json``.
+- **score**: each query's exact block-distance LUT (queries×pq_m×pq_k
+  rows, broadcast) against the codebook, candidates scored by a
+  code-table equi-join + sum (ADC), salted two-stage top-k. With
+  ``nprobe`` the cell table restricts the scan to each query's
   ``nprobe`` nearest coarse cells — the multiplicative pruning that
   makes a billion-vector store answer. The serve plan contains ZERO
-  training (plan-gated on the registry twins).
+  training.
 
 At cluster scale ``codes`` would be written partitioned/bucketed by
-cell so the probed scan prunes files; the lifecycle wrapper
-(``operators/ann_index.ensure_ann_index``) adds fingerprinting,
-idempotence, and atomic tmp-dir+rename on top of ``build_ann_index``.
+cell so the probed scan prunes files.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,7 +52,6 @@ from boltzmannclean_spark.functions.lloyd import assign_blocks, train_blocks
 from boltzmannclean_spark.functions.topk import topk_per_key
 from boltzmannclean_spark.functions.vectors import (
     as_double,
-    dot,
     dot_unrolled,
     norm,
 )
@@ -64,17 +66,6 @@ DEFAULT_MICRO = 1_000_000
 RESIDUAL_LUT_BROADCAST_MAX_ROWS = 20_000_000
 
 META_FILE = "meta.json"
-
-
-def _sdiv(num: str, den: str) -> str:
-    """Truncate-toward-zero integer division (SQL expr): both Spark and
-    DuckDB round their micro-unit centroid means identically under it —
-    the one integer op where the engines' defaults differ (Spark DIV
-    truncates, DuckDB // floors) and negatives would diverge."""
-    return (
-        f"CAST(CASE WHEN {num} >= 0 THEN {num} DIV {den} "
-        f"ELSE -((-{num}) DIV {den}) END AS BIGINT)"
-    )
 
 
 def _quantize(col, micro: int):
@@ -144,13 +135,14 @@ def _pq_train(
     seeds: DataFrame,
 ) -> DataFrame:
     """Per-block codebooks via ``pq_iters`` Lloyd rounds in exact
-    integer units over ``vecs = (id, qvec)``, via the shared vectorized
-    trainer (functions/lloyd.py — r15: one NumPy mapInArrow pass +
-    codebook-sized partial sums per round replaces the min_by fan-out
-    aggregation at identical exact-integer semantics). Returns
-    (b, cid, cvec array<long>), codebook-sized, materialized on the
-    driver (the MLlib-KMeans pattern). Seeded by the ``seeds`` id
-    frame so training is deterministic."""
+    integer units over ``vecs = (id, qvec)``, via the vectorized
+    trainer (functions/lloyd.py: one NumPy mapInArrow pass +
+    codebook-sized partial sums per round). Returns (b, cid, cvec
+    array<long>), codebook-sized, materialized on the driver (the
+    MLlib-KMeans pattern). Seeded by the ``seeds`` id frame (cid = seed
+    id) so training is deterministic; ties break to the smallest cid
+    and the update is truncate-toward-zero division, which the DuckDB
+    oracles re-derive bit for bit."""
     return train_blocks(
         vecs,
         seeds,
@@ -185,9 +177,9 @@ def _ivf_train(
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: ``kmeans_iters`` Lloyd rounds over the
     full vectors (the shared vectorized trainer with n_blocks=1).
-    Returns (centroids (cell, cvec), assignments (id, cell)). Empty
-    cells drop out of the update deterministically; ties break to the
-    smallest cell id — bit-identical to the former min_by dataflow."""
+    Returns (centroids (cell, cvec), assignments (id, cell), the
+    assignment lazy). Empty cells drop out of the update
+    deterministically; ties break to the smallest cell id."""
     cent_b = train_blocks(
         q,
         seeds,
@@ -202,6 +194,228 @@ def _ivf_train(
         q, cent_b, id_col="id", vec_col="qvec", dims=dims, n_blocks=1
     ).select("id", F.col("cid").alias("cell"))
     return cent, assigned
+
+
+def _train(
+    q: DataFrame,
+    *,
+    dims: int,
+    pq_m: int,
+    pq_iters: int,
+    pq_seeds: DataFrame,
+    cell_seeds: DataFrame | None = None,
+    kmeans_iters: int = 2,
+    residual: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame | None]:
+    """Train an index over the quantized corpus ``q = (id, qvec)``.
+    Returns ``(codebook, codes, ivf_centroids, cells)``: codebook
+    (b, cid, cvec) driver-materialized, codes (id, b, cid) lazy, and —
+    only when ``cell_seeds`` asks for an IVF coarse quantizer —
+    checkpointed ivf_centroids (cell, cvec) and cells (id, cell);
+    otherwise those two are None. ``residual`` trains and encodes PQ on
+    ``x − centroid(cell(x))`` (requires ``cell_seeds``)."""
+    pq_dsub = dims // pq_m
+
+    def _ivf():
+        cent, cells = _ivf_train(
+            q, dims=dims, kmeans_iters=kmeans_iters, seeds=cell_seeds
+        )
+        return cent.localCheckpoint(), cells.localCheckpoint()
+
+    def _pq(src):
+        # The codebook comes back driver-materialized (codebook-sized),
+        # so the encode pass and every consumer share it with no
+        # checkpoint and no re-run.
+        cent = _pq_train(
+            src, pq_m=pq_m, pq_iters=pq_iters, pq_dsub=pq_dsub, seeds=pq_seeds
+        )
+        return cent, _pq_assign(src, cent, pq_m=pq_m, pq_dsub=pq_dsub)
+
+    if cell_seeds is None:
+        return (*_pq(q), None, None)
+    if not residual:
+        # With raw codebooks the IVF and PQ trainings read the same q
+        # and share NO state, so they run from two driver threads and
+        # each training's jobs back-fill the executor idle left by the
+        # other's driver-side centroid updates and collects. Each
+        # thread's dataflow is the sequential one, so results are
+        # bit-identical (the overlap cannot reorder any thread-local
+        # arithmetic).
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fut_ivf = pool.submit(_ivf)
+            codebook, codes = pool.submit(_pq, q).result()
+            ivf_cent, cells = fut_ivf.result()
+        return codebook, codes, ivf_cent, cells
+    # Residual PQ depends on the IVF result, so it trains after it. The
+    # encoded signal is x − centroid(cell(x)): one broadcast join
+    # against the tiny centroid table + a row-local zip_with difference,
+    # exact integers throughout. Checkpointed: the residual frame feeds
+    # pq_iters training passes plus the encode pass.
+    ivf_cent, cells = _ivf()
+    pq_src = (
+        q.join(cells, "id")
+        .join(F.broadcast(ivf_cent), "cell")
+        .select(
+            "id", F.zip_with("qvec", "cvec", lambda x, c: x - c).alias("qvec")
+        )
+    ).localCheckpoint()
+    return (*_pq(pq_src), ivf_cent, cells)
+
+
+def _adc_topk(
+    q: DataFrame,
+    codebook: DataFrame,
+    codes: DataFrame,
+    ivf_cent: DataFrame | None,
+    cells: DataFrame | None,
+    *,
+    pq_m: int,
+    pq_dsub: int,
+    pq_k: int,
+    k: int,
+    nprobe: int | None = None,
+    residual: bool = False,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """ADC top-``k`` of the quantized queries ``q = (id, qvec)`` over an
+    index in ``_train``'s frames (``ivf_cent`` / ``cells`` are needed
+    only with ``nprobe`` or ``residual``). Returns (query_id,
+    neighbor_id, adc_dist, rk) ordered (query_id, rk); see
+    ``ann_search`` for the plan shapes."""
+    qcells = None
+    if nprobe is not None:
+        # Query -> nprobe nearest cells: the centroid table is tiny, so
+        # fan out queries×n_cells and keep the nprobe best per query
+        # (salted top-k; ties to the smaller cell id, matching the
+        # build's assignment tie-break).
+        qcells = topk_per_key(
+            q.crossJoin(F.broadcast(ivf_cent)).select(
+                F.col("id").alias("qc_query"),
+                "cell",
+                _int_dist(F.col("qvec"), F.col("cvec")).alias("cdist"),
+            ),
+            keys=["qc_query"],
+            order=[F.col("cdist"), F.col("cell")],
+            k=nprobe,
+            salt_col="cell",
+        ).select("qc_query", F.col("cell").alias("qcell"))
+    self_filter = (
+        (F.col("id") != F.col("query_id")) if exclude_self else F.lit(True)
+    )
+    if residual:
+        # Per-(query, probed cell) residual LUT: block distance between
+        # (qsub - csub) and each code. All frames feeding it are tiny
+        # (queries, centroids, codebook) — the corpus only appears in
+        # the final code-table equi-join.
+        #
+        # The LUT is |queries| × probed_cells × pq_m × pq_k rows — with
+        # no nprobe every cell is probed, and at 50 probes × 200 cells
+        # × 32 × 256 a forced broadcast hit Spark's 8 GiB hard cap
+        # (9.2 GiB observed on the clustered ×10 corpus). So the hint
+        # follows the computed row count: within budget → broadcast
+        # (map-side, zero shuffle); beyond → no hint, and the
+        # (b, cid, cell) equi-join shuffle-hash-partitions both sides —
+        # the code scan is corpus-sized and shuffling anyway, so the
+        # extra cost is the LUT's own exchange, not a new corpus pass.
+        # Counting q/ivf_cent is two jobs over probe-/domain-sized
+        # frames. q is pinned first so an expensive derived ``queries``
+        # frame runs once, not once here and again in the serve job;
+        # localCheckpoint (not cache) so the blocks live as long as the
+        # returned DataFrame and the ContextCleaner reaps them after.
+        q = q.localCheckpoint(eager=False)
+        n_q = q.count()
+        n_cells_probed = (
+            nprobe if nprobe is not None else ivf_cent.count()
+        )
+        lut_rows = n_q * n_cells_probed * pq_m * pq_k
+        lut_hint = (
+            F.broadcast if lut_rows <= RESIDUAL_LUT_BROADCAST_MAX_ROWS
+            else (lambda df: df)
+        )
+        probed = (
+            qcells
+            if qcells is not None
+            else q.select(F.col("id").alias("qc_query")).crossJoin(
+                F.broadcast(ivf_cent.select(F.col("cell").alias("qcell")))
+            )
+        )
+        csub = _subvectors(
+            ivf_cent.select(
+                F.col("cell").alias("id"), F.col("cvec").alias("qvec")
+            ),
+            pq_m,
+            pq_dsub,
+        ).select(
+            F.col("id").alias("ccell"),
+            F.col("b").alias("cb"),
+            F.col("qsub").alias("csub"),
+        )
+        rsub = (
+            _subvectors(q, pq_m, pq_dsub)
+            .join(probed, F.col("id") == F.col("qc_query"))
+            .join(
+                F.broadcast(csub),
+                (F.col("b") == F.col("cb"))
+                & (F.col("qcell") == F.col("ccell")),
+            )
+            .select(
+                F.col("id").alias("query_id"),
+                "qcell",
+                "b",
+                F.zip_with("qsub", "csub", lambda x, c: x - c).alias("rsub"),
+            )
+        )
+        lut = rsub.join(F.broadcast(codebook), "b").select(
+            "query_id",
+            "qcell",
+            F.col("b").alias("lb"),
+            F.col("cid").alias("lcid"),
+            _int_dist_unrolled(F.col("rsub"), F.col("cvec"), pq_dsub).alias(
+                "pdist"
+            ),
+        )
+        cand = codes.join(
+            cells.withColumnRenamed("cell", "vcell"), "id"
+        ).join(
+            lut_hint(lut),
+            (F.col("b") == F.col("lb"))
+            & (F.col("cid") == F.col("lcid"))
+            & (F.col("vcell") == F.col("qcell")),
+        )
+    else:
+        qsub = _subvectors(q, pq_m, pq_dsub)
+        lut = qsub.join(F.broadcast(codebook), "b").select(
+            F.col("id").alias("query_id"),
+            "b",
+            "cid",
+            _int_dist_unrolled(F.col("qsub"), F.col("cvec"), pq_dsub).alias(
+                "pdist"
+            ),
+        )
+        if qcells is None:
+            cand = codes.join(F.broadcast(lut), ["b", "cid"])
+        else:
+            cand = (
+                codes.join(cells.withColumnRenamed("cell", "vcell"), "id")
+                .join(F.broadcast(lut), ["b", "cid"])
+                .join(
+                    F.broadcast(qcells),
+                    (F.col("vcell") == F.col("qcell"))
+                    & (F.col("query_id") == F.col("qc_query")),
+                )
+            )
+    scored = (
+        cand.where(self_filter)
+        .groupBy("query_id", F.col("id").alias("neighbor_id"))
+        .agg(F.sum("pdist").alias("adc_dist"))
+    )
+    return topk_per_key(
+        scored,
+        keys=["query_id"],
+        order=[F.col("adc_dist"), F.col("neighbor_id")],
+        k=k,
+        salt_col="neighbor_id",
+    ).orderBy("query_id", "rk")
 
 
 def build_ann_index(
@@ -273,98 +487,43 @@ def build_ann_index(
         )
     pq_dsub = dims // pq_m
     # Checkpoint the quantized corpus once: it feeds every training and
-    # encode pass (IVF rounds + PQ rounds + assignment) — 32× narrower
-    # than the old per-block explode this replaces (r15).
+    # encode pass (IVF rounds + PQ rounds + assignment).
     q = df.select(
         F.col(id_col).alias("id"), _quantize(F.col(vec_col), micro).alias("qvec")
     ).localCheckpoint()
-    ivf_cent = cells = None
 
-    def _ivf_part():
-        cell_seeds = (
-            df.where(cell_seed_pred).select(F.col(id_col).alias("id"))
-            if cell_seed_pred is not None
-            else _smallest_ids(q, n_cells)
-        )
-        cent_l, cells_l = _ivf_train(
-            q, dims=dims, kmeans_iters=kmeans_iters, seeds=cell_seeds
-        )
-        cent_l = cent_l.localCheckpoint()
-        cells_l = cells_l.localCheckpoint()
-        cells_l.coalesce(4).write.mode("overwrite").parquet(
+    def _seeds(pred: Column | None, n: int | None) -> DataFrame:
+        # Seed predicates evaluate against the CALLER'S frame (their own
+        # column names); the default is the n smallest ids.
+        if pred is not None:
+            return df.where(pred).select(F.col(id_col).alias("id"))
+        return _smallest_ids(q, n)
+
+    codebook, codes, ivf_cent, cells = _train(
+        q,
+        dims=dims,
+        pq_m=pq_m,
+        pq_iters=pq_iters,
+        pq_seeds=_seeds(pq_seed_pred, pq_k),
+        cell_seeds=_seeds(cell_seed_pred, n_cells) if has_ivf else None,
+        kmeans_iters=kmeans_iters,
+        residual=residual,
+    )
+    if has_ivf:
+        cells.coalesce(4).write.mode("overwrite").parquet(
             os.path.join(out_dir, "cells")
         )
-        cent_l.repartition(1).write.mode("overwrite").parquet(
+        ivf_cent.repartition(1).write.mode("overwrite").parquet(
             os.path.join(out_dir, "ivf_centroids")
         )
-        return cent_l, cells_l
-
-    def _pq_part(pq_src):
-        # Seed predicates evaluate against the CALLER'S frame (their
-        # own column names); the default is the pq_k smallest ids.
-        pq_seeds = (
-            df.where(pq_seed_pred).select(F.col(id_col).alias("id"))
-            if pq_seed_pred is not None
-            else _smallest_ids(q, pq_k)
-        )
-        # Codebook comes back driver-materialized (codebook-sized)
-        # from the vectorized trainer, so the persist and encode
-        # consumers share it with no checkpoint and no re-run.
-        cent = _pq_train(
-            pq_src, pq_m=pq_m, pq_iters=pq_iters, pq_dsub=pq_dsub,
-            seeds=pq_seeds,
-        )
-        codes = _pq_assign(pq_src, cent, pq_m=pq_m, pq_dsub=pq_dsub)
-        cent.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "codebook")
-        )
-        # At cluster scale: .write.partitionBy(cell) / bucketBy so the
-        # probed ADC scan prunes files; at test SF a handful is right.
-        codes.coalesce(4).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "codes")
-        )
-
-    if has_ivf and not residual:
-        # r16 (guide §2.6 — overlap independent jobs): with raw (non-
-        # residual) codebooks the IVF and PQ trainings read the same
-        # checkpointed q and share NO state, so they run from two
-        # driver threads and each training's jobs back-fill the
-        # executor idle left by the other's driver-side centroid
-        # updates and collects. Each thread's own dataflow is the
-        # unchanged sequential one, so results are bit-identical (the
-        # scheduler overlap cannot reorder any thread-local
-        # arithmetic). Residual builds stay sequential below: PQ
-        # trains on x − centroid(cell(x)), a real dependency.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_ivf = pool.submit(_ivf_part)
-            fut_pq = pool.submit(_pq_part, q)
-            ivf_cent, cells = fut_ivf.result()
-            fut_pq.result()
-    else:
-        if has_ivf:
-            ivf_cent, cells = _ivf_part()
-        if residual:
-            # IVF-centered PQ: the encoded signal is
-            # x - centroid(cell(x)). One broadcast join against the
-            # tiny centroid table + a row-local zip_with difference —
-            # exact integers throughout. Checkpointed: the residual
-            # frame feeds pq_iters training passes plus the encode
-            # pass.
-            pq_src = (
-                q.join(cells, "id")
-                .join(F.broadcast(ivf_cent), "cell")
-                .select(
-                    "id",
-                    F.zip_with(
-                        "qvec", "cvec", lambda x, c: x - c
-                    ).alias("qvec"),
-                )
-            ).localCheckpoint()
-        else:
-            pq_src = q
-        _pq_part(pq_src)
+    codebook.repartition(1).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "codebook")
+    )
+    # At cluster scale: .write.partitionBy(cell) / bucketBy so the
+    # probed ADC scan prunes files; at test SF a handful is right.
+    codes.coalesce(4).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "codes")
+    )
     n_corpus = df.count()
     conf = {
         "dims": dims,
@@ -428,170 +587,38 @@ def ann_search(
     measured r14; still pass ``nprobe`` on residual indexes at scale,
     the pruning is the point)."""
     conf = read_index_conf(index_dir)
-    pq_dsub, pq_m, micro = conf["pq_dsub"], conf["pq_m"], conf["micro"]
     residual = conf.get("residual", False)
-    cent = spark.read.parquet(os.path.join(index_dir, "codebook"))
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
-    q = queries.select(
-        F.col(id_col).alias("id"),
-        _quantize(F.col(vec_col), micro).alias("qvec"),
-    )
     if nprobe is not None and not conf.get("has_ivf"):
         raise ValueError(
             f"index at {index_dir} was built without n_cells; "
             "nprobe requires an IVF build"
         )
-    qcells = None
+    codebook = spark.read.parquet(os.path.join(index_dir, "codebook"))
+    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
+    ivf_cent = cells = None
     if nprobe is not None or residual:
         ivf_cent = spark.read.parquet(
             os.path.join(index_dir, "ivf_centroids")
         )
         cells = spark.read.parquet(os.path.join(index_dir, "cells"))
-    if nprobe is not None:
-        # Query -> nprobe nearest cells: the centroid table is tiny, so
-        # fan out queries×n_cells and keep the nprobe best per query
-        # (salted top-k; ties to the smaller cell id, matching the
-        # build's assignment tie-break).
-        qcells = topk_per_key(
-            q.crossJoin(F.broadcast(ivf_cent)).select(
-                F.col("id").alias("qc_query"),
-                "cell",
-                _int_dist(F.col("qvec"), F.col("cvec")).alias("cdist"),
-            ),
-            keys=["qc_query"],
-            order=[F.col("cdist"), F.col("cell")],
-            k=nprobe,
-            salt_col="cell",
-        ).select("qc_query", F.col("cell").alias("qcell"))
-    self_filter = (
-        (F.col("id") != F.col("query_id")) if exclude_self else F.lit(True)
+    q = queries.select(
+        F.col(id_col).alias("id"),
+        _quantize(F.col(vec_col), conf["micro"]).alias("qvec"),
     )
-    if residual:
-        # Per-(query, probed cell) residual LUT: block distance between
-        # (qsub - csub) and each code. All frames feeding it are tiny
-        # (queries, centroids, codebook) — the corpus only appears in
-        # the final code-table equi-join.
-        #
-        # r14 MEASURED fix: the LUT is |queries| × probed_cells × pq_m
-        # × pq_k rows — with no nprobe every cell is probed, and at 50
-        # probes × 200 cells × 32 × 256 the forced broadcast hit
-        # Spark's 8 GiB hard cap (9.2 GiB observed on the clustered
-        # ×10 corpus). Decide the hint from the computed row count:
-        # within budget → broadcast (map-side, zero shuffle); beyond →
-        # drop the hint and let the (b, cid, cell) equi-join shuffle-
-        # hash-partition both sides — the code scan is corpus-sized
-        # and shuffling anyway, so the extra cost is the LUT's own
-        # exchange, not a new corpus pass. Counting q/ivf_cent here is
-        # two jobs over probe-/domain-sized frames, serve-path cheap.
-        # Pin first (r14 ADVICE): if ``queries`` is an expensive
-        # derived frame, its upstream work would otherwise run once for
-        # this count and again inside the serve job. localCheckpoint
-        # (not cache) so the blocks' lifetime is the returned
-        # DataFrame's — the ContextCleaner reaps them once the caller
-        # drops it, whereas cache() pinned the plan in the CacheManager
-        # until an unpersist that no serve-path caller ever issued
-        # (r15 ADVICE: repeated serve calls accumulated storage).
-        q = q.localCheckpoint(eager=False)
-        n_q = q.count()
-        n_cells_probed = (
-            nprobe if nprobe is not None else ivf_cent.count()
-        )
-        lut_rows = n_q * n_cells_probed * pq_m * conf["pq_k"]
-        lut_hint = (
-            F.broadcast if lut_rows <= RESIDUAL_LUT_BROADCAST_MAX_ROWS
-            else (lambda df: df)
-        )
-        probed = (
-            qcells
-            if qcells is not None
-            else q.select(F.col("id").alias("qc_query")).crossJoin(
-                F.broadcast(ivf_cent.select(F.col("cell").alias("qcell")))
-            )
-        )
-        csub = _subvectors(
-            ivf_cent.select(
-                F.col("cell").alias("id"), F.col("cvec").alias("qvec")
-            ),
-            pq_m,
-            pq_dsub,
-        ).select(
-            F.col("id").alias("ccell"),
-            F.col("b").alias("cb"),
-            F.col("qsub").alias("csub"),
-        )
-        rsub = (
-            _subvectors(q, pq_m, pq_dsub)
-            .join(probed, F.col("id") == F.col("qc_query"))
-            .join(
-                F.broadcast(csub),
-                (F.col("b") == F.col("cb"))
-                & (F.col("qcell") == F.col("ccell")),
-            )
-            .select(
-                F.col("id").alias("query_id"),
-                "qcell",
-                "b",
-                F.zip_with("qsub", "csub", lambda x, c: x - c).alias("rsub"),
-            )
-        )
-        lut = rsub.join(F.broadcast(cent), "b").select(
-            "query_id",
-            "qcell",
-            F.col("b").alias("lb"),
-            F.col("cid").alias("lcid"),
-            _int_dist_unrolled(F.col("rsub"), F.col("cvec"), pq_dsub).alias(
-                "pdist"
-            ),
-        )
-        scan = codes.join(cells.withColumnRenamed("cell", "vcell"), "id")
-        scored = (
-            scan.join(
-                lut_hint(lut),
-                (F.col("b") == F.col("lb"))
-                & (F.col("cid") == F.col("lcid"))
-                & (F.col("vcell") == F.col("qcell")),
-            )
-            .where(self_filter)
-            .groupBy("query_id", F.col("id").alias("neighbor_id"))
-            .agg(F.sum("pdist").alias("adc_dist"))
-        )
-    else:
-        qsub = _subvectors(q, pq_m, pq_dsub)
-        lut = qsub.join(F.broadcast(cent), "b").select(
-            F.col("id").alias("query_id"),
-            "b",
-            "cid",
-            _int_dist_unrolled(F.col("qsub"), F.col("cvec"), pq_dsub).alias(
-                "pdist"
-            ),
-        )
-        if qcells is not None:
-            scan = codes.join(cells.withColumnRenamed("cell", "vcell"), "id")
-            scored = (
-                scan.join(F.broadcast(lut), ["b", "cid"])
-                .join(
-                    F.broadcast(qcells),
-                    (F.col("vcell") == F.col("qcell"))
-                    & (F.col("query_id") == F.col("qc_query")),
-                )
-                .where(self_filter)
-                .groupBy("query_id", F.col("id").alias("neighbor_id"))
-                .agg(F.sum("pdist").alias("adc_dist"))
-            )
-        else:
-            scored = (
-                codes.join(F.broadcast(lut), ["b", "cid"])
-                .where(self_filter)
-                .groupBy("query_id", F.col("id").alias("neighbor_id"))
-                .agg(F.sum("pdist").alias("adc_dist"))
-            )
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.col("adc_dist"), F.col("neighbor_id")],
+    return _adc_topk(
+        q,
+        codebook,
+        codes,
+        ivf_cent,
+        cells,
+        pq_m=conf["pq_m"],
+        pq_dsub=conf["pq_dsub"],
+        pq_k=conf["pq_k"],
         k=k,
-        salt_col="neighbor_id",
-    ).orderBy("query_id", "rk")
+        nprobe=nprobe,
+        residual=residual,
+        exclude_self=exclude_self,
+    )
 
 
 def tune_nprobe(

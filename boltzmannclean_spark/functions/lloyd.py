@@ -25,7 +25,8 @@ hash-matches):
   same total order as ``min_by(cid, struct(dist, cid))`` and DuckDB's
   ``arg_min(cid, dist * 2^40 + cid)``.
 - The centroid update uses truncate-toward-zero integer division
-  (``_sdiv_np``), matching the engines' shared ``_sdiv`` SQL helper.
+  (``_sdiv_np``), matching the SQL helpers ``sdiv_spark`` /
+  ``sdiv_duck`` in ``functions/exact.py``.
 
 Driver-side materialization is CODEBOOK-sized only (seed vectors at
 init, n_blocks × k × dims longs per round) — bounded by the model, not
@@ -47,8 +48,9 @@ __all__ = ["train_blocks", "assign_blocks"]
 
 def _sdiv_np(num: np.ndarray, den: np.ndarray) -> np.ndarray:
     """Truncate-toward-zero integer division, elementwise — the exact
-    semantics of the engines' shared ``_sdiv`` SQL helper (Spark DIV
-    truncates; DuckDB // floors; they differ on negatives)."""
+    semantics of ``functions/exact.py``'s ``sdiv_spark`` / ``sdiv_duck``
+    SQL helpers (Spark DIV truncates; DuckDB // floors; they differ on
+    negatives)."""
     num = np.asarray(num, dtype=np.int64)
     den = np.asarray(den, dtype=np.int64)
     q = np.empty_like(num)

@@ -53,10 +53,3 @@ def dot_unrolled(a: Column, b: Column, dims: int) -> Column:
     for d in range(1, dims + 1):
         out = out + F.element_at(a, d) * F.element_at(b, d)
     return out
-
-
-def norm_unrolled(a: Column, dims: int) -> Column:
-    out = F.lit(0.0)
-    for d in range(1, dims + 1):
-        out = out + F.element_at(a, d) * F.element_at(a, d)
-    return F.sqrt(out)

@@ -1,43 +1,43 @@
 """ANN index lifecycle: build once, persist, query many times
-(round-6 verdict item 2; SURVEY.md §2.B similarity family).
+(SURVEY.md §2.B similarity family).
 
 At 100 TB an ANN index is not retrained inside every query — the
 codebooks (PQ) and coarse-quantizer cell assignments (IVF) are trained
 in ONE offline job, persisted columnar, and every subsequent query
 reads the (tiny) codebook plus the (code-compressed) corpus codes.
-This module adds that split on top of the in-query training variants in
-``operators/similarity.py`` (kept for oracle parity and as the
-train+query composition):
+Every query here runs ``boltzmannclean_spark/ann.py``'s trainer and
+ADC scorer — the same code as the train-in-query variants in
+``operators/similarity.py`` — through its public ``build_ann_index`` /
+``ann_search`` instantiated with the fixture constants:
 
-- ``ensure_ann_index`` / ``sink_ann_index_build`` — train the PQ
-  per-block codebooks, corpus PQ codes, and IVF cell assignments
-  (exact-integer Lloyd, identical math to the in-query variants) and
-  persist them as parquet under a per-corpus artifact directory.
-  The build is idempotent (fingerprinted by corpus row count + index
-  config) and atomic (tmp dir + rename).
-- ``similarity_ann_pq_adc_prebuilt`` — the QUERY leg only: broadcast
-  the stored codebook, compute each query's ADC LUT, scan the stored
-  code table with an equi-join + sum, salted top-k. No training in the
-  plan; this is the shape that serves at 100 TB (codes are 8x smaller
-  than the raw float32 vectors at the r11 config — PQ_M=32 one-byte
-  codes per 64-dim vector; the scan never touches a float vector).
+- ``ensure_ann_index`` / ``sink_ann_index_build`` — build the PQ
+  per-block codebooks, corpus PQ codes, IVF centroids and cell
+  assignments and persist them as parquet under a per-corpus artifact
+  directory. The build is idempotent (fingerprinted by corpus row
+  count + index config + source files) and atomic (tmp dir + rename).
+- ``similarity_ann_pq_adc_prebuilt`` — the QUERY leg only: ADC top-k
+  over the stored codebook and code table. No training in the plan;
+  this is the shape that serves at 100 TB (codes are 8x smaller than
+  the raw float32 vectors at PQ_M=32 one-byte codes per 64-dim
+  vector; the scan never touches a float vector).
 - ``similarity_ann_ivfpq_prebuilt`` — the composed FAISS-style query:
   the stored IVF cell equi-join restricts the ADC scan to each query's
   cell before scoring.
+- ``similarity_ann_delta_assign`` — incremental update: ``ann``'s PQ
+  trainer on the initial corpus, its encoder over everything.
 
 Artifact layout (all exact integers, so parquet round-trips losslessly
 and results stay bit-identical to the DuckDB oracles, which re-derive
 the same training):
 
-    <dir>/codebook/   (b, cid, cvec array<long>)   PQ_M*PQ_K rows
-    <dir>/codes/      (vec_id, b, cid)             corpus * PQ_M rows
-    <dir>/cells/      (vec_id, cell)               corpus rows
-    <dir>/meta.json   {"n": corpus_rows, "conf": {...}}
+    <dir>/codebook/       (b, cid, cvec array<long>)   PQ_M*PQ_K rows
+    <dir>/codes/          (id, b, cid)                 corpus * PQ_M rows
+    <dir>/cells/          (id, cell)                   corpus rows
+    <dir>/ivf_centroids/  (cell, cvec array<long>)     cell-count rows
+    <dir>/meta.json       {"n": corpus_rows, "conf": {...}, "src_fp": ...}
 
-At cluster scale ``codes`` would be written partitioned/bucketed by
-``b`` (or cell) and the build would run as a scheduled job; here the
-artifact lands under the system temp dir keyed by the input path, so
-repeated queries in a session (and across sessions) reuse it.
+The artifact lands under the system temp dir keyed by the input path,
+so repeated queries in a session (and across sessions) reuse it.
 """
 
 from __future__ import annotations
@@ -51,28 +51,32 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from boltzmannclean_spark.ann import ann_search, build_ann_index, _int_dist
-from boltzmannclean_spark.functions.lloyd import assign_blocks
+from boltzmannclean_spark.ann import (
+    _int_dist,
+    _pq_assign,
+    _pq_train,
+    _quantize,
+    ann_search,
+    build_ann_index,
+)
 from boltzmannclean_spark.functions.topk import topk_per_key
 from boltzmannclean_spark.operators.similarity import (
     CENT_MOD,
     KMEANS_ITERS,
+    MICRO,
     N_QUERY,
     PQ_DSUB,
     PQ_ITERS,
     PQ_K,
     PQ_M,
     TOP_K,
-    _int_dist_unrolled,
+    _EMB_DIMS,
+    _ann_corpus,
     _ivfpq_oracle,
     _pq_codes_sql,
     _pq_iter_sql,
     _pq_lut_sql,
     _pq_oracle,
-    _pq_subvectors,
-    _pq_train,
-    _qvec,
-    MICRO,
 )
 from boltzmannclean_spark.plans.registry import register
 from boltzmannclean_spark.sources.catalog import load_table
@@ -83,7 +87,6 @@ from boltzmannclean_spark.sources.catalog import load_table
 # dict IS the validation fingerprint (meta.json "conf"); version bumps
 # force a rebuild on layout changes (v2 = ann.py layout: generic `id`
 # column + persisted ivf_centroids/).
-_EMB_DIMS = 64
 _INDEX_CONF = {
     "dims": _EMB_DIMS,
     "pq_m": PQ_M,
@@ -325,6 +328,35 @@ def similarity_ann_pq_adc_prebuilt(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+def _exact_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Recall ground truth: each query's exact integer-L2 top-TOP_K
+    (query_id, neighbor_id), self excluded — one corpus pass against
+    the broadcast query set, salted top-k."""
+    corpus = emb.select(
+        "vec_id", _quantize(F.col("embedding"), MICRO).alias("qvec")
+    )
+    qv = queries.select(
+        F.col("vec_id").alias("query_id"),
+        _quantize(F.col("embedding"), MICRO).alias("q_qvec"),
+    )
+    dists = (
+        corpus.crossJoin(F.broadcast(qv))
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            _int_dist(F.col("qvec"), F.col("q_qvec")).alias("dist"),
+        )
+    )
+    return topk_per_key(
+        dists,
+        keys=["query_id"],
+        order=[F.col("dist"), F.col("neighbor_id")],
+        k=TOP_K,
+        salt_col="neighbor_id",
+    ).select("query_id", "neighbor_id")
+
+
 RECALL_ORACLE = f"""{_BUILD_CTES},{_pq_codes_sql(_BUILD_FINAL)},{_pq_lut_sql(_BUILD_FINAL)},
 scored AS (
   SELECT l.query_id, c.vec_id AS neighbor_id,
@@ -399,27 +431,7 @@ def similarity_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_col="embedding",
         exclude_self=True,
     ).select("query_id", "neighbor_id")
-    corpus = emb.select("vec_id", _qvec(F.col("embedding")).alias("qvec"))
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        _qvec(F.col("embedding")).alias("q_qvec"),
-    )
-    dists = (
-        corpus.crossJoin(F.broadcast(qv))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _int_dist(F.col("qvec"), F.col("q_qvec")).alias("dist"),
-        )
-    )
-    exact = topk_per_key(
-        dists,
-        keys=["query_id"],
-        order=[F.col("dist"), F.col("neighbor_id")],
-        k=TOP_K,
-        salt_col="neighbor_id",
-    ).select("query_id", "neighbor_id")
+    exact = _exact_topk(emb, queries)
     return (
         exact.join(
             adc.withColumn("hit", F.lit(1)),
@@ -490,18 +502,18 @@ def similarity_ann_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     code) populations split into initial vs delta, proving the frozen
     assignment covers the appended vectors. The oracle re-derives the
     subset-trained codebook and the full assignment."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_all = emb.select(
-        "vec_id", _qvec(F.col("embedding")).alias("qvec")
-    ).localCheckpoint()
-    # Codebook trained on the INITIAL corpus only; the frozen-codebook
-    # delta encode is the same vectorized assignment pass as the build
-    # (functions/lloyd.py — r15, replacing the min_by fan-out agg).
-    cent = _pq_train(n_all.where(F.col("vec_id") % _DELTA_MOD != 0))
-    codes = assign_blocks(
-        n_all, cent, id_col="vec_id", vec_col="qvec",
-        dims=PQ_M * PQ_DSUB, n_blocks=PQ_M,
+    n_all = _ann_corpus(spark, sf_dir)
+    # Codebook trained on the INITIAL corpus only (seeds: its ids below
+    # PQ_K); the delta is absorbed by the frozen-codebook encode alone.
+    initial = n_all.where(F.col("id") % _DELTA_MOD != 0)
+    cent = _pq_train(
+        initial,
+        pq_m=PQ_M,
+        pq_iters=PQ_ITERS,
+        pq_dsub=PQ_DSUB,
+        seeds=initial.where(F.col("id") < PQ_K).select("id"),
     )
+    codes = _pq_assign(n_all, cent, pq_m=PQ_M, pq_dsub=PQ_DSUB)
     return (
         codes.groupBy(
             F.col("b").cast("long").alias("b"),
@@ -510,7 +522,7 @@ def similarity_ann_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.sum(
-                F.when(F.col("vec_id") % _DELTA_MOD == 0, 1).otherwise(0)
+                F.when(F.col("id") % _DELTA_MOD == 0, 1).otherwise(0)
             ).cast("long").alias("n_delta"),
         )
         .orderBy("b", "cid")
@@ -709,27 +721,7 @@ def similarity_ann_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFra
     adc = legs[0]
     for leg in legs[1:]:
         adc = adc.unionByName(leg)
-    corpus = emb.select("vec_id", _qvec(F.col("embedding")).alias("qvec"))
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        _qvec(F.col("embedding")).alias("q_qvec"),
-    )
-    dists = (
-        corpus.crossJoin(F.broadcast(qv))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _int_dist(F.col("qvec"), F.col("q_qvec")).alias("dist"),
-        )
-    )
-    exact = topk_per_key(
-        dists,
-        keys=["query_id"],
-        order=[F.col("dist"), F.col("neighbor_id")],
-        k=TOP_K,
-        salt_col="neighbor_id",
-    ).select("query_id", "neighbor_id")
+    exact = _exact_topk(emb, queries)
     exact_x = exact.select(
         "query_id",
         "neighbor_id",

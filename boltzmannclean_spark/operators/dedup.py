@@ -414,7 +414,6 @@ def _cosine_dup_plan(
     rows: int,
     threshold: float,
     sample_cap: int | None = None,
-    vectorized_verify: bool = False,
     dims: int = 64,
 ) -> DataFrame:
     """Shared banded-LSH near-dup kernel; see the registered wrappers
@@ -464,44 +463,14 @@ def _cosine_dup_plan(
     # Candidate side is usually small; no forced broadcast (AQE decides —
     # a high-duplication corpus can make cand ~ corpus-sized).
     #
-    # r15: TWO verify paths, routed by the registered wrapper's known
-    # candidate geometry (guide §1.2 — the algorithm choice follows
-    # the measured volume):
-    # - vectorized_verify=True (demo, 3-bit bands, ~35% of pairs
-    #   admitted — 1.3M candidates at sf0.1): one NumPy mapInArrow
-    #   pass. The 64-term element_at chain measured ~8 µs per pair
-    #   (83M accesses = 10.7 s of 13.3), and the threshold filter
-    #   pushed a SECOND copy into the verify join's condition.
-    #   Exactness: the fold accumulates dimension-by-dimension across
-    #   the batch (s = (s + ea_j*eb_j) in order) — per row exactly the
-    #   0.0-seeded sequential left fold of dot_unrolled, identical
-    #   IEEE order, no pairwise/FMA reassociation; pinned by a
-    #   float.hex parity test. The opaque boundary also makes filter
-    #   pushdown impossible.
-    # - vectorized_verify=False: the JVM expression with the rand()*0
-    #   barrier (guarantees ONE dot evaluation; +0.0 is bit-exact: the
-    #   0.0-seeded fold can never produce -0.0). r15 routed the
-    #   production wrapper here off a ×1.57 regression measured on the
-    #   contaminated round-close window; the r16 quiet re-measure put
-    #   the NumPy pass equal-or-faster at sf0.1 AND ×3.9 at the ×10
-    #   replica, so BOTH registered wrappers now pass True and this
-    #   path remains for callers with genuinely tiny candidate sets.
-    if not vectorized_verify:
-        from boltzmannclean_spark.functions.vectors import dot_unrolled
-
-        cosine = (
-            dot_unrolled(F.col("ea"), F.col("eb"), dims)
-            / (F.col("na") * F.col("nb"))
-            + F.rand(seed=0) * 0
-        )
-        return (
-            cand.join(na, "vec_a")
-            .join(nb, "vec_b")
-            .select("vec_a", "vec_b", cosine.alias("cosine"))
-            .where(F.col("cosine") >= threshold)
-            .orderBy("vec_a", "vec_b")
-        )
-
+    # Verification is one NumPy mapInArrow pass: a 64-term element_at
+    # chain measured ~8 µs per pair, and a JVM threshold filter would be
+    # pushed as a SECOND dot evaluation into the verify join's
+    # condition. The opaque Arrow boundary makes that pushdown
+    # impossible. Exactness: the fold accumulates dimension-by-dimension
+    # across the batch (s = (s + ea_j*eb_j) in order) — per row exactly
+    # the 0.0-seeded sequential left fold of dot_unrolled, identical
+    # IEEE order, no pairwise/FMA reassociation.
     import numpy as np
     import pyarrow as pa
 
@@ -652,22 +621,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     still fully exercised; a clean corpus with no near-dups is the
     common production case, and an engine must prove pairs ABSENT as
     cheaply as it finds them present."""
-    # r16: production now ALSO takes the vectorized verify. The r15
-    # volume routing (JVM expression for the ~1.6k-candidate production
-    # parameterization) was justified by a ×1.57 regression measured on
-    # the contaminated round-close window; re-measured quiet this round
-    # the NumPy pass is equal-or-faster even at sf0.1 (1.75 vs
-    # 1.91–2.48 s) and ×3.9 at the 6M-row ×10 replica (2.5 vs 9.4 s),
-    # where verbatim copy-groups make the candidate/output volume real
-    # (90k verified pairs). Exactness unchanged — both paths are pinned
-    # bit-identical by the float.hex parity test.
     return _cosine_dup_plan(
         spark,
         sf_dir,
         DUP_BANDS,
         DUP_ROWS,
         COSINE_DUP_THRESHOLD,
-        vectorized_verify=True,
     )
 
 
@@ -698,7 +657,6 @@ def dedup_embedding_cosine_recall_demo(
         DEMO_ROWS,
         DEMO_COSINE_THRESHOLD,
         sample_cap=DEMO_SAMPLE_CAP,
-        vectorized_verify=True,
     )
 
 

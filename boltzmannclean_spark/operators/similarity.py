@@ -9,6 +9,12 @@ corpus per query to matching sign-buckets first, trading recall for a
 candidate set ~bucket_fraction of the corpus; recall is asserted in
 tests/test_similarity.py. At 100 TB the same two plans hold — the
 broadcast side is the query set either way.
+
+The IVF / PQ / IVF×PQ queries are fixture instantiations of
+``boltzmannclean_spark/ann.py``: their Lloyd training, encoding and ADC
+top-k scoring are ``ann``'s trainer and scorer, called in memory. This
+module owns only their fixture constants and the DuckDB oracle SQL
+that re-derives the same exact-integer result.
 """
 
 from __future__ import annotations
@@ -16,14 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from boltzmannclean_spark.ann import _adc_topk, _ivf_train, _quantize, _train
 from boltzmannclean_spark.functions.topk import topk_per_key
-from boltzmannclean_spark.functions.vectors import (
-    as_double,
-    cosine,
-    dot,
-    dot_unrolled,
-    norm,
-)
+from boltzmannclean_spark.functions.vectors import as_double, dot_unrolled, norm
 from boltzmannclean_spark.plans.registry import register
 from boltzmannclean_spark.sources.catalog import load_table
 
@@ -43,23 +44,10 @@ N_PLANES = 4  # 16 sign buckets
 MICRO = 1_000_000
 
 
-def _qvec(col):
-    """array<float> -> array<long> micro-unit quantization."""
-    return F.transform(col, lambda x: F.round(x.cast("double") * MICRO, 0).cast("long"))
-
-
 # Sign-safe integer division (shared definition: functions/exact.py).
 from boltzmannclean_spark.functions.exact import (  # noqa: E402
     sdiv_duck as _sdiv_duck,
     sdiv_spark as _sdiv_spark,
-)
-
-# Vectorized Lloyd trainer/encoder (r15 optimization; see
-# functions/lloyd.py for the exactness contract that keeps the DuckDB
-# oracles hash-identical).
-from boltzmannclean_spark.functions.lloyd import (  # noqa: E402
-    assign_blocks,
-    train_blocks,
 )
 
 
@@ -249,6 +237,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroid id), update by sign-safe TRUNCATED integer mean — so both
 # engines iterate bit-identically and the final cells are oracle-exact.
 # A query then scans only its own cell (nprobe=1) with exact cosine.
+# The Spark side is ann._ivf_train; the SQL below is the oracle.
 CENT_MOD = 100
 KMEANS_ITERS = 4
 
@@ -414,71 +403,21 @@ def _assign_cells(n: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _int_dist(a, b):
-    """Exact squared-L2 between two array<long> micro-unit vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _int_dist_unrolled(a, b, dims: int):
-    """Exact squared-L2 as a fixed sum of ``dims`` element terms —
-    identical result to ``_int_dist`` (integer adds commute), but plain
-    whole-stage-codegen arithmetic instead of per-row higher-order
-    lambda evaluation. Use for SMALL fixed dims in hot inner loops
-    (the PQ sub-vector distance is evaluated corpus × PQ_K times per
-    Lloyd round; the HOF form was the measured bottleneck)."""
-    terms = [
-        (F.element_at(a, d) - F.element_at(b, d))
-        * (F.element_at(a, d) - F.element_at(b, d))
-        for d in range(1, dims + 1)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def _kmeans_cells(n: DataFrame) -> DataFrame:
-    """Train the IVF coarse quantizer and return final cell assignments.
-
-    KMEANS_ITERS rounds of Lloyd's algorithm entirely in exact integer
-    micro-units, via the shared vectorized trainer (functions/lloyd.py,
-    r15: one NumPy mapInArrow pass + codebook-sized partial sums per
-    round — the round-11 min_by fan-out aggregation was the measured
-    per-round cost center). Assignment ties break to the smallest cid
-    and the update is truncate-toward-zero integer division, so the
-    final centroids stay bit-identical to the round-11 dataflow and the
-    DuckDB oracle. Empty cells drop out of the update deterministically
-    in both engines. The final full-corpus assignment is the SAME NumPy
-    encoder the trainer uses (assign_blocks: one mapInArrow pass,
-    first-occurrence argmin over cid-sorted centroids == the former
-    min_by(cid, struct(dist, cid)) tie-break, test-pinned), joined back
-    to the corpus by the unique vec_id. The former JVM broadcast
-    fan-out reduced through a grouped min_by whose GROUP KEY was the
-    64-double embedding array — an ObjectHashAggregate that measured
-    1.4 s warm at sf0.1 vs 0.45 s for the encoder+join (bit-identical
-    assignments, checked in-session)."""
-    dims = 64
-    cent = train_blocks(
-        n.select("vec_id", "qvec"),
-        n.where(F.col("vec_id") % CENT_MOD == 0).select("vec_id"),
-        id_col="vec_id",
-        vec_col="qvec",
-        dims=dims,
-        n_blocks=1,
-        iters=KMEANS_ITERS,
+    """Train the IVF coarse quantizer and return final cell assignments:
+    ``ann._ivf_train`` over (vec_id, qvec) seeded by the vec_ids
+    divisible by CENT_MOD, KMEANS_ITERS exact-integer Lloyd rounds
+    (ties to the smallest cid, truncate-toward-zero update — the DuckDB
+    oracle's derivation). The assignment is joined back to the corpus
+    by the unique vec_id."""
+    q = n.select(F.col("vec_id").alias("id"), "qvec")
+    _, asg = _ivf_train(
+        q,
+        dims=_EMB_DIMS,
+        kmeans_iters=KMEANS_ITERS,
+        seeds=q.where(F.col("id") % CENT_MOD == 0).select("id"),
     )
-    asg = assign_blocks(
-        n.select("vec_id", "qvec"),
-        cent,
-        id_col="vec_id",
-        vec_col="qvec",
-        dims=dims,
-        n_blocks=1,
-    ).select("vec_id", "cid")
+    asg = asg.select(F.col("id").alias("vec_id"), F.col("cell").alias("cid"))
     return n.join(asg, "vec_id").select("vec_id", "label", "e", "nrm", "cid")
 
 
@@ -499,7 +438,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         as_double("embedding").alias("e"),
-        _qvec(F.col("embedding")).alias("qvec"),
+        _quantize(F.col("embedding"), MICRO).alias("qvec"),
     ).withColumn("nrm", norm(F.col("e")))
     cells = _kmeans_cells(n)
     q = cells.where(F.col("vec_id") < N_QUERY).select(
@@ -680,7 +619,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum per (label, dim) per partition — constant in corpus size. The
     flat layout is what a feature store would join against."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select("label", F.posexplode(_qvec(F.col("embedding"))).alias("dim", "qx"))
+    q = emb.select("label", F.posexplode(_quantize(F.col("embedding"), MICRO)).alias("dim", "qx"))
     return (
         q.groupBy("label", "dim")
         .agg(
@@ -734,7 +673,7 @@ def embedding_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the integer distance makes it reproducible across engines and
     partitionings."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select("vec_id", "label", _qvec(F.col("embedding")).alias("qvec"))
+    q = emb.select("vec_id", "label", _quantize(F.col("embedding"), MICRO).alias("qvec"))
     qx = q.select("label", F.posexplode("qvec").alias("d", "qx"))
     cent = qx.groupBy("label", "d").agg(
         F.round(F.sum("qx").cast("double") / F.count(F.lit(1)), 0)
@@ -873,7 +812,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     iterations are bit-identical in any engine at any parallelism."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.select(
-        "vec_id", F.posexplode(_qvec(F.col("embedding"))).alias("d", "qx")
+        "vec_id", F.posexplode(_quantize(F.col("embedding"), MICRO)).alias("d", "qx")
     )
     a, b = q.alias("a"), q.alias("b")
     g = (
@@ -951,7 +890,7 @@ def impute_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-unit distances make neighbor choice and the imputed value
     bit-deterministic; abs_err_micro reports reconstruction quality."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select("vec_id", _qvec(F.col("embedding")).alias("qvec"))
+    q = emb.select("vec_id", _quantize(F.col("embedding"), MICRO).alias("qvec"))
     masked = q.where(F.col("vec_id") % MASK_MOD == 0).select(
         F.col("vec_id").alias("m_id"), F.col("qvec").alias("m_vec")
     )
@@ -1134,6 +1073,8 @@ def similarity_ann_brp_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 # coarse centroids capture almost no variance. The residual option
 # ships in ann.py (build_ann_index(residual=True)) as the scale path
 # for clustered real-world corpora; see SCALING.md round-11.
+# The Spark side of every PQ query is ann._train + ann._adc_topk (the
+# code behind build_ann_index / ann_search); the SQL below is the oracle.
 PQ_M = 32
 PQ_DSUB = 2
 PQ_K = 256
@@ -1265,42 +1206,16 @@ ORDER BY query_id, rk
 """
 
 
-def _pq_subvectors(n: DataFrame) -> DataFrame:
-    """(vec_id, qvec) -> one row per (vec_id, block) with the block's
-    PQ_DSUB-dim integer sub-vector. A row-local explode — no shuffle."""
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("b"),
-                F.slice("qvec", b * PQ_DSUB + 1, PQ_DSUB).alias("qsub"),
-            )
-            for b in range(PQ_M)
-        ]
-    )
-    return n.select("vec_id", F.explode(subs).alias("s")).select(
-        "vec_id", F.col("s.b").alias("b"), F.col("s.qsub").alias("qsub")
-    )
-
-
-def _pq_train(nvec: DataFrame) -> DataFrame:
-    """Per-block codebooks via PQ_ITERS Lloyd rounds in exact integer
-    micro-units over ``nvec = (vec_id, qvec)``, via the shared
-    vectorized trainer (functions/lloyd.py, r15: the round-11 min_by
-    fan-out aggregation measured 4-7 s PER round at sf0.1 on the
-    ObjectHashAggregate path; the NumPy pass replaces it at identical
-    exact-integer semantics). Seeds are the first PQ_K vectors, ties
-    break to the smallest cid, the update is truncate-toward-zero
-    division — bit-identical to the DuckDB oracle's derivation.
-    Returns (b, cid, cvec array<long>), codebook-sized."""
-    return train_blocks(
-        nvec,
-        nvec.where(F.col("vec_id") < PQ_K).select("vec_id"),
-        id_col="vec_id",
-        vec_col="qvec",
-        dims=PQ_M * PQ_DSUB,
-        n_blocks=PQ_M,
-        iters=PQ_ITERS,
-    )
+def _ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fixture embeddings as ``ann.py``'s quantized (id, qvec)
+    frame, checkpointed once: it feeds every Lloyd round and the encode
+    passes, which would otherwise each re-scan and re-quantize the
+    source."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.select(
+        F.col("vec_id").alias("id"),
+        _quantize(F.col("embedding"), MICRO).alias("qvec"),
+    ).localCheckpoint()
 
 
 @register(
@@ -1322,50 +1237,25 @@ def similarity_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (restrict the scan to probed cells) without changing shape. Every
     distance is an exact integer sum, so codebooks, codes, LUT, and
     ADC totals are all bit-identical to the DuckDB oracle."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # localCheckpoint once: the quantized corpus feeds PQ_ITERS training
-    # passes plus the encode pass — checkpointing the (vec_id, qvec)
-    # frame (32× narrower than the old per-block explode) stops each
-    # pass re-scanning + re-quantizing the source.
-    n = emb.select(
-        "vec_id", _qvec(F.col("embedding")).alias("qvec")
-    ).localCheckpoint()
-    # Training materializes the codebook driver-side (codebook-sized;
-    # functions/lloyd.py), so the codes and LUT branches below share it
-    # with no cache() and no re-run.
-    cent = _pq_train(n)
-    codes = assign_blocks(
-        n, cent, id_col="vec_id", vec_col="qvec",
-        dims=PQ_M * PQ_DSUB, n_blocks=PQ_M,
+    n = _ann_corpus(spark, sf_dir)
+    codebook, codes, _, _ = _train(
+        n,
+        dims=_EMB_DIMS,
+        pq_m=PQ_M,
+        pq_iters=PQ_ITERS,
+        pq_seeds=n.where(F.col("id") < PQ_K).select("id"),
     )
-    # LUT: filter to the N_QUERY query vectors BEFORE the codebook
-    # fan-out (r15 — the old shape fanned the whole corpus out and then
-    # filtered, a full extra corpus×PQ_K pass for 5 queries' rows).
-    lut = (
-        _pq_subvectors(n.where(F.col("vec_id") < N_QUERY))
-        .join(F.broadcast(cent), "b")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "b",
-            "cid",
-            _int_dist_unrolled(F.col("qsub"), F.col("cvec"), PQ_DSUB).alias(
-                "pdist"
-            ),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["b", "cid"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdist").alias("adc_dist"))
-    )
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.col("adc_dist"), F.col("neighbor_id")],
+    return _adc_topk(
+        n.where(F.col("id") < N_QUERY),
+        codebook,
+        codes,
+        None,
+        None,
+        pq_m=PQ_M,
+        pq_dsub=PQ_DSUB,
+        pq_k=PQ_K,
         k=TOP_K,
-        salt_col="neighbor_id",
-    ).orderBy("query_id", "rk")
+    )
 
 
 def _ivfpq_oracle() -> str:
@@ -1432,92 +1322,38 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunings multiply: scan cost drops by the cell factor AND each
     candidate costs a LUT lookup-sum instead of a 64-dim dot product,
     which is why a billion-vector store fits and answers. Spark shape:
-    both quantizer trainings are the standalone operators' plans
-    (broadcast codebooks, map-side argmin, constant-size shuffles);
-    the scan is codes ⋈ broadcast LUT with the cell equi-join as the
-    candidate filter. Everything is exact integer arithmetic end to
-    end, so the composed pipeline stays bit-identical to the oracle's
+    ``ann._train`` trains both quantizers (on two driver threads — raw
+    codebooks share no state) and ``ann._adc_topk`` scans codes ⋈
+    broadcast LUT with the probed-cell equi-join as the candidate
+    filter. Everything is exact integer arithmetic end to end, so the
+    composed pipeline stays bit-identical to the oracle's
     doubly-unrolled derivation."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Checkpoint the quantized corpus once; the IVF and PQ trainings +
-    # both encode passes stream it instead of re-scanning (see
-    # similarity_ann_pq_adc).
-    n = emb.select(
-        "vec_id", _qvec(F.col("embedding")).alias("qvec")
-    ).localCheckpoint()
-    # IVF cells straight from the vectorized trainer/encoder (r15):
-    # this query only needs (vec_id, cell) — the former _kmeans_cells
-    # call dragged label/e/nrm arrays through the assignment
-    # aggregation just to drop them. Cache: the cell table feeds TWO
-    # join branches below (corpus cells + query cells).
-    # r16 (guide §2.6 — overlap independent jobs, same move as
-    # ann.build_ann_index): the IVF and PQ trainings both stream the
-    # checkpointed n and share no state (raw codebooks here — the
-    # fixture oracle re-derives raw), and each training is a sequence
-    # of eager per-round jobs with driver-side updates between them,
-    # so running them from two driver threads lets each one's jobs
-    # back-fill the other's collect gaps. Per-thread dataflows are
-    # unchanged — results bit-identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_ivf = pool.submit(
-            train_blocks,
-            n,
-            n.where(F.col("vec_id") % CENT_MOD == 0).select("vec_id"),
-            id_col="vec_id",
-            vec_col="qvec",
-            dims=PQ_M * PQ_DSUB,
-            n_blocks=1,
-            iters=KMEANS_ITERS,
-        )
-        fut_pq = pool.submit(_pq_train, n)
-        ivf_cent = fut_ivf.result()
-        cent = fut_pq.result()
-    cells = assign_blocks(
-        n, ivf_cent, id_col="vec_id", vec_col="qvec",
-        dims=PQ_M * PQ_DSUB, n_blocks=1,
-    ).select("vec_id", F.col("cid").alias("cell")).cache()
-    codes = assign_blocks(
-        n, cent, id_col="vec_id", vec_col="qvec",
-        dims=PQ_M * PQ_DSUB, n_blocks=PQ_M,
+    n = _ann_corpus(spark, sf_dir)
+    codebook, codes, ivf_cent, cells = _train(
+        n,
+        dims=_EMB_DIMS,
+        pq_m=PQ_M,
+        pq_iters=PQ_ITERS,
+        pq_seeds=n.where(F.col("id") < PQ_K).select("id"),
+        cell_seeds=n.where(F.col("id") % CENT_MOD == 0).select("id"),
+        kmeans_iters=KMEANS_ITERS,
     )
-    # Query-filtered LUT (r15): fan out only the N_QUERY query vectors
-    # against the codebook, never the whole corpus.
-    lut = (
-        _pq_subvectors(n.where(F.col("vec_id") < N_QUERY))
-        .join(F.broadcast(cent), "b")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "b",
-            "cid",
-            _int_dist_unrolled(F.col("qsub"), F.col("cvec"), PQ_DSUB).alias(
-                "pdist"
-            ),
-        )
-    )
-    qcells = cells.where(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("qc_query"), F.col("cell").alias("qcell")
-    )
-    scored = (
-        codes.join(cells, "vec_id")
-        .join(F.broadcast(lut), ["b", "cid"])
-        .join(
-            F.broadcast(qcells),
-            (F.col("cell") == F.col("qcell"))
-            & (F.col("query_id") == F.col("qc_query"))
-            & (F.col("vec_id") != F.col("qc_query")),
-        )
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdist").alias("adc_dist"))
-    )
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.col("adc_dist"), F.col("neighbor_id")],
+    # nprobe=1: a query's nearest cell is, by construction, the cell the
+    # trainer assigned it (same argmin over the same final centroids,
+    # same smallest-cell tie-break), so this is the oracle's "scan the
+    # query's own cell".
+    return _adc_topk(
+        n.where(F.col("id") < N_QUERY),
+        codebook,
+        codes,
+        ivf_cent,
+        cells,
+        pq_m=PQ_M,
+        pq_dsub=PQ_DSUB,
+        pq_k=PQ_K,
         k=TOP_K,
-        salt_col="neighbor_id",
-    ).orderBy("query_id", "rk")
+        nprobe=1,
+    )
 
 
 @register(

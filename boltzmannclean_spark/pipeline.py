@@ -31,7 +31,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from boltzmannclean_spark.ann import ann_search, build_ann_index
+from boltzmannclean_spark.ann import _quantize, ann_search, build_ann_index
 from boltzmannclean_spark.functions.combos import packed_combo_counts
 from boltzmannclean_spark.functions.exact import dec
 from boltzmannclean_spark.functions.topk import topk_per_key
@@ -297,16 +297,13 @@ def semantic_dedup(
     id matches at cosine >= ``theta`` (production: ~0.95 on real
     embeddings). Returns (id, cell, removed, best_dup_cos) for every
     doc in at least one semantic-dup pair."""
-    from boltzmannclean_spark.operators.similarity import (
-        _kmeans_cells,
-        _qvec,
-    )
+    from boltzmannclean_spark.operators.similarity import MICRO, _kmeans_cells
 
     n_full = emb.select(
         F.col(id_col).alias("vec_id"),
         F.lit("x").alias("label"),
         as_double(vec_col).alias("e"),
-        _qvec(F.col(vec_col)).alias("qvec"),
+        _quantize(F.col(vec_col), MICRO).alias("qvec"),
     ).withColumn("nrm", norm(F.col("e")))
     # localCheckpoint, not cache(): the cell assignment feeds three
     # consumers (both pair sides + the final cell lookup) and must not

@@ -97,8 +97,3 @@ def lint_plan(df: DataFrame, shuffle_budget: int = 6) -> list[Finding]:
             )
         )
     return findings
-
-
-def lint_errors(df: DataFrame) -> list[Finding]:
-    """Only the findings that should fail a CI gate."""
-    return [f for f in lint_plan(df) if f.severity == "error"]

@@ -43,6 +43,9 @@ SKEW_CONFS = {
     # to split, so AQE skew handling would never be exercised.
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    # The session sizes shuffles by core count; the skew thresholds above
+    # were set against 32 shuffle partitions, so pin that on any host.
+    "spark.sql.shuffle.partitions": "32",
 }
 
 

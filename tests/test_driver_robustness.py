@@ -119,3 +119,29 @@ def test_subset_emit_cannot_clobber_canonical_artifact(tmp_path):
     assert out == str(fresh) + ".subset.json"
     assert not fresh.exists()
     assert set(json.loads((tmp_path / "LOCAL_CORRECTNESS_r100.json.subset.json").read_text())) == {"q_a"}
+
+
+def test_verify_first_has_no_duplicates():
+    """A repeated name cannot move a query (the first occurrence fixes
+    its slot), so a duplicate only misstates the rotation's length."""
+    from boltzmannclean_spark.plans import registry
+
+    seen, dupes = set(), []
+    for name in registry._VERIFY_FIRST:
+        if name in seen:
+            dupes.append(name)
+        seen.add(name)
+    assert not dupes, dupes
+
+
+def test_missing_operator_module_fails_loudly(monkeypatch):
+    """A broken operator module must surface, not shrink the registry."""
+    from boltzmannclean_spark.plans import registry
+
+    monkeypatch.setattr(
+        registry,
+        "_OPERATOR_MODULES",
+        registry._OPERATOR_MODULES + ("boltzmannclean_spark.operators._missing",),
+    )
+    with pytest.raises(ModuleNotFoundError):
+        registry.all_queries()

@@ -8,12 +8,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from boltzmannclean_spark.ann import _quantize
 from boltzmannclean_spark.operators.similarity import (
     _EMB_DIMS,
     KNN_K,
     MASK_MOD,
+    MICRO,
     impute_knn_embedding,
-    _qvec,
 )
 from boltzmannclean_spark.functions.topk import topk_per_key
 from boltzmannclean_spark.sources.catalog import load_table
@@ -23,7 +24,7 @@ def _reference_rows(spark, sf_dir):
     """The r15 JVM formulation, verbatim: BroadcastNestedLoopJoin
     cross + unrolled per-dimension squared difference."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select("vec_id", _qvec(F.col("embedding")).alias("qvec"))
+    q = emb.select("vec_id", _quantize(F.col("embedding"), MICRO).alias("qvec"))
     masked = q.where(F.col("vec_id") % MASK_MOD == 0).select(
         F.col("vec_id").alias("m_id"), F.col("qvec").alias("m_vec")
     )

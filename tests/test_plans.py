@@ -597,7 +597,7 @@ def test_substring_shingle_table_shares_one_exchange(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
     assert plan.count("FileScan parquet") <= 2, plan
-    assert plan.count(") Generate") <= 2 or plan.count("Generate") <= 2, plan
+    assert plan.count("Generate") <= 2, plan
     assert "ReusedExchange" in plan, plan
 
 
