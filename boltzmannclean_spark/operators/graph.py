@@ -1,34 +1,51 @@
-"""Graph algorithms over relational edge lists: PageRank by power
-iteration on the customer↔supplier bipartite graph induced by orders.
+"""Graph algorithms over three graphs derived from the star schema.
 
-Scale design: each iteration is the canonical distributed PageRank
-shape — join ranks to edges on src, aggregate contributions on dst.
-The rank vector is NODE-count sized, which means it GROWS with the
-data: it is never broadcast (a billion-node graph would OOM every
-executor). The rank⋈edges join is a shuffle join on src — the rank
-side re-shuffles each iteration (node-count rows, the small side of
-the join), while the edge side is cached and AQE may co-locate or
-locally read it; the dst aggregation is the second, map-side-combined
-shuffle. Two narrow-key shuffles per iteration, both sized by the
-graph itself — the shape that survives 100× (per SCALING.md's
-iterative-family contract: anything that grows with data volume is
-left to AQE, never forced broadcast). Node ids are
-LONGS (customers even, suppliers odd), not strings — long hash/compare
-keeps the shuffle narrow; the 'c:'/'s:' labels are rendered only on
-the top-25 output. The edge list is cached across iterations (reused
-3×; recomputing the orders⋈lineitem join each pass would triple the
-scan cost).
+Every operator starts from one private builder per graph:
 
-Cross-engine determinism: ranks live in integer micro-units (node
-budget 1e9). Per-edge contribution is rank div degree (integer
-division), the damping mix is (15·init + 85·Σcontrib) div 100 — all
-integer arithmetic, so every iteration is bit-identical in any engine
-at any parallelism; no floating-point merge-order noise ever enters.
+- Customer↔supplier (an order links its customer to the suppliers of
+  its line items). ``_cust_supp_pairs`` is the distinct
+  (o_custkey, l_suppkey) pair set (degree distribution, HITS);
+  ``_cust_supp_edges`` turns it into the cached (src, dst, d) edge
+  list, both directions, with the source degree riding on each edge
+  (PageRank, personalized PageRank, Katz, BFS, label propagation,
+  harmonic centrality, both HyperBall queries). Node ids there are
+  LONGS, customers 2·custkey and suppliers 2·suppkey+1: long keys hash
+  and compare far cheaper than 'c:123' strings in every shuffle, and
+  ``_node_label`` renders the 'c:'/'s:' labels on output rows only.
+- Part co-purchase (parts adjacent when they share an order).
+  ``_copurchase`` returns the checkpointed (p1 < p2) pairs at a support
+  floor, their degrees, and the adjacency capped at midpoint degree
+  ``_AA_CAP`` (triangle count, the three link-prediction queries,
+  clustering coefficient).
+- Supplier–part. ``_supp_part`` is the distinct (s, p) edge set
+  (k-core, bipartite projection, assortativity).
+
+``_hop`` is the one iteration step of PageRank, personalized PageRank,
+Katz, label propagation and both HITS half-steps: join the node-sized
+state to the edges on the source key, then aggregate at the
+destination (map-side combined). The state GROWS with the graph, so
+that join is a shuffle hash join and is never broadcast — a
+billion-node state would OOM every executor (SCALING.md's iterative
+contract: anything that grows with data volume is left to the
+shuffle). Each iteration is one pass over the cached edges plus two
+narrow-key shuffles, and the state is localCheckpoint'ed so lineage
+stays one iteration deep. The HyperBall queries share one register
+init (``_hb_registers``) and one groupBy-MAX merge hop (``_hb_merge``).
+
+Cross-engine determinism: iteration state is integer. Ranks live in
+micro-units (node budget 1e9), per-edge contribution is rank div
+degree, the damping mix is (15·init + 85·Σcontrib) div 100; labels and
+HLL registers are integers under order-free merges. Every iteration is
+bit-identical in any engine at any parallelism; no floating-point
+merge-order noise ever enters.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import math as _math
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from boltzmannclean_spark.functions.combos import packed_combo_counts
@@ -40,27 +57,38 @@ from boltzmannclean_spark.sources.catalog import load_table
 _PAIR_PACK = 1 << 31
 
 
-def _copurchase_pairs(li: DataFrame, *, min_support: int = 1) -> DataFrame:
-    """(p1, p2) co-purchase pairs with p1 < p2 and instance support ≥
-    ``min_support`` over the part co-purchase graph (parts adjacent
-    when they share an order; support = number of a<b row pairs).
+#: Wedge midpoint degree cap of the co-purchase queries: a midpoint of
+#: degree d emits C(d, 2) wedges, so hubs above the cap emit none.
+_AA_CAP = 40
 
-    r15: built from per-order SORTED partkey baskets through the
-    vectorized pair counter (functions/combos.py) — ONE shuffle (the
-    basket groupBy) plus native-code enumeration — instead of the
-    lineitem self-join on l_orderkey, which paid two scans, two
-    exchanges and a corpus-pair aggregation (measured 2.8 s alone at
-    sf0.1). The Σ basket² enumeration work is unchanged and bounded by
-    order size; equal-part index pairs surface as p1 == p2 keys and
-    are filtered, exactly matching the self-join's strict p1 < p2.
-    Counts are exact int64, so the support cut is bit-identical to the
-    oracles' HAVING COUNT(*)."""
+
+def _copurchase(
+    spark: SparkSession, sf_dir: str, *, min_support: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The part co-purchase graph (parts adjacent when they share an
+    order) at an instance-support floor (support = number of a<b row
+    pairs). Returns ``pairs`` (p1, p2) with p1 < p2, localCheckpoint'ed
+    (every consumer reads it more than once); ``deg`` (p, d), the full
+    degree of every part; and ``capped`` (m, nbr, d), the adjacency in
+    both directions restricted to midpoints m of degree d <= _AA_CAP —
+    the hub-suppressed wedge source. deg and capped are lazy.
+
+    Pairs come from per-order SORTED partkey baskets through the
+    vectorized pair counter (functions/combos.py): ONE shuffle (the
+    basket groupBy) plus native-code enumeration instead of a lineitem
+    self-join on l_orderkey (two scans, two exchanges and a corpus-pair
+    aggregation; 2.8 s alone at sf0.1). The Σ basket² enumeration is
+    bounded by order size; equal-part index pairs surface as p1 == p2
+    keys and are filtered, exactly matching the self-join's strict
+    p1 < p2. Counts are exact int64, so the support cut is
+    bit-identical to the oracles' HAVING COUNT(*)."""
+    li = load_table(spark, sf_dir, "lineitem")
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(
             F.collect_list(F.col("l_partkey").cast("long"))
         ).alias("items")
     )
-    return (
+    pairs = (
         packed_combo_counts(baskets, r=2, pack=_PAIR_PACK)
         .groupBy("tk")
         .agg(F.sum("cnt").alias("support"))
@@ -71,6 +99,83 @@ def _copurchase_pairs(li: DataFrame, *, min_support: int = 1) -> DataFrame:
         )
         .where((F.col("p1") != F.col("p2")) & (F.col("support") >= min_support))
         .select("p1", "p2")
+        .localCheckpoint()
+    )
+    deg = (
+        pairs.select(F.col("p1").alias("p"))
+        .unionAll(pairs.select(F.col("p2").alias("p")))
+        .groupBy("p")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    adj = pairs.select(F.col("p1").alias("m"), F.col("p2").alias("nbr")).unionAll(
+        pairs.select(F.col("p2").alias("m"), F.col("p1").alias("nbr"))
+    )
+    capped = adj.join(
+        deg.where(F.col("d") <= _AA_CAP).select(F.col("p").alias("m"), "d"), "m"
+    )
+    return pairs, deg, capped
+
+
+def _supp_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (s, p) supplier–part edges."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return li.select(
+        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
+    ).distinct()
+
+
+def _cust_supp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (o_custkey, l_suppkey) pairs: who bought from whom."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select("o_custkey", "l_suppkey")
+        .distinct()
+    )
+
+
+def _cust_supp_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached (src, dst, d) customer↔supplier edge list: every pair
+    in both directions over long node ids (customers 2·custkey,
+    suppliers 2·suppkey+1), with d = degree of src. Degree rides ON the
+    edges so the one structure every iteration scans is built with a
+    single extra shuffle and pinned once; every dst is also a src, so
+    no iteration leaks mass into a dangling node."""
+    eo = _cust_supp_pairs(spark, sf_dir)
+    c = F.col("o_custkey") * 2
+    s = F.col("l_suppkey") * 2 + 1
+    edges = eo.select(c.alias("src"), s.alias("dst")).unionAll(
+        eo.select(s.alias("src"), c.alias("dst"))
+    )
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    return edges.join(deg, "src").select("src", "dst", "d").cache()
+
+
+def _node_label(col: str) -> Column:
+    """'c:<custkey>' / 's:<suppkey>' label of a long node id."""
+    return F.expr(
+        f"CASE WHEN {col} % 2 = 0 THEN 'c:' || CAST({col} div 2 AS STRING)"
+        f" ELSE 's:' || CAST({col} div 2 AS STRING) END"
+    )
+
+
+def _hop(
+    edges: DataFrame,
+    state: DataFrame,
+    *aggs: Column,
+    src: str = "src",
+    dst: str = "dst",
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """One iteration step: ``state`` (keyed ``node``) joins ``edges`` on
+    ``edges[src]`` as a SHUFFLE hash join — the state is node-count
+    sized and is never broadcast — then ``aggs`` aggregate at
+    ``edges[dst]``, returned as ``node`` plus the ``by`` state columns."""
+    return (
+        edges.join(state.hint("shuffle_hash"), edges[src] == F.col("node"))
+        .groupBy(F.col(dst).alias("node"), *by)
+        .agg(*aggs)
     )
 
 
@@ -122,62 +227,25 @@ LIMIT {TOP_N}
 """
 
 
-def _pagerank_state(spark: SparkSession, sf_dir: str):
-    """Build the iteration state: cached (src, dst, src_degree) edge
-    list, uniform initial rank vector, 1-row node count. Shared by the
-    registered operator and the plan-gate / mass-conservation tests."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    eo = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    # Long node ids: customers even, suppliers odd. Long keys hash and
-    # compare far cheaper than 'c:123' strings in every shuffle below;
-    # labels are rendered only on the 25-row output.
-    fwd = eo.select(
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    rev = eo.select(
-        (F.col("l_suppkey") * 2 + 1).alias("src"),
-        (F.col("o_custkey") * 2).alias("dst"),
-    )
-    edges = fwd.unionAll(rev)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    # Degree rides ON the cached edge list: the one structure every
-    # iteration scans is (src, dst, src_degree), built with a single
-    # shuffle and pinned once. The per-iteration rank vector is
-    # localCheckpoint'ed so each iteration re-reads pinned partitions
-    # instead of re-running all prior iterations; only the 1-row node
-    # count is broadcast (truly constant-sized). Each iteration is one
-    # pass over cached edges + two narrow shuffles (rank to src, then
-    # contributions to dst, map-side combined).
-    ed = edges.join(deg, "src").select("src", "dst", "d").cache()
+def _pagerank_state(ed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """PageRank's initial state over the edge list: the uniform rank
+    vector and the 1-row node count (the only broadcast, being truly
+    constant-sized). The node set is localCheckpoint'ed so every
+    iteration re-reads pinned partitions."""
     nodes = ed.select("src").distinct().localCheckpoint()
     n = nodes.agg(F.count(F.lit(1)).alias("n_nodes")).localCheckpoint()
     r = nodes.crossJoin(F.broadcast(n)).select(
         F.col("src").alias("node"), F.expr(f"{RSCALE} div n_nodes").alias("r")
     )
-    return ed, r, n
+    return r, n
 
 
 def _pagerank_step(ed: DataFrame, r: DataFrame, n: DataFrame) -> DataFrame:
-    """One power-iteration step: rank⋈edges SHUFFLE join on src (the
-    rank vector is node-count sized — it grows with the graph and must
-    never be broadcast), then a map-side-combined aggregation to dst,
-    then the damping mix against the 1-row (and therefore broadcastable)
-    node count. Exposed as a helper so the plan gate in
-    tests/test_plans.py can assert the no-broadcast contract on the
-    exact iteration body the operator runs."""
-    contrib = (
-        ed.join(r.hint("shuffle_hash"), ed.src == F.col("node"))
-        .groupBy("dst")
-        .agg(F.sum(F.expr("r div d")).alias("contrib"))
-    )
+    """One power-iteration step: per-edge ``r div d`` summed at dst, then
+    the damping mix against the 1-row node count."""
+    contrib = _hop(ed, r, F.sum(F.expr("r div d")).alias("contrib"))
     return contrib.crossJoin(F.broadcast(n)).select(
-        F.col("dst").alias("node"),
+        "node",
         F.expr(
             f"(15 * ({RSCALE} div n_nodes) + 85 * contrib) div 100"
         ).alias("r"),
@@ -191,18 +259,13 @@ def _pagerank_step(ed: DataFrame, r: DataFrame, n: DataFrame) -> DataFrame:
 )
 def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration PageRank (damping 0.85) over the customer↔supplier
-    graph; returns the top-25 nodes by rank. See module docstring for
-    the integer-arithmetic determinism and per-iteration shuffle
-    design."""
-    ed, r, n = _pagerank_state(spark, sf_dir)
+    graph; returns the top-25 nodes by rank."""
+    ed = _cust_supp_edges(spark, sf_dir)
+    r, n = _pagerank_state(ed)
     for _ in range(N_ITER):
         r = _pagerank_step(ed, r, n).localCheckpoint()
     return (
-        r.selectExpr(
-            "CASE WHEN node % 2 = 0 THEN 'c:' || CAST(node div 2 AS STRING)"
-            " ELSE 's:' || CAST(node div 2 AS STRING) END AS node",
-            "r AS rank_micro",
-        )
+        r.select(_node_label("node").alias("node"), F.col("r").alias("rank_micro"))
         .orderBy(F.desc("rank_micro"), "node")
         .limit(TOP_N)
     )
@@ -236,13 +299,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy-tailed degree histogram predicts exactly which PageRank /
     join keys will skew). Two aggregations over the edge list; output
     size is bounded by max degree, so this stays tiny at any scale."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    eo = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
+    eo = _cust_supp_pairs(spark, sf_dir)
     nodes = eo.select(
         F.concat(F.lit("c:"), "o_custkey").alias("node")
     ).unionAll(eo.select(F.concat(F.lit("s:"), "l_suppkey").alias("node")))
@@ -315,14 +372,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     on hub parts. Pair building is Σ basket² (bounded by order size,
     as in join_basket_affinity). All joins are equi-joins; the only
     driver-free scalars ride the 1-row CROSS JOIN idiom."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = _copurchase_pairs(li).localCheckpoint()
-    deg = (
-        pairs.select(F.col("p1").alias("p"))
-        .unionAll(pairs.select(F.col("p2").alias("p")))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    pairs, deg, _ = _copurchase(spark, sf_dir, min_support=1)
     d1 = deg.select(F.col("p").alias("p1"), F.col("d").alias("da"))
     d2 = deg.select(F.col("p").alias("p2"), F.col("d").alias("db"))
     first_lower = (F.col("da") < F.col("db")) | (
@@ -419,12 +469,10 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the visited set, both keyed on node id — never a full
     transitive closure. The frontier is distributed (it can be
     graph-sized on small-world graphs — level 2 here already reaches
-    most nodes — so it is never broadcast, per the PageRank rule);
-    visited is localCheckpoint'ed per level so the lineage stays one
-    level deep. Levels are exact integers; the oracle's recursive CTE
+    most nodes); visited is localCheckpoint'ed per level so the lineage
+    stays one level deep. Levels are exact integers; the oracle's recursive CTE
     computes the identical min-level closure."""
-    ed, _, _ = _pagerank_state(spark, sf_dir)
-    edges = ed.select("src", "dst")
+    edges = _cust_supp_edges(spark, sf_dir).select("src", "dst")
     visited = (
         spark.range(1)
         .select(
@@ -445,11 +493,9 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         visited = visited.unionAll(new).localCheckpoint()
         frontier = visited.where(F.col("level") == lvl).select("node")
-    return visited.selectExpr(
-        "CASE WHEN node % 2 = 0 THEN 'c:' || CAST(node div 2 AS STRING)"
-        " ELSE 's:' || CAST(node div 2 AS STRING) END AS node",
-        "level",
-    ).orderBy("level", "node")
+    return visited.select(_node_label("node").alias("node"), "level").orderBy(
+        "level", "node"
+    )
 
 
 @register(
@@ -494,10 +540,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (the agg_corr_matrix recipe applied to graph structure).
     Nothing driver-side, nothing quadratic — degrees, not
     neighborhoods, cross the network."""
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    edges = _supp_part(spark, sf_dir)
     ds = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg_s"))
     dp = edges.groupBy("p").agg(F.count(F.lit(1)).alias("deg_p"))
     e = (
@@ -587,12 +630,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     each round's result localCheckpoint()ed so round r+1's lineage is
     one step, not r (the PageRank iteration discipline). At 100 TB
     rounds run until a fixpoint with the same per-round cost."""
-    from functools import reduce
-
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct().localCheckpoint()
+    edges = _supp_part(spark, sf_dir).localCheckpoint()
 
     def snap(r: int, e: DataFrame) -> DataFrame:
         # 1-row aggregation per round — the profile is assembled as a
@@ -659,10 +697,7 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree distribution. One distinct + one capped equi-self-join +
     one pair aggregation; top-{PROJ_TOP} via a ranking window over the
     PAIR table (never the corpus)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    e = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    e = _supp_part(spark, sf_dir)
     ok = (
         e.groupBy("p")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -678,8 +713,6 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_a", "supp_b")
         .agg(F.count(F.lit(1)).alias("shared_parts"))
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.desc("shared_parts"), "supp_a", "supp_b")
     return (
         pairs.withColumn("rk", F.row_number().over(w))
@@ -732,27 +765,6 @@ ORDER BY community, node
 """
 
 
-def _labelprop_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous LP round: label⋈edges SHUFFLE join on src (the
-    label vector is node-count sized — it grows with the graph and must
-    never be broadcast, the PageRank rule), map-side-combined
-    (node, lbl) counts, then the per-node plurality argmax with
-    smallest-label ties via max_by over (count, -lbl). Exposed so the
-    plan gate in tests/test_plans.py asserts the no-broadcast contract
-    on the exact iteration body the operator runs (the registered plan
-    itself ends at a localCheckpoint scan)."""
-    nl = (
-        edges.join(labels.hint("shuffle_hash"), labels.node == edges.src)
-        .groupBy(F.col("dst").alias("n"), "lbl")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return nl.groupBy(F.col("n").alias("node")).agg(
-        F.max_by(
-            "lbl", F.struct(F.col("c"), (-F.col("lbl")).alias("t"))
-        ).alias("lbl")
-    )
-
-
 @register(
     "graph_label_propagation",
     oracle=_labelprop_oracle(),
@@ -769,15 +781,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer state, so every engine and parallelism agrees bit-for-bit
     (the async/random-order variant of LP is explicitly NOT portable).
 
-    Scale shape per iteration: label⋈edges equi-join on src (label
-    vector is node-count sized — shuffled, never broadcast, the
-    PageRank rule), a (dst, lbl) count aggregation (map-side combined;
-    state per node bounded by its distinct neighbor labels ≤ degree),
-    and a per-dst plurality argmax via max_by — one pass over the
-    cached edge list + two narrow shuffles, the same contract as the
-    other iterative operators; labels are localCheckpoint'ed so
-    lineage stays one iteration deep."""
-    ed, _, _ = _pagerank_state(spark, sf_dir)
+    Per iteration: one ``_hop`` over the edges plus self-loops counting
+    (node, lbl) pairs (state per node bounded by its distinct neighbor
+    labels ≤ degree), then the per-node plurality argmax with
+    smallest-label ties via max_by over (count, -lbl)."""
+    ed = _cust_supp_edges(spark, sf_dir)
     nodes = ed.select("src").distinct()
     edges = (
         ed.select("src", "dst")
@@ -788,14 +796,18 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("src").alias("node"), F.col("src").alias("lbl")
     ).localCheckpoint()
     for _ in range(LP_ITERS):
-        labels = _labelprop_step(edges, labels).localCheckpoint()
-    render = (
-        "CASE WHEN {0} % 2 = 0 THEN 'c:' || CAST({0} div 2 AS STRING)"
-        " ELSE 's:' || CAST({0} div 2 AS STRING) END"
-    )
-    return labels.selectExpr(
-        render.format("node") + " AS node",
-        render.format("lbl") + " AS community",
+        counts = _hop(edges, labels, F.count(F.lit(1)).alias("c"), by=("lbl",))
+        labels = (
+            counts.groupBy("node")
+            .agg(
+                F.max_by(
+                    "lbl", F.struct(F.col("c"), (-F.col("lbl")).alias("t"))
+                ).alias("lbl")
+            )
+            .localCheckpoint()
+        )
+    return labels.select(
+        _node_label("node").alias("node"), _node_label("lbl").alias("community")
     ).orderBy("community", "node")
 
 
@@ -874,20 +886,7 @@ def graph_linkpred_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: pair building is Σ basket² (bounded by order size), wedge
     building is Σ min(deg,40)² — both linear in edges at fixed caps;
     every join is an equi-join on vertex keys."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = _copurchase_pairs(li, min_support=2).localCheckpoint()
-    deg = (
-        pairs.select(F.col("p1").alias("p"))
-        .unionAll(pairs.select(F.col("p2").alias("p")))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    adj = pairs.select(F.col("p1").alias("m"), F.col("p2").alias("nbr")).unionAll(
-        pairs.select(F.col("p2").alias("m"), F.col("p1").alias("nbr"))
-    )
-    capped = adj.join(
-        deg.where(F.col("d") <= 40).select(F.col("p").alias("m")), "m"
-    )
+    pairs, deg, capped = _copurchase(spark, sf_dir, min_support=2)
     x = capped.select("m", F.col("nbr").alias("u"))
     y = capped.select("m", F.col("nbr").alias("v"))
     cn = (
@@ -928,9 +927,6 @@ def graph_linkpred_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFra
 # could flip a round(); a literal weight table is bit-identical by
 # construction, and the integer weights make the SUM exact and
 # merge-order-free.
-import math as _math
-
-_AA_CAP = 40
 _AA_W = {d: int(round(1e6 / _math.log(d))) for d in range(2, _AA_CAP + 1)}
 
 
@@ -998,23 +994,7 @@ def graph_linkpred_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: wedge generation is Σ min(deg,cap)² per midpoint — linear
     in edges at a fixed cap; the weight lookup is a 39-literal CASE
     evaluated map-side; every join is an equi-join on vertex keys."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = _copurchase_pairs(li, min_support=2).localCheckpoint()
-    deg = (
-        pairs.select(F.col("p1").alias("p"))
-        .unionAll(pairs.select(F.col("p2").alias("p")))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    adj = pairs.select(F.col("p1").alias("m"), F.col("p2").alias("nbr")).unionAll(
-        pairs.select(F.col("p2").alias("m"), F.col("p1").alias("nbr"))
-    )
-    capped = adj.join(
-        deg.where(F.col("d") <= _AA_CAP).select(
-            F.col("p").alias("m"), "d"
-        ),
-        "m",
-    )
+    pairs, _, capped = _copurchase(spark, sf_dir, min_support=2)
     x = capped.select("m", F.col("nbr").alias("u"), "d")
     y = capped.select("m", F.col("nbr").alias("v"))
     cn = (
@@ -1103,26 +1083,9 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure is one equi-join of wedges against the edge list, counts
     group by center, and the top-100 is TakeOrderedAndProject, never
     a global sort."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # localCheckpoint: pairs feeds deg/adj/tri and the final join; the
-    # former self-join form leaned on ReusedExchange for dedup, which
-    # the mapInArrow pair counter does not get.
-    pairs = _copurchase_pairs(li, min_support=2).localCheckpoint()
-    deg = (
-        pairs.select(F.col("p1").alias("p"))
-        .unionAll(pairs.select(F.col("p2").alias("p")))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    adj = pairs.select(
-        F.col("p1").alias("m"), F.col("p2").alias("nbr")
-    ).unionAll(pairs.select(F.col("p2").alias("m"), F.col("p1").alias("nbr")))
-    capped = adj.join(
-        deg.where(F.col("d").between(2, _AA_CAP)).select(
-            F.col("p").alias("m")
-        ),
-        "m",
-    )
+    # A degree-1 midpoint has no neighbor pair, so the capped adjacency
+    # (d <= cap) yields exactly the wedges of the d in [2, cap] centers.
+    pairs, deg, capped = _copurchase(spark, sf_dir, min_support=2)
     wedges = (
         capped.alias("x")
         .join(
@@ -1219,7 +1182,7 @@ def graph_linkpred_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     — integer floor division, zero float comparisons in the ranking, so
     the top-50 is bit-reproducible at any parallelism. Wedge machinery,
     degree cap, and existing-edge anti-join shared with
-    graph_linkpred_adamic_adar (graph.py:909); degrees in the union
+    graph_linkpred_adamic_adar; degrees in the union
     term are FULL degrees (the cap bounds wedge fan-out, not the
     normalization).
 
@@ -1227,21 +1190,7 @@ def graph_linkpred_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges at a fixed cap; the two degree lookups are equi-joins on
     vertex keys against the edge-set-sized degree table;
     TakeOrderedAndProject keeps the top 50 without a global sort."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = _copurchase_pairs(li, min_support=2).localCheckpoint()
-    deg = (
-        pairs.select(F.col("p1").alias("p"))
-        .unionAll(pairs.select(F.col("p2").alias("p")))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    adj = pairs.select(F.col("p1").alias("m"), F.col("p2").alias("nbr")).unionAll(
-        pairs.select(F.col("p2").alias("m"), F.col("p1").alias("nbr"))
-    )
-    capped = adj.join(
-        deg.where(F.col("d") <= _AA_CAP).select(F.col("p").alias("m")),
-        "m",
-    )
+    pairs, deg, capped = _copurchase(spark, sf_dir, min_support=2)
     x = capped.select("m", F.col("nbr").alias("u"))
     y = capped.select("m", F.col("nbr").alias("v"))
     cn = (
@@ -1378,10 +1327,8 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the {_HC_ROOTS}-root / 3-hop config the oracle mirrors."""
     from boltzmannclean_spark.pipeline import harmonic_centrality
 
-    ed, _, _ = _pagerank_state(spark, sf_dir)
-    out = harmonic_centrality(
-        ed.select("src", "dst"), roots=_HC_ROOTS, max_level=_HC_MAX_LVL
-    )
+    edges = _cust_supp_edges(spark, sf_dir).select("src", "dst")
+    out = harmonic_centrality(edges, roots=_HC_ROOTS, max_level=_HC_MAX_LVL)
     # unit = lcm(1,2,3) = 6: harmonic_scaled IS the historical sixths.
     return out.withColumnRenamed("harmonic_scaled", "harmonic_sixths")
 
@@ -1442,53 +1389,18 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank discipline, graph.py module docstring). With α strictly
     below 1/λ_max the truncated series is the standard Katz
     approximation; 3 hops covers customer→supplier→customer→supplier
-    influence on this bipartite graph.
-
-    Scale: per iteration one shuffle join (score vector ⋈ cached edge
-    list on src — the vector is node-count sized and NEVER broadcast)
-    plus one map-side-combined aggregation to dst; the edge list is
-    cached across iterations and the per-iteration vector is
-    localCheckpoint'ed. Output is top-25 via orderBy+limit
-    (TakeOrderedAndProject). Identical two-shuffle-per-iteration shape
-    at any graph size."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    eo = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    fwd = eo.select(
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    rev = eo.select(
-        (F.col("l_suppkey") * 2 + 1).alias("src"),
-        (F.col("o_custkey") * 2).alias("dst"),
-    )
-    edges = fwd.unionAll(rev).cache()
-    x = edges.select("src").distinct().select(
+    influence on this bipartite graph. Each iteration is one ``_hop``;
+    output is top-25 via orderBy+limit (TakeOrderedAndProject)."""
+    ed = _cust_supp_edges(spark, sf_dir)
+    x = ed.select("src").distinct().select(
         F.col("src").alias("node"), F.lit(KATZ_BETA).cast("long").alias("x")
     )
     for _ in range(N_ITER):
-        x = (
-            edges.join(x.hint("shuffle_hash"), edges.src == F.col("node"))
-            .groupBy("dst")
-            .agg(
-                (
-                    F.lit(KATZ_BETA)
-                    + F.expr(f"SUM(x) div {KATZ_DEN}")
-                ).alias("x")
-            )
-            .select(F.col("dst").alias("node"), "x")
-            .localCheckpoint()
-        )
+        x = _hop(
+            ed, x, (F.lit(KATZ_BETA) + F.expr(f"SUM(x) div {KATZ_DEN}")).alias("x")
+        ).localCheckpoint()
     return (
-        x.selectExpr(
-            "CASE WHEN node % 2 = 0 THEN 'c:' || CAST(node div 2 AS STRING)"
-            " ELSE 's:' || CAST(node div 2 AS STRING) END AS node",
-            "x AS katz_micro",
-        )
+        x.select(_node_label("node").alias("node"), F.col("x").alias("katz_micro"))
         .orderBy(F.desc("katz_micro"), "node")
         .limit(TOP_N)
     )
@@ -1565,14 +1477,10 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed_share = RSCALE/|S| on seeds and 0 elsewhere — all integer
     arithmetic, bit-identical at any parallelism. Nodes never reached
     from the seeds stay at exactly 0 and are filtered (r > 0), so the
-    output is the seeds' 3-hop neighborhood ranked by proximity.
-
-    Scale: same two-shuffles-per-iteration shape as pagerank (vector ⋈
-    cached edges on src, map-combined aggregation to dst, LEFT join
-    back to the node list so unreached nodes keep their exact 0);
-    the vector is node-count sized and never broadcast. Top-25 via
-    TakeOrderedAndProject."""
-    ed, _r0_unused, _n = _pagerank_state(spark, sf_dir)
+    output is the seeds' 3-hop neighborhood ranked by proximity. Each
+    iteration is one ``_hop`` plus a LEFT join back to the node list;
+    top-25 via TakeOrderedAndProject."""
+    ed = _cust_supp_edges(spark, sf_dir)
     nodes = ed.select("src").distinct()
     seeds = (
         nodes.where(F.col("src") % 2 == 0)
@@ -1594,12 +1502,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     r = base.select("node", F.col("seed_share").alias("r"))
     for _ in range(N_ITER):
-        contrib = (
-            ed.join(r.hint("shuffle_hash"), ed.src == F.col("node"))
-            .groupBy("dst")
-            .agg(F.sum(F.expr("r div d")).alias("contrib"))
-            .select(F.col("dst").alias("node"), "contrib")
-        )
+        contrib = _hop(ed, r, F.sum(F.expr("r div d")).alias("contrib"))
         r = (
             base.join(contrib, "node", "left")
             .select(
@@ -1612,11 +1515,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return (
         r.where(F.col("r") > 0)
-        .selectExpr(
-            "CASE WHEN node % 2 = 0 THEN 'c:' || CAST(node div 2 AS STRING)"
-            " ELSE 's:' || CAST(node div 2 AS STRING) END AS node",
-            "r AS ppr_micro",
-        )
+        .select(_node_label("node").alias("node"), F.col("r").alias("ppr_micro"))
         .orderBy(F.desc("ppr_micro"), "node")
         .limit(TOP_N)
     )
@@ -1687,53 +1586,32 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking while every score is bit-identical at any parallelism
     (string-hopped to double only for display).
 
-    Scale: each half-iteration is one edge ⋈ score-vector shuffle
-    join plus a map-combined aggregation (the pagerank contract); the
-    distinct edge list is cached, the vector never broadcast. Top-25
-    per role via per-role row_number over the vector — at an
+    Each half-iteration is one ``_hop`` over the cached distinct pairs.
+    Top-25 per role via per-role row_number over the vector — at an
     unbounded node domain route through functions/topk.py's salted
     top-k (the similarity_cosine_topk path)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    eo = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .cache()
-    )
+    eo = _cust_supp_pairs(spark, sf_dir).cache()
     a = eo.select(F.col("l_suppkey").alias("node")).distinct().select(
         "node", F.lit(1).cast("decimal(38,0)").alias("v")
     )
-    h = None
     for _ in range(HITS_ITER):
-        h = (
-            eo.join(a.hint("shuffle_hash"), eo.l_suppkey == F.col("node"))
-            .groupBy("o_custkey")
-            .agg(F.sum("v").alias("v"))
-            .select(F.col("o_custkey").alias("node"), "v")
-            .localCheckpoint()
-        )
-        a = (
-            eo.join(h.hint("shuffle_hash"), eo.o_custkey == F.col("node"))
-            .groupBy("l_suppkey")
-            .agg(F.sum("v").alias("v"))
-            .select(F.col("l_suppkey").alias("node"), "v")
-            .localCheckpoint()
-        )
+        h = _hop(
+            eo, a, F.sum("v").alias("v"), src="l_suppkey", dst="o_custkey"
+        ).localCheckpoint()
+        a = _hop(
+            eo, h, F.sum("v").alias("v"), src="o_custkey", dst="l_suppkey"
+        ).localCheckpoint()
     wr = Window.orderBy(F.desc("v"), "node")
-    hubs = h.select(
-        F.lit("hub").alias("role"),
-        F.concat(F.lit("c:"), F.col("node").cast("string")).alias("node"),
-        F.expr("CAST(CAST(v AS STRING) AS DOUBLE)").alias("score"),
-        F.row_number().over(wr).cast("long").alias("rk"),
-    ).where(F.col("rk") <= TOP_N)
-    auths = a.select(
-        F.lit("authority").alias("role"),
-        F.concat(F.lit("s:"), F.col("node").cast("string")).alias("node"),
-        F.expr("CAST(CAST(v AS STRING) AS DOUBLE)").alias("score"),
-        F.row_number().over(wr).cast("long").alias("rk"),
-    ).where(F.col("rk") <= TOP_N)
-    return hubs.unionAll(auths).orderBy("role", "rk")
+    ranked = [
+        vec.select(
+            F.lit(role).alias("role"),
+            F.concat(F.lit(prefix), F.col("node").cast("string")).alias("node"),
+            F.expr("CAST(CAST(v AS STRING) AS DOUBLE)").alias("score"),
+            F.row_number().over(wr).cast("long").alias("rk"),
+        ).where(F.col("rk") <= TOP_N)
+        for role, prefix, vec in (("hub", "c:", h), ("authority", "s:", a))
+    ]
+    return reduce(DataFrame.unionAll, ranked).orderBy("role", "rk")
 
 
 # HyperBall sketch geometry: m registers per node; each register's
@@ -1763,6 +1641,41 @@ def _rho_case_sql(h: str) -> str:
         for z in range(HB_BITS)
     )
     return f"CAST(CASE {branches} ELSE {HB_BITS + 1} END AS BIGINT)"
+
+
+def _hb_registers(edges: DataFrame) -> DataFrame:
+    """Every node's HB_M registers (node, reg, val): val = rho of a
+    24-bit md5-derived hash of 'node:reg', checkpointed."""
+    regs = edges.sparkSession.range(HB_M).select(
+        F.col("id").cast("int").alias("reg")
+    )
+    key = F.concat(
+        F.col("node").cast("string"), F.lit(":"), F.col("reg").cast("string")
+    )
+    h24 = F.conv(F.substring(F.md5(key), 1, 6), 16, 10).cast("long")
+    return (
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .crossJoin(F.broadcast(regs))
+        .select("node", "reg", _rho_case_spark(h24).alias("val"))
+        .localCheckpoint()
+    )
+
+
+def _hb_merge(edges: DataFrame, r: DataFrame) -> DataFrame:
+    """One HyperBall hop: each node's registers MAX-merged with its
+    out-neighbors' — one groupBy-MAX shuffle with map-side partial MAX
+    (register merge is idempotent, commutative and associative),
+    checkpointed."""
+    prop = edges.join(r, edges.dst == r.node).select(
+        edges.src.alias("node"), "reg", "val"
+    )
+    return (
+        r.unionAll(prop)
+        .groupBy("node", "reg")
+        .agg(F.max("val").alias("val"))
+        .localCheckpoint()
+    )
 
 
 def _hyperball_oracle() -> str:
@@ -1862,47 +1775,16 @@ def graph_hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     roots·|E| — so ALL-nodes coverage costs what ~m roots cost
     exactly, the trade HyperBall exists for. Output rendered for the
     32 highest-degree hubs (house output-cap discipline)."""
-    ed, _, _ = _pagerank_state(spark, sf_dir)
-    edges = ed.select("src", "dst")
+    edges = _cust_supp_edges(spark, sf_dir).select("src", "dst")
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("degree")
     )
     hubs = deg.orderBy(F.desc("degree"), "node").limit(HB_TOP)
-    regs = spark.range(HB_M).select(F.col("id").cast("int").alias("reg"))
-    h24 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("node").cast("string"),
-                    F.lit(":"),
-                    F.col("reg").cast("string"),
-                )
-            ),
-            1,
-            6,
-        ),
-        16,
-        10,
-    ).cast("long")
-    r = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .crossJoin(F.broadcast(regs))
-        .select("node", "reg", _rho_case_spark(h24).alias("val"))
-        .localCheckpoint()
-    )
+    r = _hb_registers(edges)
     est_frames = []
     inv = F.pow(F.lit(2.0), -F.col("val").cast("double"))
     for t in range(1, HB_HOPS + 1):
-        prop = edges.join(r, edges.dst == r.node).select(
-            edges.src.alias("node"), "reg", "val"
-        )
-        r = (
-            r.unionAll(prop)
-            .groupBy("node", "reg")
-            .agg(F.max("val").alias("val"))
-            .localCheckpoint()
-        )
+        r = _hb_merge(edges, r)
         est_frames.append(
             r.groupBy("node")
             .agg(F.sum(inv).alias("s"))
@@ -1914,12 +1796,9 @@ def graph_hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("reach_est_f"),
             )
         )
-    est = est_frames[0]
-    for f in est_frames[1:]:
-        est = est.unionAll(f)
     return (
         F.broadcast(hubs)
-        .join(est, "node")
+        .join(reduce(DataFrame.unionAll, est_frames), "node")
         .select("node", "degree", "hops", "reach_est_f")
         .orderBy(F.desc("degree"), "node", "hops")
     )
@@ -2004,57 +1883,21 @@ def graph_hyperball_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle per hop over |E|·m rows, register state |V|·m — plus a
     5-row curve; the mass aggregation is map-combinable. Output is
     hop-count-sized."""
-    ed, _, _ = _pagerank_state(spark, sf_dir)
-    edges = ed.select("src", "dst")
-    regs = spark.range(HB_M).select(F.col("id").cast("int").alias("reg"))
-    h24 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("node").cast("string"),
-                    F.lit(":"),
-                    F.col("reg").cast("string"),
-                )
-            ),
-            1,
-            6,
-        ),
-        16,
-        10,
-    ).cast("long")
-    r = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .crossJoin(F.broadcast(regs))
-        .select("node", "reg", _rho_case_spark(h24).alias("val"))
-        .localCheckpoint()
-    )
+    edges = _cust_supp_edges(spark, sf_dir).select("src", "dst")
+    r = _hb_registers(edges)
     mass_expr = F.sum(
         F.expr("shiftleft(CAST(1 AS BIGINT), 25 - CAST(val AS INT))")
     ).cast("long")
-    curves = [
-        r.agg(mass_expr.alias("mass")).select(
-            F.lit(0).cast("long").alias("hops"), "mass"
-        )
-    ]
-    for t in range(1, SAT_HOPS + 1):
-        prop = edges.join(r, edges.dst == r.node).select(
-            edges.src.alias("node"), "reg", "val"
-        )
-        r = (
-            r.unionAll(prop)
-            .groupBy("node", "reg")
-            .agg(F.max("val").alias("val"))
-            .localCheckpoint()
-        )
+    curves = []
+    for t in range(SAT_HOPS + 1):
+        if t:
+            r = _hb_merge(edges, r)
         curves.append(
             r.agg(mass_expr.alias("mass")).select(
                 F.lit(t).cast("long").alias("hops"), "mass"
             )
         )
-    curve = curves[0]
-    for c in curves[1:]:
-        curve = curve.unionAll(c)
+    curve = reduce(DataFrame.unionAll, curves)
     prev = curve.select(
         (F.col("hops") + 1).alias("hops"), F.col("mass").alias("prev_mass")
     )

@@ -403,17 +403,17 @@ def _assign_cells(n: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _kmeans_cells(n: DataFrame) -> DataFrame:
+def _kmeans_cells(n: DataFrame, dims: int) -> DataFrame:
     """Train the IVF coarse quantizer and return final cell assignments:
-    ``ann._ivf_train`` over (vec_id, qvec) seeded by the vec_ids
-    divisible by CENT_MOD, KMEANS_ITERS exact-integer Lloyd rounds
-    (ties to the smallest cid, truncate-toward-zero update — the DuckDB
-    oracle's derivation). The assignment is joined back to the corpus
+    ``ann._ivf_train`` over (vec_id, qvec) of ``dims``-long vectors,
+    seeded by the vec_ids divisible by CENT_MOD, KMEANS_ITERS
+    exact-integer Lloyd rounds (ties to the smallest cid,
+    truncate-toward-zero update — the DuckDB oracle's derivation). The assignment is joined back to the corpus
     by the unique vec_id."""
     q = n.select(F.col("vec_id").alias("id"), "qvec")
     _, asg = _ivf_train(
         q,
-        dims=_EMB_DIMS,
+        dims=dims,
         kmeans_iters=KMEANS_ITERS,
         seeds=q.where(F.col("id") % CENT_MOD == 0).select("id"),
     )
@@ -440,7 +440,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_double("embedding").alias("e"),
         _quantize(F.col("embedding"), MICRO).alias("qvec"),
     ).withColumn("nrm", norm(F.col("e")))
-    cells = _kmeans_cells(n)
+    cells = _kmeans_cells(n, _EMB_DIMS)
     q = cells.where(F.col("vec_id") < N_QUERY).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),

@@ -296,7 +296,9 @@ def semantic_dedup(
     tractable. A doc is removed iff a same-cell partner with a smaller
     id matches at cosine >= ``theta`` (production: ~0.95 on real
     embeddings). Returns (id, cell, removed, best_dup_cos) for every
-    doc in at least one semantic-dup pair."""
+    doc in at least one semantic-dup pair. ``dims`` is the vector
+    length; when None it is read from the first vector (one small
+    job)."""
     from boltzmannclean_spark.operators.similarity import MICRO, _kmeans_cells
 
     n_full = emb.select(
@@ -305,6 +307,11 @@ def semantic_dedup(
         as_double(vec_col).alias("e"),
         _quantize(F.col(vec_col), MICRO).alias("qvec"),
     ).withColumn("nrm", norm(F.col("e")))
+    if dims is None:
+        first = n_full.select(F.size("qvec")).first()
+        train_dims = first[0] if first else 1
+    else:
+        train_dims = dims
     # localCheckpoint, not cache(): the cell assignment feeds three
     # consumers (both pair sides + the final cell lookup) and must not
     # re-run the k-means iterations, but a public-API function cannot
@@ -313,7 +320,7 @@ def semantic_dedup(
     # (r7 ADVICE). Checkpointed blocks are reaped by the ContextCleaner
     # as soon as the returned plan is garbage-collected.
     cells = (
-        _kmeans_cells(n_full)
+        _kmeans_cells(n_full, train_dims)
         .select("vec_id", "e", "nrm", "cid")
         .localCheckpoint()
     )

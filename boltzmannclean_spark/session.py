@@ -21,6 +21,18 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` if set, else half of physical memory capped
+    at 48g: in local mode the driver JVM is the whole engine, and a heap
+    larger than the host grows instead of collecting until the host runs
+    out of memory."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2
+    return f"{min(half >> 20, 48 << 10)}m"
+
+
 def get_spark(app_name: str = "boltzmannclean_spark") -> SparkSession:
     cpus = cpu_count()
     spark = (
@@ -60,7 +72,7 @@ def get_spark(app_name: str = "boltzmannclean_spark") -> SparkSession:
         # a microsecond timestamp (sources/catalog.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Managed-table support (bucketed-join tests): keep the warehouse
         # and the derby metastore out of the repo tree.

@@ -228,6 +228,12 @@ INVARIANT_QUERIES = (
     # (exact binning + integer merge at any partitioning).
     "sample_exact_split",
     "window_mergeable_quantiles_float",
+    # frontier loops and HLL register merges: min-level closure under
+    # DISTINCT/anti-join, order-free groupBy-MAX registers, exact
+    # binary-fraction estimate sums and integer mass curves.
+    "graph_bfs_levels",
+    "graph_hyperball_reach",
+    "graph_hyperball_saturation",
 )
 
 

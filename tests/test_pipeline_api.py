@@ -20,6 +20,7 @@ from boltzmannclean_spark import (
     exact_dedup,
     minhash_dedup,
     quality_filter,
+    semantic_dedup,
     sessionize,
     substring_dedup,
 )
@@ -107,6 +108,39 @@ def test_cosine_topk_k_knob(spark):
     # query [0,1]: cosine decreases with i, so top-3 neighbors are 1,2,3
     assert [r.neighbor_id for r in out] == [1, 2, 3]
     assert [r.rk for r in out] == [1, 2, 3]
+
+
+def test_semantic_dedup_any_dimensionality(spark):
+    # 8-dim corpus in two clusters seeded by ids 0 and 100 (the vec_ids
+    # divisible by the seed modulus). Within a cluster the members sit
+    # at cosine 0.8 of each other, except docs 2 and 4, which differ
+    # by one small component: the only pair above theta.
+    def vec(*entries):
+        v = [0.0] * 8
+        for i, x in entries:
+            v[i] = x
+        return v
+
+    rows = [
+        (0, vec((0, 1.0))),
+        (1, vec((0, 1.0), (3, 0.5))),
+        (2, vec((0, 1.0), (5, 0.5))),
+        (3, vec((0, 1.0), (4, 0.5))),
+        (4, vec((0, 1.0), (5, 0.5), (6, 0.01))),
+        (100, vec((1, 1.0))),
+        (101, vec((1, 1.0), (3, 0.5))),
+        (102, vec((1, 1.0), (7, 0.5))),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    results = [
+        sorted(tuple(r) for r in semantic_dedup(emb, theta=0.99, dims=d).collect())
+        for d in (None, 8)
+    ]
+    assert results[0] == results[1]
+    (a, b) = results[0]
+    assert (a[0], a[2], b[0], b[2]) == (2, False, 4, True)
+    assert a[1] == b[1]  # same cell
+    assert a[3] == b[3] > 0.99
 
 
 def test_bm25_topk_custom_terms(docs):

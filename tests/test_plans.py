@@ -6,6 +6,8 @@ results stay correct."""
 
 from __future__ import annotations
 
+import pytest
+
 from boltzmannclean_spark.plans.registry import all_queries
 
 QUERIES = all_queries()
@@ -175,30 +177,49 @@ def test_pagerank_no_cartesian_blowup(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_pagerank_rank_join_is_never_broadcast(spark, sf_dir):
-    # The rank vector is node-count sized — it GROWS with the graph,
-    # so the rank⋈edges join must be a shuffle join (a forced broadcast
-    # is a guaranteed OOM at billions of nodes). Gate the exact
-    # iteration body the operator runs: the only broadcast allowed is
-    # the 1-row n_nodes nested-loop join.
-    from boltzmannclean_spark.operators.graph import (
-        _pagerank_state,
-        _pagerank_step,
-    )
+#: Every operator whose iteration runs through graph._hop, with the
+#: number of hop steps it takes (HITS runs two half-steps per round).
+_HOP_USERS = {
+    "graph_pagerank_bipartite": 3,
+    "graph_label_propagation": 3,
+    "graph_katz_centrality": 3,
+    "graph_personalized_pagerank": 3,
+    "graph_hits_hubs_authorities": 6,
+}
 
-    ed, r, n = _pagerank_state(spark, sf_dir)
-    plan = _plan(_pagerank_step(ed, r, n))
-    # The rank join is the one on `node`. Other joins (edges⋈degree in
-    # state-building) are left to cost/AQE and may broadcast at tiny SF
-    # — that's size-based, not forced, and flips to shuffle at scale.
-    rank_join_lines = [
-        ln for ln in plan.splitlines()
-        if "Join" in ln and "node#" in ln
-    ]
-    assert rank_join_lines, plan
-    for ln in rank_join_lines:
-        assert "BroadcastHashJoin" not in ln, ln
-        assert "ShuffledHashJoin" in ln or "SortMergeJoin" in ln, ln
+
+@pytest.mark.parametrize("name", sorted(_HOP_USERS))
+def test_hop_state_join_is_never_broadcast(spark, sf_dir, monkeypatch, name):
+    # The iteration state is node-count sized — it GROWS with the
+    # graph, so the state⋈edges join must be a shuffle join (a forced
+    # broadcast is a guaranteed OOM at billions of nodes). The
+    # registered plans end at localCheckpoint scans, so the loop's
+    # joins are invisible there: record the plan of every hop the
+    # operator actually runs. Other joins (edges⋈degree in the edge
+    # build) are left to cost/AQE and may broadcast at tiny SF — that's
+    # size-based, not forced, and flips to shuffle at scale.
+    from boltzmannclean_spark.operators import graph
+
+    hop = graph._hop
+    plans = []
+
+    def recording_hop(*args, **kwargs):
+        out = hop(*args, **kwargs)
+        plans.append(_plan(out))
+        return out
+
+    monkeypatch.setattr(graph, "_hop", recording_hop)
+    QUERIES[name].spark_fn(spark, sf_dir)
+    assert len(plans) == _HOP_USERS[name], (name, len(plans))
+    for plan in plans:
+        # The state join is the one on `node`.
+        state_join_lines = [
+            ln for ln in plan.splitlines() if "Join" in ln and "node#" in ln
+        ]
+        assert state_join_lines, plan
+        for ln in state_join_lines:
+            assert "BroadcastHashJoin" not in ln, ln
+            assert "ShuffledHashJoin" in ln or "SortMergeJoin" in ln, ln
 
 
 def test_pagerank_conserves_rank_mass(spark, sf_dir):
@@ -215,12 +236,14 @@ def test_pagerank_conserves_rank_mass(spark, sf_dir):
     from boltzmannclean_spark.operators.graph import (
         N_ITER,
         RSCALE,
+        _cust_supp_edges,
         _pagerank_state,
         _pagerank_step,
     )
     from pyspark.sql import functions as F
 
-    ed, r, n = _pagerank_state(spark, sf_dir)
+    ed = _cust_supp_edges(spark, sf_dir)
+    r, n = _pagerank_state(ed)
     dangling = (
         ed.select("dst")
         .distinct()
@@ -520,36 +543,6 @@ def test_semdedup_pair_join_is_cell_keyed(spark, sf_dir):
     plan = _plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "cid" in plan, plan
-
-
-def test_label_propagation_label_join_is_never_broadcast(spark, sf_dir):
-    # Same contract as PageRank: the label vector is node-count sized
-    # and GROWS with the graph — the label⋈edges join must stay a
-    # shuffle join. Gate the exact iteration body the operator runs
-    # (the registered plan ends at localCheckpoint scans, so the loop's
-    # joins are invisible there).
-    from boltzmannclean_spark.operators.graph import (
-        _labelprop_step,
-        _pagerank_state,
-    )
-    from pyspark.sql import functions as F
-
-    ed, _, _ = _pagerank_state(spark, sf_dir)
-    nodes = ed.select("src").distinct()
-    edges = ed.select("src", "dst").unionAll(
-        nodes.select("src", F.col("src").alias("dst"))
-    )
-    labels = nodes.select(
-        F.col("src").alias("node"), F.col("src").alias("lbl")
-    )
-    plan = _plan(_labelprop_step(edges, labels))
-    label_join_lines = [
-        ln for ln in plan.splitlines() if "Join" in ln and "node#" in ln
-    ]
-    assert label_join_lines, plan
-    for ln in label_join_lines:
-        assert "BroadcastHashJoin" not in ln, ln
-        assert "ShuffledHashJoin" in ln or "SortMergeJoin" in ln, ln
 
 
 def test_exact_moments_domain_guard_raises_loudly(spark, tmp_path):

@@ -178,10 +178,10 @@ def test_bfs_levels_match_reference(spark, sf_dir):
     from boltzmannclean_spark.operators.graph import (
         BFS_MAX_LEVEL,
         BFS_START,
-        _pagerank_state,
+        _cust_supp_edges,
     )
 
-    ed, _, _ = _pagerank_state(spark, sf_dir)
+    ed = _cust_supp_edges(spark, sf_dir)
     edges = [(r.src, r.dst) for r in ed.select("src", "dst").collect()]
     want = _reference_bfs(edges, BFS_START, BFS_MAX_LEVEL)
 
