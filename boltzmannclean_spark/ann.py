@@ -23,7 +23,10 @@ round-trips losslessly):
 - **train**: PQ per-block codebooks and the optional IVF coarse
   quantizer via the vectorized Lloyd trainer (``functions/lloyd.py``:
   one mapInArrow pass + codebook-sized partial sums per round, the
-  codebook materialized on the driver). Artifacts: ``codebook``
+  codebook materialized on the driver). Raw IVF+PQ trains both as one
+  block-group call, so each round's single corpus pass serves every
+  group, and one assignment pass emits cells and codes; all jobs run
+  on the caller's thread. Artifacts: ``codebook``
   (pq_m×pq_k rows), ``codes`` (corpus×pq_m rows — 1 byte/block/vector
   at scale), ``cells`` + ``ivf_centroids`` (IVF builds), persisted as
   parquet directories of those names plus ``meta.json``.
@@ -43,7 +46,6 @@ from __future__ import annotations
 
 import json
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +68,9 @@ DEFAULT_MICRO = 1_000_000
 RESIDUAL_LUT_BROADCAST_MAX_ROWS = 20_000_000
 
 META_FILE = "meta.json"
+
+#: Column names of the quantized corpus every trainer call reads.
+_QV = dict(id_col="id", vec_col="qvec")
 
 
 def _quantize(col, micro: int):
@@ -135,23 +140,17 @@ def _pq_train(
     seeds: DataFrame,
 ) -> DataFrame:
     """Per-block codebooks via ``pq_iters`` Lloyd rounds in exact
-    integer units over ``vecs = (id, qvec)``, via the vectorized
-    trainer (functions/lloyd.py: one NumPy mapInArrow pass +
-    codebook-sized partial sums per round). Returns (b, cid, cvec
+    integer units over ``vecs = (id, qvec)``: a one-group call of the
+    shared trainer (functions/lloyd.py). Returns (b, cid, cvec
     array<long>), codebook-sized, materialized on the driver (the
     MLlib-KMeans pattern). Seeded by the ``seeds`` id frame (cid = seed
     id) so training is deterministic; ties break to the smallest cid
     and the update is truncate-toward-zero division, which the DuckDB
     oracles re-derive bit for bit."""
-    return train_blocks(
-        vecs,
-        seeds,
-        id_col="id",
-        vec_col="qvec",
-        dims=pq_m * pq_dsub,
-        n_blocks=pq_m,
-        iters=pq_iters,
+    (cent,) = train_blocks(
+        vecs, [(seeds, pq_m, pq_iters)], dims=pq_m * pq_dsub, **_QV
     )
+    return cent
 
 
 def _pq_assign(
@@ -163,37 +162,24 @@ def _pq_assign(
     newly arrived vectors are absorbed by assignment alone, no
     retraining."""
     return assign_blocks(
-        vecs,
-        cent,
-        id_col="id",
-        vec_col="qvec",
-        dims=pq_m * pq_dsub,
-        n_blocks=pq_m,
-    )
+        vecs, [(cent, pq_m)], dims=pq_m * pq_dsub, **_QV
+    ).select("id", "b", "cid")
 
 
 def _ivf_train(
     q: DataFrame, *, dims: int, kmeans_iters: int, seeds: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: ``kmeans_iters`` Lloyd rounds over the
-    full vectors (the shared vectorized trainer with n_blocks=1).
-    Returns (centroids (cell, cvec), assignments (id, cell), the
-    assignment lazy). Empty cells drop out of the update
-    deterministically; ties break to the smallest cell id."""
-    cent_b = train_blocks(
-        q,
-        seeds,
-        id_col="id",
-        vec_col="qvec",
-        dims=dims,
-        n_blocks=1,
-        iters=kmeans_iters,
+    full vectors (a one-group call of the shared trainer with one
+    full-width block). Returns (centroids (cell, cvec), assignments
+    (id, cell), the assignment lazy). Empty cells drop out of the
+    update deterministically; ties break to the smallest cell id."""
+    (cent,) = train_blocks(q, [(seeds, 1, kmeans_iters)], dims=dims, **_QV)
+    asg = assign_blocks(q, [(cent, 1)], dims=dims, **_QV)
+    return (
+        cent.select(F.col("cid").alias("cell"), "cvec"),
+        asg.select("id", F.col("cid").alias("cell")),
     )
-    cent = cent_b.select(F.col("cid").alias("cell"), "cvec")
-    assigned = assign_blocks(
-        q, cent_b, id_col="id", vec_col="qvec", dims=dims, n_blocks=1
-    ).select("id", F.col("cid").alias("cell"))
-    return cent, assigned
 
 
 def _train(
@@ -209,57 +195,56 @@ def _train(
 ) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame | None]:
     """Train an index over the quantized corpus ``q = (id, qvec)``.
     Returns ``(codebook, codes, ivf_centroids, cells)``: codebook
-    (b, cid, cvec) driver-materialized, codes (id, b, cid) lazy, and —
-    only when ``cell_seeds`` asks for an IVF coarse quantizer —
-    checkpointed ivf_centroids (cell, cvec) and cells (id, cell);
-    otherwise those two are None. ``residual`` trains and encodes PQ on
+    (b, cid, cvec) and ivf_centroids (cell, cvec) driver-materialized,
+    codes (id, b, cid) and cells (id, cell) lazy or checkpointed; the
+    IVF pair only when ``cell_seeds`` asks for a coarse quantizer,
+    otherwise None. ``residual`` trains and encodes PQ on
     ``x − centroid(cell(x))`` (requires ``cell_seeds``)."""
     pq_dsub = dims // pq_m
-
-    def _ivf():
-        cent, cells = _ivf_train(
+    if cell_seeds is not None and not residual:
+        # Raw codebooks read the same q and share no state: one grouped
+        # training call (each Lloyd round's single corpus pass serves
+        # the IVF block and the pq_m PQ blocks) and one assignment pass
+        # emitting cells and codes, checkpointed once and split.
+        cent, codebook = train_blocks(
+            q, [(cell_seeds, 1, kmeans_iters), (pq_seeds, pq_m, pq_iters)],
+            dims=dims, **_QV,
+        )
+        asg = assign_blocks(
+            q, [(cent, 1), (codebook, pq_m)], dims=dims, **_QV
+        ).localCheckpoint()
+        cells = asg.where(F.col("g") == 0)
+        return (
+            codebook,
+            asg.where(F.col("g") == 1).select("id", "b", "cid"),
+            cent.select(F.col("cid").alias("cell"), "cvec"),
+            cells.select("id", F.col("cid").alias("cell")),
+        )
+    ivf_cent = cells = None
+    if cell_seeds is not None:
+        # Residual PQ depends on the IVF result, so it trains after it.
+        # The encoded signal is x − centroid(cell(x)): one broadcast
+        # join against the tiny centroid table + a row-local zip_with
+        # difference, exact integers throughout. Checkpointed: cells
+        # feed the residual frame and the index, and the residual frame
+        # feeds pq_iters training passes plus the encode pass.
+        ivf_cent, cells = _ivf_train(
             q, dims=dims, kmeans_iters=kmeans_iters, seeds=cell_seeds
         )
-        return cent.localCheckpoint(), cells.localCheckpoint()
-
-    def _pq(src):
-        # The codebook comes back driver-materialized (codebook-sized),
-        # so the encode pass and every consumer share it with no
-        # checkpoint and no re-run.
-        cent = _pq_train(
-            src, pq_m=pq_m, pq_iters=pq_iters, pq_dsub=pq_dsub, seeds=pq_seeds
-        )
-        return cent, _pq_assign(src, cent, pq_m=pq_m, pq_dsub=pq_dsub)
-
-    if cell_seeds is None:
-        return (*_pq(q), None, None)
-    if not residual:
-        # With raw codebooks the IVF and PQ trainings read the same q
-        # and share NO state, so they run from two driver threads and
-        # each training's jobs back-fill the executor idle left by the
-        # other's driver-side centroid updates and collects. Each
-        # thread's dataflow is the sequential one, so results are
-        # bit-identical (the overlap cannot reorder any thread-local
-        # arithmetic).
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_ivf = pool.submit(_ivf)
-            codebook, codes = pool.submit(_pq, q).result()
-            ivf_cent, cells = fut_ivf.result()
-        return codebook, codes, ivf_cent, cells
-    # Residual PQ depends on the IVF result, so it trains after it. The
-    # encoded signal is x − centroid(cell(x)): one broadcast join
-    # against the tiny centroid table + a row-local zip_with difference,
-    # exact integers throughout. Checkpointed: the residual frame feeds
-    # pq_iters training passes plus the encode pass.
-    ivf_cent, cells = _ivf()
-    pq_src = (
-        q.join(cells, "id")
-        .join(F.broadcast(ivf_cent), "cell")
-        .select(
-            "id", F.zip_with("qvec", "cvec", lambda x, c: x - c).alias("qvec")
-        )
-    ).localCheckpoint()
-    return (*_pq(pq_src), ivf_cent, cells)
+        cells = cells.localCheckpoint()
+        q = (
+            q.join(cells, "id")
+            .join(F.broadcast(ivf_cent), "cell")
+            .select(
+                "id",
+                F.zip_with("qvec", "cvec", lambda x, c: x - c).alias("qvec"),
+            )
+        ).localCheckpoint()
+    codebook = _pq_train(
+        q, pq_m=pq_m, pq_iters=pq_iters, pq_dsub=pq_dsub, seeds=pq_seeds
+    )
+    codes = _pq_assign(q, codebook, pq_m=pq_m, pq_dsub=pq_dsub)
+    return codebook, codes, ivf_cent, cells
 
 
 def _adc_topk(
@@ -487,10 +472,12 @@ def build_ann_index(
         )
     pq_dsub = dims // pq_m
     # Checkpoint the quantized corpus once: it feeds every training and
-    # encode pass (IVF rounds + PQ rounds + assignment).
+    # encode pass (IVF rounds + PQ rounds + assignment). The corpus
+    # count materializes it, so counting costs no extra pass.
     q = df.select(
         F.col(id_col).alias("id"), _quantize(F.col(vec_col), micro).alias("qvec")
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
+    n_corpus = q.count()
 
     def _seeds(pred: Column | None, n: int | None) -> DataFrame:
         # Seed predicates evaluate against the CALLER'S frame (their own
@@ -513,10 +500,10 @@ def build_ann_index(
         cells.coalesce(4).write.mode("overwrite").parquet(
             os.path.join(out_dir, "cells")
         )
-        ivf_cent.repartition(1).write.mode("overwrite").parquet(
+        ivf_cent.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(out_dir, "ivf_centroids")
         )
-    codebook.repartition(1).write.mode("overwrite").parquet(
+    codebook.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "codebook")
     )
     # At cluster scale: .write.partitionBy(cell) / bucketBy so the
@@ -524,7 +511,6 @@ def build_ann_index(
     codes.coalesce(4).write.mode("overwrite").parquet(
         os.path.join(out_dir, "codes")
     )
-    n_corpus = df.count()
     conf = {
         "dims": dims,
         "pq_m": pq_m,

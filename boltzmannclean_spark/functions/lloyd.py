@@ -28,19 +28,28 @@ hash-matches):
   (``_sdiv_np``), matching the SQL helpers ``sdiv_spark`` /
   ``sdiv_duck`` in ``functions/exact.py``.
 
+Block groups: ``train_blocks`` trains a list of groups over the same
+corpus — each its own seeds, block count and round count (the raw
+IVF+PQ index is one full-width block beside ``pq_m`` sub-blocks). One
+seed collect serves every group, and each round's single corpus pass
+serves every group that still has rounds left; blocks never interact,
+so a group's codebook is bit-identical to training it alone.
+``assign_blocks`` likewise encodes every group in one pass.
+
 Driver-side materialization is CODEBOOK-sized only (seed vectors at
-init, n_blocks × k × dims longs per round) — bounded by the model, not
+init, per-block k × width longs per round) — bounded by the model, not
 the corpus; the corpus itself only ever streams through the Arrow pass.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["train_blocks", "assign_blocks"]
@@ -79,14 +88,12 @@ def _list_to_matrix(col: pa.Array, dims: int) -> np.ndarray:
 
 
 class _Codebook:
-    """Per-block centroid arrays, rows sorted by cid ascending (the
-    tie-break order). Picklable for sc.broadcast."""
+    """Centroid arrays per global block, rows sorted by cid ascending
+    (the tie-break order). Picklable for sc.broadcast."""
 
-    __slots__ = ("cids", "mats", "n_blocks", "dsub")
+    __slots__ = ("cids", "mats")
 
-    def __init__(self, n_blocks: int, dsub: int):
-        self.n_blocks = n_blocks
-        self.dsub = dsub
+    def __init__(self):
         self.cids: dict[int, np.ndarray] = {}
         self.mats: dict[int, np.ndarray] = {}
 
@@ -94,6 +101,17 @@ class _Codebook:
         order = np.argsort(cids, kind="stable")
         self.cids[b] = cids[order].astype(np.int64, copy=False)
         self.mats[b] = mat[order].astype(np.int64, copy=False)
+
+
+def _layout(dims: int, n_blocks: list[int]) -> list[tuple[int, int, int, int]]:
+    """Global block index -> (group, local block, lo, hi): group g's
+    ``n_blocks[g]`` equal column slices, numbered after every earlier
+    group's blocks."""
+    out = []
+    for g, n in enumerate(n_blocks):
+        w = dims // n
+        out += [(g, b, b * w, (b + 1) * w) for b in range(n)]
+    return out
 
 
 #: Upper bound on the (rows × centroids) distance temp inside one
@@ -131,71 +149,76 @@ def _assign_block(X: np.ndarray, cb: _Codebook, b: int) -> np.ndarray:
 
 def _seed_codebook(
     vecs: DataFrame,
-    seeds: DataFrame,
+    seeds: list[DataFrame],
+    layout: list[tuple[int, int, int, int]],
     *,
     id_col: str,
     vec_col: str,
-    dims: int,
-    n_blocks: int,
 ) -> _Codebook:
-    dsub = dims // n_blocks
+    """One collect of the seed vectors of every group (centroid cid =
+    seed id), tagged by group; a group with no seed rows gets no
+    blocks."""
+    tagged = reduce(
+        DataFrame.union,
+        [s.select(id_col, F.lit(g).alias("g")) for g, s in enumerate(seeds)],
+    )
     rows = (
-        vecs.join(F.broadcast(seeds.select(id_col)), id_col)
-        .select(id_col, vec_col)
+        vecs.join(F.broadcast(tagged), id_col)
+        .select("g", id_col, vec_col)
         .collect()
     )
-    if not rows:
-        return None  # empty corpus/seed set -> empty codebook
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.int64)
-    cb = _Codebook(n_blocks, dsub)
-    for b in range(n_blocks):
-        cb.set_block(b, ids, mat[:, b * dsub : (b + 1) * dsub])
+    cb = _Codebook()
+    gs = np.array([r[0] for r in rows], dtype=np.int64)
+    ids = np.array([r[1] for r in rows], dtype=np.int64)
+    mat = np.array([r[2] for r in rows], dtype=np.int64)
+    for gb, (g, _, lo, hi) in enumerate(layout):
+        sel = gs == g
+        if sel.any():
+            cb.set_block(gb, ids[sel], mat[sel, lo:hi])
     return cb
 
 
 def _partials_pass(
-    vecs: DataFrame, cb_bc, *, vec_col: str, dims: int, n_blocks: int
+    vecs: DataFrame,
+    cb_bc,
+    *,
+    vec_col: str,
+    dims: int,
+    blocks: list[tuple[int, int, int]],
 ) -> DataFrame:
-    """One corpus pass: per-task partial (count, per-dim sum) rows per
-    (block, centroid) — codebook-sized output per task, combined by a
-    tiny JVM aggregation."""
-    dsub = dims // n_blocks
+    """One corpus pass over the ``blocks`` (global block, lo, hi):
+    per-task partial (count, per-dim sum) rows per (block, centroid) —
+    codebook-sized output per task, combined by a tiny JVM
+    aggregation."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cb: _Codebook = cb_bc.value
         counts = {
-            b: np.zeros(len(cb.cids[b]), dtype=np.int64)
-            for b in range(n_blocks)
+            b: np.zeros(len(cb.cids[b]), dtype=np.int64) for b, _, _ in blocks
         }
         sums = {
-            b: np.zeros((len(cb.cids[b]), dsub), dtype=np.int64)
-            for b in range(n_blocks)
+            b: np.zeros((len(cb.cids[b]), hi - lo), dtype=np.int64)
+            for b, lo, hi in blocks
         }
         for batch in batches:
             X = _list_to_matrix(batch.column(0), dims)
-            for b in range(n_blocks):
-                Xb = X[:, b * dsub : (b + 1) * dsub]
+            for b, lo, hi in blocks:
+                Xb = X[:, lo:hi]
                 idx = _assign_block(Xb, cb, b)
                 np.add.at(counts[b], idx, 1)
                 np.add.at(sums[b], idx, Xb)
-        bs, cids, ds, ms, ss = [], [], [], [], []
-        for b in range(n_blocks):
+        # Rows per hit centroid, one per dim: (b, cid, d, count, sum).
+        cols: list[list[np.ndarray]] = [[], [], [], [], []]
+        for b, lo, hi in blocks:
             hit = np.nonzero(counts[b])[0]
-            for i in hit:
-                bs.extend([b] * dsub)
-                cids.extend([int(cb.cids[b][i])] * dsub)
-                ds.extend(range(dsub))
-                ms.extend([int(counts[b][i])] * dsub)
-                ss.extend(int(x) for x in sums[b][i])
+            w = hi - lo
+            cols[0].append(np.full(hit.size * w, b, dtype=np.int32))
+            cols[1].append(np.repeat(cb.cids[b][hit], w))
+            cols[2].append(np.tile(np.arange(w, dtype=np.int32), hit.size))
+            cols[3].append(np.repeat(counts[b][hit], w))
+            cols[4].append(sums[b][hit].reshape(-1))
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(bs, pa.int32()),
-                pa.array(cids, pa.int64()),
-                pa.array(ds, pa.int32()),
-                pa.array(ms, pa.int64()),
-                pa.array(ss, pa.int64()),
-            ],
+            [pa.array(np.concatenate(c)) for c in cols],
             ["b", "cid", "d", "m", "s"],
         )
 
@@ -204,120 +227,154 @@ def _partials_pass(
     )
 
 
+def _update(
+    cb: _Codebook, rows: list, blocks: list[tuple[int, int, int]]
+) -> None:
+    """Replace each of ``blocks``' centroids by the truncated mean of
+    its members; centroids with no members drop out."""
+    arr = np.array(rows, dtype=np.int64).reshape(-1, 5)  # b, cid, d, m, s
+    for b, lo, hi in blocks:
+        sel = arr[arr[:, 0] == b]
+        if not len(sel):
+            raise ValueError(f"lloyd: block {b} lost every centroid")
+        sel = sel[np.lexsort((sel[:, 2], sel[:, 1]))]
+        w = hi - lo
+        # Every hit centroid has exactly one row per dim, so the sorted
+        # rows reshape to (centroids, w).
+        m = sel[::w, 3]
+        cb.set_block(
+            b, sel[::w, 1], _sdiv_np(sel[:, 4].reshape(-1, w), m[:, None])
+        )
+
+
+def _codebook_frame(
+    spark, blocks: list[tuple[int, np.ndarray, np.ndarray]]
+) -> DataFrame:
+    """One group's codebook as (b, cid, cvec) rows from its blocks'
+    (b, cids, centroid matrix). Built from an Arrow table, the frame is
+    a local relation: collecting, broadcasting or writing it needs no
+    Python worker, and a collect launches no job."""
+    table = pa.table(
+        {
+            "b": pa.array([b for b, c, _ in blocks for _ in c], pa.int32()),
+            "cid": pa.array(
+                [c for _, cids, _ in blocks for c in cids.tolist()], pa.int64()
+            ),
+            "cvec": pa.array(
+                [v for _, _, m in blocks for v in m.tolist()],
+                pa.list_(pa.int64()),
+            ),
+        }
+    )
+    return spark.createDataFrame(table, "b int, cid long, cvec array<long>")
+
+
 def train_blocks(
     vecs: DataFrame,
-    seeds: DataFrame,
+    groups: list[tuple[DataFrame, int, int]],
     *,
     id_col: str,
     vec_col: str,
     dims: int,
-    n_blocks: int,
-    iters: int,
-) -> DataFrame:
-    """``iters`` Lloyd rounds over ``vecs[(id_col, vec_col)]`` with the
-    vector split into ``n_blocks`` contiguous sub-vectors trained
-    independently (n_blocks=1 == plain k-means). ``seeds`` is the frame
-    of seed ids (centroid cid = seed id). Returns the final codebook as
-    a small DataFrame (b int, cid long, cvec array<long>) materialized
-    on the driver — codebook-sized, the MLlib-KMeans pattern.
+) -> list[DataFrame]:
+    """Lloyd training of every block group over the same
+    ``vecs[(id_col, vec_col)]``. Each group is ``(seeds, n_blocks,
+    iters)``: ``iters`` rounds with the vector split into ``n_blocks``
+    contiguous sub-vectors trained independently (n_blocks=1 == plain
+    k-means); ``seeds`` is the frame of seed ids (centroid cid = seed
+    id). Returns one final codebook per group as a small DataFrame
+    (b int, cid long, cvec array<long>) materialized on the driver —
+    codebook-sized, the MLlib-KMeans pattern.
 
-    Per round: ONE corpus pass (mapInArrow + NumPy argmin), one
-    codebook-sized aggregation, one driver-side exact-integer update.
-    Empty centroids drop out of the update deterministically, matching
-    the SQL formulation."""
+    One seed collect serves every group. Per round: ONE corpus pass
+    (mapInArrow + NumPy argmin) over the blocks of every group with
+    rounds left, one codebook-sized aggregation, one driver-side
+    exact-integer update per block. Blocks never interact, so each
+    group's codebook is the one it would get trained alone. Empty
+    centroids drop out of the update deterministically, matching the
+    SQL formulation; a group with no seed rows (empty corpus or seed
+    set) gets an empty codebook."""
     spark = vecs.sparkSession
     sc = spark.sparkContext
-    dsub = dims // n_blocks
+    layout = _layout(dims, [n for _, n, _ in groups])
     cb = _seed_codebook(
-        vecs, seeds, id_col=id_col, vec_col=vec_col, dims=dims,
-        n_blocks=n_blocks,
+        vecs, [s for s, _, _ in groups], layout, id_col=id_col, vec_col=vec_col
     )
-    if cb is None:
-        # Empty corpus/seed set: an empty codebook, matching the former
-        # dataflow (whose lazy frames simply carried zero rows through).
-        return spark.createDataFrame([], "b int, cid long, cvec array<long>")
-    for _ in range(iters):
+    iters = [it for _, _, it in groups]
+    for r in range(max(iters, default=0)):
+        blocks = [
+            (gb, lo, hi)
+            for gb, (g, _, lo, hi) in enumerate(layout)
+            if iters[g] > r and gb in cb.cids
+        ]
+        if not blocks:
+            break
         bc = sc.broadcast(cb)
         rows = (
-            _partials_pass(
-                vecs, bc, vec_col=vec_col, dims=dims, n_blocks=n_blocks
-            )
+            _partials_pass(vecs, bc, vec_col=vec_col, dims=dims, blocks=blocks)
             .groupBy("b", "cid", "d")
             .agg(F.sum("m").alias("m"), F.sum("s").alias("s"))
             .collect()
         )
         bc.destroy()
-        acc: dict[tuple[int, int], tuple[np.int64, np.ndarray]] = {}
-        sums: dict[tuple[int, int], np.ndarray] = {}
-        cnts: dict[tuple[int, int], int] = {}
-        for r in rows:
-            key = (r["b"], r["cid"])
-            s = sums.setdefault(key, np.zeros(dsub, dtype=np.int64))
-            s[r["d"]] = r["s"]
-            cnts[key] = r["m"]
-        cb_next = _Codebook(n_blocks, dsub)
-        per_block: dict[int, tuple[list, list]] = {
-            b: ([], []) for b in range(n_blocks)
-        }
-        for (b, cid), s in sums.items():
-            m = cnts[(b, cid)]
-            per_block[b][0].append(cid)
-            per_block[b][1].append(
-                _sdiv_np(s, np.full(dsub, m, dtype=np.int64))
-            )
-        for b in range(n_blocks):
-            ids, mats = per_block[b]
-            if not ids:
-                raise ValueError(f"lloyd: block {b} lost every centroid")
-            cb_next.set_block(
-                b, np.array(ids, dtype=np.int64), np.stack(mats)
-            )
-        cb = cb_next
-    out_rows = [
-        (int(b), int(cid), [int(x) for x in cvec])
-        for b in range(n_blocks)
-        for cid, cvec in zip(cb.cids[b], cb.mats[b])
+        _update(cb, rows, blocks)
+    return [
+        _codebook_frame(
+            spark,
+            [
+                (b, cb.cids[gb], cb.mats[gb])
+                for gb, (g2, b, _, _) in enumerate(layout)
+                if g2 == g and gb in cb.cids
+            ],
+        )
+        for g in range(len(groups))
     ]
-    return spark.createDataFrame(
-        out_rows, "b int, cid long, cvec array<long>"
-    )
 
 
 def assign_blocks(
     vecs: DataFrame,
-    cent: DataFrame,
+    groups: list[tuple[DataFrame, int]],
     *,
     id_col: str,
     vec_col: str,
     dims: int,
-    n_blocks: int,
 ) -> DataFrame:
-    """Encode every vector against a frozen codebook: one mapInArrow
-    pass emitting (id, b, cid) — the nearest centroid per block, exact
-    int64 squared-L2, ties to the smallest cid. Output schema keeps the
-    caller's id column name/type."""
+    """Encode every vector against frozen codebooks, one ``(cent,
+    n_blocks)`` per group: one mapInArrow pass emitting (id, g, b, cid)
+    — group g's nearest centroid per block, exact int64 squared-L2,
+    ties to the smallest cid. A group with an empty codebook
+    (empty-corpus build) emits no rows. Output keeps the caller's id
+    column name/type."""
     spark = vecs.sparkSession
-    dsub = dims // n_blocks
-    rows = cent.select("b", "cid", "cvec").collect()
-    cb = _Codebook(n_blocks, dsub)
-    by_b: dict[int, tuple[list, list]] = {b: ([], []) for b in range(n_blocks)}
-    for r in rows:
-        by_b[r["b"]][0].append(r["cid"])
-        by_b[r["b"]][1].append(r["cvec"])
-    if not rows:
-        # Empty codebook (empty-corpus build): empty assignment, the
-        # former dataflow's behavior.
-        id_type = vecs.select(id_col).schema[0].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"{id_col} {id_type}, b int, cid long"
+    layout = _layout(dims, [n for _, n in groups])
+    # One collect per group: a train_blocks codebook is a local
+    # relation, so these launch no job (a union of them would).
+    by_block: dict[tuple[int, int], list] = {}
+    for g, (cent, _) in enumerate(groups):
+        for b, cid, cvec in cent.select("b", "cid", "cvec").collect():
+            by_block.setdefault((g, b), []).append((cid, cvec))
+    present = {g for g, _ in by_block}
+    cb = _Codebook()
+    blocks = []
+    for gb, (g, b, lo, hi) in enumerate(layout):
+        if g not in present:
+            continue
+        if (g, b) not in by_block:
+            raise ValueError(
+                f"lloyd: group {g} has no centroids for block {b}"
+            )
+        cids, mats = zip(*by_block[(g, b)])
+        cb.set_block(
+            gb, np.array(cids, dtype=np.int64), np.array(mats, dtype=np.int64)
         )
-    for b in range(n_blocks):
-        ids, mats = by_b[b]
-        if not ids:
-            raise ValueError(f"lloyd: codebook has no centroids for block {b}")
-        cb.set_block(b, np.array(ids, dtype=np.int64), np.array(mats, dtype=np.int64))
-    bc = spark.sparkContext.broadcast(cb)
+        blocks.append((gb, g, b, lo, hi))
     id_type = vecs.select(id_col).schema[0].dataType.simpleString()
+    schema = f"{id_col} {id_type}, g int, b int, cid long"
+    if not blocks:
+        return spark.createDataFrame([], schema)
+    bc = spark.sparkContext.broadcast(cb)
+    gs = np.array([g for _, g, _, _, _ in blocks], dtype=np.int32)
+    bs = np.array([b for _, _, b, _, _ in blocks], dtype=np.int32)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cbv: _Codebook = bc.value
@@ -325,25 +382,21 @@ def assign_blocks(
             ids = batch.column(0)
             X = _list_to_matrix(batch.column(1), dims)
             n = len(ids)
-            out_cid = np.empty((n, n_blocks), dtype=np.int64)
-            for b in range(n_blocks):
-                idx = _assign_block(
-                    X[:, b * dsub : (b + 1) * dsub], cbv, b
-                )
-                out_cid[:, b] = cbv.cids[b][idx]
-            id_rep = pa.concat_arrays(
-                [ids] * n_blocks
-            ) if n_blocks > 1 else ids
-            # column-major repeat: block b's ids then block b+1's — order
-            # is irrelevant downstream (joins/aggregations), but keep it
-            # deterministic anyway.
-            bs = np.repeat(np.arange(n_blocks, dtype=np.int32), n)
-            cids = out_cid.T.reshape(-1)
+            # Block-major: every id for the first block, then the next —
+            # order is irrelevant downstream (joins/aggregations), but
+            # keep it deterministic anyway.
+            cids = [
+                cbv.cids[gb][_assign_block(X[:, lo:hi], cbv, gb)]
+                for gb, _, _, lo, hi in blocks
+            ]
             yield pa.RecordBatch.from_arrays(
-                [id_rep, pa.array(bs, pa.int32()), pa.array(cids, pa.int64())],
-                [id_col, "b", "cid"],
+                [
+                    pa.concat_arrays([ids] * len(blocks)),
+                    pa.array(np.repeat(gs, n)),
+                    pa.array(np.repeat(bs, n)),
+                    pa.array(np.concatenate(cids)),
+                ],
+                [id_col, "g", "b", "cid"],
             )
 
-    return vecs.select(id_col, vec_col).mapInArrow(
-        fn, f"{id_col} {id_type}, b int, cid long"
-    )
+    return vecs.select(id_col, vec_col).mapInArrow(fn, schema)

@@ -911,8 +911,9 @@ def impute_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB prune BOTH sides to LSH bucket-mates first, per the
     # docstring). Exactness: int64 throughout; the distance uses the
     # |m|²+|c|²−2·m·c expansion — exact integer arithmetic, equal to
-    # the oracle's Σ(m−c)² (integer adds commute); the (chunk × n_m)
-    # distance temp is row-chunked exactly like lloyd's assignment.
+    # the oracle's Σ(m−c)² (integer adds commute). Rows are chunked so
+    # that one chunk's (chunk × n_m) cells — the distance temp plus the
+    # four int64 columns emitted beside it — stay within 16M cells.
     import numpy as np
     import pyarrow as pa
 
@@ -929,7 +930,7 @@ def impute_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_ids = np.array([r[0] for r in mrows], dtype=np.int64)
     Msub = M[:, 1:]  # observed dims 2..64 (dim 1 is the masked one)
     msq = np.einsum("ij,ij->i", Msub, Msub)
-    step = max(1, 16_000_000 // max(1, n_m))
+    step = max(1, 16_000_000 // (5 * max(1, n_m)))
 
     def _pairs(batches):
         for b in batches:
@@ -1322,10 +1323,11 @@ def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunings multiply: scan cost drops by the cell factor AND each
     candidate costs a LUT lookup-sum instead of a 64-dim dot product,
     which is why a billion-vector store fits and answers. Spark shape:
-    ``ann._train`` trains both quantizers (on two driver threads — raw
-    codebooks share no state) and ``ann._adc_topk`` scans codes ⋈
-    broadcast LUT with the probed-cell equi-join as the candidate
-    filter. Everything is exact integer arithmetic end to end, so the
+    ``ann._train`` trains both quantizers in one grouped Lloyd call
+    (each round's single corpus pass serves the IVF block and every PQ
+    block — raw codebooks share no state) and ``ann._adc_topk`` scans
+    codes ⋈ broadcast LUT with the probed-cell equi-join as the
+    candidate filter. Everything is exact integer arithmetic end to end, so the
     composed pipeline stays bit-identical to the oracle's
     doubly-unrolled derivation."""
     n = _ann_corpus(spark, sf_dir)

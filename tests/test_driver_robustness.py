@@ -145,3 +145,41 @@ def test_missing_operator_module_fails_loudly(monkeypatch):
     )
     with pytest.raises(ModuleNotFoundError):
         registry.all_queries()
+
+
+#: Jobs one ``build_ann_index`` call may launch with the benchmark's
+#: raw IVF+PQ settings: the corpus checkpoint and count (2), the seed
+#: collect (2), two Lloyd rounds (partials map stage + collect each),
+#: the assignment checkpoint and four part writes. A budget: it may
+#: only be tightened.
+ANN_BUILD_JOB_BUDGET = 13
+
+
+def test_ann_build_job_budget_and_tags(spark, sf_dir, tmp_path):
+    """Every job of an ANN build runs on the caller's thread, so it
+    carries the caller's job group (no untagged jobs from a driver-side
+    pool), and the build stays within its job budget."""
+    from boltzmannclean_spark import build_ann_index
+    from boltzmannclean_spark.sources.catalog import load_table
+    from perfbench.workloads import ANN_BUILD
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    group = "test:ann_build_budget"
+    vecs = load_table(spark, sf_dir, "embeddings")
+    bus.waitUntilEmpty()
+    untagged_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "ann build job budget")
+    try:
+        build_ann_index(vecs, str(tmp_path / "idx"), **ANN_BUILD)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    untagged = set(tracker.getJobIdsForGroup(None)) - untagged_before
+    jobs = tracker.getJobIdsForGroup(group)
+    assert not untagged, f"{len(untagged)} ANN build jobs carry no job group"
+    assert 0 < len(jobs) <= ANN_BUILD_JOB_BUDGET, (
+        f"ANN build ran {len(jobs)} jobs, budget {ANN_BUILD_JOB_BUDGET}"
+    )

@@ -516,6 +516,31 @@ def test_ann_build_validates_dims(spark, ann_fixture):
             ann_search(spark, p, q, id_col="vid", vec_col="vec", nprobe=1)
 
 
+@pytest.mark.parametrize(
+    "build",
+    [
+        dict(n_cells=3, residual=False),
+        dict(n_cells=3, residual=True),
+        dict(),
+    ],
+    ids=["raw_ivfpq", "residual", "pure_pq"],
+)
+def test_ann_build_and_search_on_empty_corpus(spark, tmp_path, build):
+    """An empty corpus builds an empty index (meta ``n == 0``) that
+    searches to zero rows, for every build kind."""
+    import json
+    import os
+
+    from boltzmannclean_spark import ann_search, build_ann_index
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    path = build_ann_index(emb, str(tmp_path), dims=12, pq_m=3, pq_k=4, **build)
+    with open(os.path.join(path, "meta.json")) as fh:
+        assert json.load(fh)["n"] == 0
+    nprobe = 1 if build else None
+    assert ann_search(spark, path, emb, k=5, nprobe=nprobe).count() == 0
+
+
 # ---------------------------------------------------------------------------
 # round-8 session 2 API: perplexity_buckets / sprt_monitor / grid_knn_join /
 # holt_smooth with NON-fixture parameters, checked against brute-force
