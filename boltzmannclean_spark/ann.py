@@ -32,7 +32,7 @@ round-trips losslessly):
   parquet directories of those names plus ``meta.json``.
 - **score**: each query's exact block-distance LUT (queries×pq_m×pq_k
   rows, broadcast) against the codebook, candidates scored by a
-  code-table equi-join + sum (ADC), salted two-stage top-k. With
+  code-table equi-join + sum (ADC), one-window top-k. With
   ``nprobe`` the cell table restricts the scan to each query's
   ``nprobe`` nearest coarse cells — the multiplicative pruning that
   makes a billion-vector store answer. The serve plan contains ZERO
@@ -271,7 +271,7 @@ def _adc_topk(
     if nprobe is not None:
         # Query -> nprobe nearest cells: the centroid table is tiny, so
         # fan out queries×n_cells and keep the nprobe best per query
-        # (salted top-k; ties to the smaller cell id, matching the
+        # (ties to the smaller cell id, matching the
         # build's assignment tie-break).
         qcells = topk_per_key(
             q.crossJoin(F.broadcast(ivf_cent)).select(
@@ -282,7 +282,6 @@ def _adc_topk(
             keys=["qc_query"],
             order=[F.col("cdist"), F.col("cell")],
             k=nprobe,
-            salt_col="cell",
         ).select("qc_query", F.col("cell").alias("qcell"))
     self_filter = (
         (F.col("id") != F.col("query_id")) if exclude_self else F.lit(True)
@@ -399,7 +398,6 @@ def _adc_topk(
         keys=["query_id"],
         order=[F.col("adc_dist"), F.col("neighbor_id")],
         k=k,
-        salt_col="neighbor_id",
     ).orderBy("query_id", "rk")
 
 
@@ -554,7 +552,8 @@ def ann_search(
     (queries×pq_m×pq_k rows) is computed from its raw sub-vectors ×
     the codebook and broadcast; candidates are scored by a code-table
     equi-join + map-side partial-aggregated sum; the final top-k is
-    the salted two-stage reduction (never a single-partition window).
+    one window whose partial group limit runs below the Exchange, so
+    each map task ships at most k rows per query (k ≤ 1000).
 
     ``nprobe`` (requires an IVF build): assign each query to its
     ``nprobe`` nearest coarse cells via the stored centroids and
@@ -680,7 +679,6 @@ def tune_nprobe(
         keys=["query_id"],
         order=[F.desc("cosine"), F.col("neighbor_id")],
         k=k,
-        salt_col="neighbor_id",
     ).select("query_id", "neighbor_id").localCheckpoint()
     possible = truth.count()
     if possible == 0:

@@ -1,14 +1,12 @@
-"""Scale-safe per-key top-k.
+"""Per-key top-k as one ``row_number() OVER (PARTITION BY key)`` window.
 
-A single ``row_number() OVER (PARTITION BY key)`` is the textbook top-k,
-but when the key has low cardinality (5 query vectors) the window's
-Exchange lands the ENTIRE scored corpus for a key on one task — the
-classic single-partition scale-killer. The fix is the salted two-stage
-top-k: a deterministic salt splits each key into ``n_salt`` sub-groups,
-a local window keeps k rows per (key, salt), and the final window ranks
-only ``n_salt * k`` survivors per key. Shuffle volume is unchanged but
-the first Exchange spreads over ``|keys| * n_salt`` tasks, and the
-second moves a constant-size candidate set.
+A low-cardinality key (5 query vectors) would land the whole scored
+corpus for a key on one task if every row crossed the window's
+Exchange. It does not: for ``row_number() <= k`` with k at most
+``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default),
+Spark plans a partial ``WindowGroupLimit`` below the Exchange, so each
+map task ships at most k rows per key and the final window ranks
+``k * map tasks`` survivors per key.
 """
 
 from __future__ import annotations
@@ -24,24 +22,14 @@ def topk_per_key(
     keys: Sequence[str],
     order: Sequence[Column],
     k: int,
-    salt_col: str,
     rank_col: str = "rk",
-    n_salt: int = 32,
 ) -> DataFrame:
     """Top-k rows per ``keys`` under ``order`` (must be a total order —
-    include a unique tie-break column) without a single-partition-per-key
-    window. ``salt_col`` must be non-null; the salt is a deterministic
-    hash of it, so results are reproducible at any parallelism."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n_salt))
-    )
-    w_local = Window.partitionBy(*keys, "__salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("__lrk", F.row_number().over(w_local))
-        .where(F.col("__lrk") <= k)
-        .drop("__lrk", "__salt")
-    )
-    w_final = Window.partitionBy(*keys).orderBy(*order)
-    return pruned.withColumn(rank_col, F.row_number().over(w_final)).where(
+    include a unique tie-break column), ranked 1..k in ``rank_col``.
+    The map-side limit that keeps the Exchange small holds for k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000); above it
+    the result is the same but every row crosses the Exchange."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w)).where(
         F.col(rank_col) <= k
     )

@@ -309,7 +309,7 @@ def similarity_ann_pq_adc_prebuilt(spark: SparkSession, sf_dir: str) -> DataFram
     rows, broadcast) and code table; compute each query's exact
     block-distance LUT from its raw sub-vectors x the codebook
     (queries x PQ_M x PQ_K rows, broadcast); score candidates by a
-    code-table equi-join + sum; salted top-k. Scan cost is linear in
+    code-table equi-join + sum; one-window top-k. Scan cost is linear in
     the CODE table (1 byte/block/vector at scale), and the only
     shuffle is the per-query partial-aggregated ADC sum. Results are
     bit-identical to the train-in-query variant (the artifact is exact
@@ -331,7 +331,7 @@ def similarity_ann_pq_adc_prebuilt(spark: SparkSession, sf_dir: str) -> DataFram
 def _exact_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Recall ground truth: each query's exact integer-L2 top-TOP_K
     (query_id, neighbor_id), self excluded — one corpus pass against
-    the broadcast query set, salted top-k."""
+    the broadcast query set, one-window top-k."""
     corpus = emb.select(
         "vec_id", _quantize(F.col("embedding"), MICRO).alias("qvec")
     )
@@ -353,7 +353,6 @@ def _exact_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
         keys=["query_id"],
         order=[F.col("dist"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_col="neighbor_id",
     ).select("query_id", "neighbor_id")
 
 
@@ -412,7 +411,7 @@ def similarity_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade on the served index so an nprobe/pq_k change is a measured
     decision, not a guess. Composes the PUBLIC lifecycle (ann_search on
     the ensure_ann_index artifact) with a brute-force exact leg:
-    corpus ⋈ broadcast(query set) integer distances, salted top-k —
+    corpus ⋈ broadcast(query set) integer distances, top-k —
     at 100 TB the exact leg runs on a SAMPLED query set (as here:
     N_QUERY probes), which is exactly how recall is audited in
     production (the corpus-side scan stays one linear pass). Output:
@@ -696,8 +695,8 @@ def similarity_ann_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFra
     ONE brute-force pass over the corpus against the broadcast sampled
     query set — at 100 TB the curve is audited on exactly such a query
     sample while the corpus side stays a single linear scan shared by
-    all probe points. The per-(nprobe, query) top-k is salted
-    (topk_per_key), never a single-partition window."""
+    all probe points. The per-(nprobe, query) top-k (topk_per_key)
+    limits each map task to k rows per key below the Exchange."""
     path = ensure_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERY)

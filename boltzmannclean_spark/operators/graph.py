@@ -5,8 +5,9 @@ Every operator starts from one private builder per graph:
 - Customer↔supplier (an order links its customer to the suppliers of
   its line items). ``_cust_supp_pairs`` is the distinct
   (o_custkey, l_suppkey) pair set (degree distribution, HITS);
-  ``_cust_supp_edges`` turns it into the cached (src, dst, d) edge
-  list, both directions, with the source degree riding on each edge
+  ``_cust_supp_edges`` turns it into the pinned (src, dst, d) edge
+  list, both directions, hash-partitioned on src, with the source
+  degree riding on each edge
   (PageRank, personalized PageRank, Katz, BFS, label propagation,
   harmonic centrality, both HyperBall queries). Node ids there are
   LONGS, customers 2·custkey and suppliers 2·suppkey+1: long keys hash
@@ -27,10 +28,13 @@ destination (map-side combined). The state GROWS with the graph, so
 that join is a shuffle hash join and is never broadcast — a
 billion-node state would OOM every executor (SCALING.md's iterative
 contract: anything that grows with data volume is left to the
-shuffle). Each iteration is one pass over the cached edges plus two
-narrow-key shuffles, and the state is localCheckpoint'ed so lineage
-stays one iteration deep. The HyperBall queries share one register
-init (``_hb_registers``) and one groupBy-MAX merge hop (``_hb_merge``).
+shuffle). The edges are pinned hash-partitioned on src (``_pin``),
+so a state partitioned on node joins them with no Exchange on the edge
+side. PageRank checkpoints no step (its lineage is N_ITER hops deep,
+so one action runs every hop as one plan); the other loops
+localCheckpoint their state each iteration. The HyperBall queries
+share one register init (``_hb_registers``) and one groupBy-MAX merge
+hop (``_hb_merge``).
 
 Cross-engine determinism: iteration state is integer. Ranks live in
 micro-units (node budget 1e9), per-edge contribution is rank div
@@ -135,21 +139,46 @@ def _cust_supp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pin(df: DataFrame) -> DataFrame:
+    """``df`` pinned by localCheckpoint(eager=False): its blocks live as
+    long as a plan references it and the ContextCleaner reaps them
+    after. The checkpoint is planned with AQE off because an adaptive
+    plan reports no output partitioning, and the pinned scan would
+    then forget the hash partitioning its joins reuse (the session
+    setting is restored before returning; the engine plans from one
+    driver thread). Nothing runs until the first action reads it."""
+    spark = df.sparkSession
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.localCheckpoint(eager=False)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def _cust_supp_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cached (src, dst, d) customer↔supplier edge list: every pair
+    """The pinned (src, dst, d) customer↔supplier edge list: every pair
     in both directions over long node ids (customers 2·custkey,
-    suppliers 2·suppkey+1), with d = degree of src. Degree rides ON the
-    edges so the one structure every iteration scans is built with a
-    single extra shuffle and pinned once; every dst is also a src, so
-    no iteration leaks mass into a dangling node."""
-    eo = _cust_supp_pairs(spark, sf_dir)
-    c = F.col("o_custkey") * 2
-    s = F.col("l_suppkey") * 2 + 1
-    edges = eo.select(c.alias("src"), s.alias("dst")).unionAll(
-        eo.select(s.alias("src"), c.alias("dst"))
+    suppliers 2·suppkey+1), with d = degree of src. The pairs are
+    planned once and ``stack`` emits both directions from that one
+    pass; the edges are hash-partitioned on src once, so the degree is
+    a window count over each src's partition (no second pass) and every
+    ``_hop`` joins them with no Exchange on the edge side. Every dst is
+    also a src, so no iteration leaks mass into a dangling node."""
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = (
+        _cust_supp_pairs(spark, sf_dir)
+        .select(
+            F.expr(
+                "stack(2, o_custkey * 2, l_suppkey * 2 + 1,"
+                " l_suppkey * 2 + 1, o_custkey * 2) AS (src, dst)"
+            )
+        )
+        .repartition(n_parts, "src")
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    return edges.join(deg, "src").select("src", "dst", "d").cache()
+    return _pin(
+        edges.withColumn("d", F.count(F.lit(1)).over(Window.partitionBy("src")))
+    )
 
 
 def _node_label(col: str) -> Column:
@@ -227,28 +256,23 @@ LIMIT {TOP_N}
 """
 
 
-def _pagerank_state(ed: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _pagerank_state(ed: DataFrame) -> tuple[DataFrame, int]:
     """PageRank's initial state over the edge list: the uniform rank
-    vector and the 1-row node count (the only broadcast, being truly
-    constant-sized). The node set is localCheckpoint'ed so every
-    iteration re-reads pinned partitions."""
-    nodes = ed.select("src").distinct().localCheckpoint()
-    n = nodes.agg(F.count(F.lit(1)).alias("n_nodes")).localCheckpoint()
-    r = nodes.crossJoin(F.broadcast(n)).select(
-        F.col("src").alias("node"), F.expr(f"{RSCALE} div n_nodes").alias("r")
-    )
-    return r, n
+    vector, partitioned like the edges, and the node count as a
+    driver-side integer (one count job), which every step folds into a
+    literal."""
+    nodes = ed.select(F.col("src").alias("node")).distinct()
+    n = nodes.count()
+    return nodes.select("node", F.lit(RSCALE // max(n, 1)).cast("long").alias("r")), n
 
 
-def _pagerank_step(ed: DataFrame, r: DataFrame, n: DataFrame) -> DataFrame:
+def _pagerank_step(ed: DataFrame, r: DataFrame, n: int) -> DataFrame:
     """One power-iteration step: per-edge ``r div d`` summed at dst, then
-    the damping mix against the 1-row node count."""
+    the damping mix against the node count ``n``."""
     contrib = _hop(ed, r, F.sum(F.expr("r div d")).alias("contrib"))
-    return contrib.crossJoin(F.broadcast(n)).select(
+    return contrib.select(
         "node",
-        F.expr(
-            f"(15 * ({RSCALE} div n_nodes) + 85 * contrib) div 100"
-        ).alias("r"),
+        F.expr(f"(15 * {RSCALE // max(n, 1)}L + 85 * contrib) div 100").alias("r"),
     )
 
 
@@ -259,11 +283,12 @@ def _pagerank_step(ed: DataFrame, r: DataFrame, n: DataFrame) -> DataFrame:
 )
 def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration PageRank (damping 0.85) over the customer↔supplier
-    graph; returns the top-25 nodes by rank."""
+    graph; returns the top-25 nodes by rank. No step is checkpointed:
+    the caller's action runs all N_ITER hops as one plan."""
     ed = _cust_supp_edges(spark, sf_dir)
     r, n = _pagerank_state(ed)
     for _ in range(N_ITER):
-        r = _pagerank_step(ed, r, n).localCheckpoint()
+        r = _pagerank_step(ed, r, n)
     return (
         r.select(_node_label("node").alias("node"), F.col("r").alias("rank_micro"))
         .orderBy(F.desc("rank_micro"), "node")
@@ -465,7 +490,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     source — the reachability/neighborhood primitive behind fraud-ring
     expansion and supply-chain blast-radius queries. The frontier loop
     is the canonical distributed BFS: per level, ONE equi-join of the
-    (small) frontier against the cached edge list + one anti-join
+    (small) frontier against the pinned edge list + one anti-join
     against the visited set, both keyed on node id — never a full
     transitive closure. The frontier is distributed (it can be
     graph-sized on small-world graphs — level 2 here already reaches
@@ -787,10 +812,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest-label ties via max_by over (count, -lbl)."""
     ed = _cust_supp_edges(spark, sf_dir)
     nodes = ed.select("src").distinct()
-    edges = (
-        ed.select("src", "dst")
-        .unionAll(nodes.select("src", F.col("src").alias("dst")))
-        .cache()
+    edges = _pin(
+        ed.select("src", "dst").unionAll(nodes.select("src", F.col("src").alias("dst")))
     )
     labels = nodes.select(
         F.col("src").alias("node"), F.col("src").alias("lbl")
@@ -1586,11 +1609,10 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking while every score is bit-identical at any parallelism
     (string-hopped to double only for display).
 
-    Each half-iteration is one ``_hop`` over the cached distinct pairs.
-    Top-25 per role via per-role row_number over the vector — at an
-    unbounded node domain route through functions/topk.py's salted
-    top-k (the similarity_cosine_topk path)."""
-    eo = _cust_supp_pairs(spark, sf_dir).cache()
+    Each half-iteration is one ``_hop`` over the pinned distinct pairs.
+    Top-25 per role via a global row_number over that role's vector;
+    a keyed top-k would route through functions/topk.py."""
+    eo = _pin(_cust_supp_pairs(spark, sf_dir))
     a = eo.select(F.col("l_suppkey").alias("node")).distinct().select(
         "node", F.lit(1).cast("decimal(38,0)").alias("v")
     )

@@ -3,7 +3,10 @@ SURVEY.md §2.A). Imputation output depends on random init/noise, so —
 exactly like upstream's own tests — these are rows-only checks (the
 driver records count+schema); the behavioral invariants (no nulls
 remain, observed cells untouched, categorical fills from vocabulary)
-are asserted in tests/test_imputer.py.
+are asserted in tests/test_imputer.py. The RBM queries sort their
+input, not the transform's output: the transform is one narrow
+mapInPandas that keeps row order, and a range sort over it would run
+the imputation again in the range sampler's job.
 """
 
 from __future__ import annotations
@@ -49,7 +52,7 @@ def impute_rbm_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_epochs=10,
         seed=42,
     ).fit(holed)
-    return model.transform(holed).orderBy("c_custkey")
+    return model.transform(holed.orderBy("c_custkey"))
 
 
 @register(
@@ -71,7 +74,7 @@ def impute_rbm_distributed_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed=42,
         distributed_fit=True,
     ).fit(holed)
-    return model.transform(holed).orderBy("c_custkey")
+    return model.transform(holed.orderBy("c_custkey"))
 
 
 @register(
@@ -97,7 +100,7 @@ def impute_rbm_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
         param_grid=[{"n_hidden": 4}, {"n_hidden": 8, "learn_rate": 0.05}],
     )
     model = imputer.fit(holed)
-    return model.transform(holed).orderBy("c_custkey")
+    return model.transform(holed.orderBy("c_custkey"))
 
 
 @register(
@@ -428,7 +431,7 @@ def impute_rbm_pipeline_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(tempfile.mkdtemp(prefix="bcs_rbm_model_"), "rbm")
     pm.stages[0].save(path)
     reloaded = RBMImputerModel.load(path)
-    return reloaded.transform(holed).orderBy("c_custkey")
+    return reloaded.transform(holed.orderBy("c_custkey"))
 
 
 MICE_ROUNDS = 2

@@ -7,7 +7,9 @@ round-trip); these queries exist to prove the escape hatches work and
 stay oracle-exact. Determinism rules: per-row IEEE arithmetic is
 bit-stable everywhere; aggregations inside Python accumulate integer
 cents (exact for the 2-decimal data) so partition order can't change
-the result.
+the result. Row-wise Python steps run after the ORDER BY, not before
+it: a range sort over a Python pass runs that pass twice (once in the
+range sampler's job), and these steps keep their input's row order.
 """
 
 from __future__ import annotations
@@ -49,12 +51,12 @@ def udf_scalar_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"))
+        .orderBy("o_orderpriority")
         .select(
             "o_orderpriority",
             priority_rank("o_orderpriority").alias("priority_rank"),
             "n_orders",
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -83,12 +85,12 @@ def udf_pandas_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_quantity") >= 49)
+        .orderBy("l_orderkey", "l_linenumber")
         .select(
             "l_orderkey",
             "l_linenumber",
             net_price("l_extendedprice", "l_discount").alias("net_price"),
         )
-        .orderBy("l_orderkey", "l_linenumber")
     )
 
 
@@ -255,11 +257,10 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     cust = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") < 200)
-    out = cust.mapInArrow(
+    return cust.orderBy("c_custkey").mapInArrow(
         enrich,
         "c_custkey BIGINT, c_name STRING, name_len INT, bal_cents BIGINT",
     )
-    return out.orderBy("c_custkey")
 
 
 @register(
@@ -387,13 +388,13 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("c_acctbal") < 0, 1).otherwise(0)
             ).alias("n_negative"),
         )
+        .orderBy("c_mktsegment")
         .select(
             "c_mktsegment",
             "n_customers",
             "n_negative",
             segment_code("c_mktsegment").alias("segment_code"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -430,12 +431,12 @@ def udf_pandas_iterator(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_quantity") >= 49)
+        .orderBy("l_orderkey", "l_linenumber")
         .select(
             "l_orderkey",
             "l_linenumber",
             taxed_net("l_extendedprice", "l_discount").alias("taxed_net"),
         )
-        .orderBy("l_orderkey", "l_linenumber")
     )
 
 

@@ -1019,7 +1019,7 @@ def sample_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-class ranking is a window on the label key — at 100 TB, rank
     only what you might keep: pre-filtering each class to a hash
     PREFIX (e.g. first-byte buckets ≈ 2×floor rows) before the window
-    bounds the sort, the same trick as the salted top-k. Output
+    bounds the sort. Output
     reports per-class kept counts plus an id-sum fingerprint so the
     oracle verifies the exact membership, not just the size."""
     emb = load_table(spark, sf_dir, "embeddings")

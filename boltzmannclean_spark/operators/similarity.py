@@ -86,11 +86,11 @@ ORDER BY query_id, rk
 )
 def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast query vectors against the
-    corpus, then salted two-stage top-k per query — with only N_QUERY
-    keys, a plain per-query window would land the whole scored corpus
-    on N_QUERY tasks (the round-2 bench regression); the salted local
-    stage keeps all 32 cores busy and the final window ranks only
-    n_salt * k survivors per query."""
+    corpus, then one per-query top-k window. With only N_QUERY keys
+    the window's Exchange could land the whole scored corpus on
+    N_QUERY tasks; Spark's partial group limit below that Exchange
+    keeps k rows per query per map task, so the final window ranks
+    only k * map tasks survivors per query (functions/topk.py)."""
     from boltzmannclean_spark.pipeline import cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -226,7 +226,6 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["query_id"],
         order=[F.desc("cosine"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_col="neighbor_id",
     ).orderBy("query_id", "rk")
 
 
@@ -463,7 +462,6 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["query_id"],
         order=[F.desc("cosine"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_col="neighbor_id",
     ).orderBy("query_id", "rk")
 
 
@@ -585,7 +583,6 @@ def similarity_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["query_id"],
         order=[F.desc("cosine"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_col="neighbor_id",
     ).orderBy("query_id", "rk")
 
 
@@ -969,7 +966,6 @@ def impute_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["m_id"],
             order=[F.col("dist_sq"), F.col("c_id")],
             k=KNN_K,
-            salt_col="c_id",
             rank_col="rn",
         )
         .groupBy("m_id")
@@ -1479,8 +1475,8 @@ def pairs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter of a plain top-k.
 
     Scale: anchors broadcast against the corpus scan (one pass);
-    ranking via the salted two-stage top-k (functions/topk.py) — no
-    single-partition-per-anchor window. For corpus-scale anchor sets,
+    ranking via functions/topk.py, whose partial group limit keeps k
+    rows per anchor per map task before the window's Exchange. For corpus-scale anchor sets,
     swap the brute-force scan for the IVF-bucketed path
     (ann_search + label filter) exactly as similarity_cosine_topk
     documents; the mining semantics are unchanged."""
@@ -1516,7 +1512,6 @@ def pairs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["query_id"],
         order=[F.desc("cosine"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_col="neighbor_id",
     ).select(
         "query_id",
         "query_label",
@@ -1644,7 +1639,7 @@ def similarity_ann_nprobe_autotune(spark: SparkSession, sf_dir: str) -> DataFram
     Plan economics: the candidate table is scored ONCE at the ladder
     maximum with each candidate tagged by its cell's probe rank
     (corpus cell assignment is unique, so (query, neighbor) appears
-    exactly once); every rung is then a FILTER + salted top-k over
+    exactly once); every rung is then a FILTER + top-k over
     that one table — the sweep costs one IVF search at max(nprobe)
     plus ladder-many grid-sized reductions, not ladder-many searches.
     Ground truth is the exact top-k for the {N_QUERY}-query probe set
@@ -1713,7 +1708,6 @@ def similarity_ann_nprobe_autotune(spark: SparkSession, sf_dir: str) -> DataFram
         keys=["query_id"],
         order=[F.desc("cosine"), F.col("neighbor_id")],
         k=TOP_K,
-        salt_col="neighbor_id",
     ).select("query_id", "neighbor_id")
     possible = truth.agg(F.count(F.lit(1)).cast("long").alias("possible"))
     rungs = None
@@ -1723,7 +1717,6 @@ def similarity_ann_nprobe_autotune(spark: SparkSession, sf_dir: str) -> DataFram
             keys=["query_id"],
             order=[F.desc("cosine"), F.col("neighbor_id")],
             k=TOP_K,
-            salt_col="neighbor_id",
         ).select("query_id", "neighbor_id")
         h = (
             topp.join(truth, ["query_id", "neighbor_id"])

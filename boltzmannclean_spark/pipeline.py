@@ -15,7 +15,7 @@ thresholds::
 Every function is DataFrame-in / DataFrame-out, builds a declarative
 plan (Catalyst optimizes it; nothing collects to the driver), and keeps
 the scale posture documented on the registry twin: banded/blocked
-candidate generation, salted top-k, broadcast-sized dictionaries. The
+candidate generation, map-side-limited top-k, broadcast-sized dictionaries. The
 registry queries call these with their module constants, so the oracle
 suite continuously verifies the exact code paths users run
 (tests/test_pipeline_api.py pins that delegation plus custom-parameter
@@ -397,10 +397,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force cosine top-k similarity search: broadcast the query
     vectors against the corpus, score every (query, candidate) pair,
-    then salted two-stage top-k per query — a plain per-query window
-    would land the whole scored corpus on |queries| tasks; the salted
-    local stage keeps every core busy and the final window ranks only
-    n_salt * k survivors per query. ``queries`` shares the corpus
+    then one per-query top-k window; Spark's partial group limit
+    below its Exchange keeps k rows per query per map task (k ≤ 1000),
+    so the scored corpus never lands on |queries| tasks. ``queries`` shares the corpus
     schema (id + vector columns); a query never matches itself.
     Returns (query_id, neighbor_id[, neighbor_label], cosine, rk)."""
     proj = [
@@ -438,7 +437,6 @@ def cosine_topk(
         keys=["query_id"],
         order=[F.desc("cosine"), F.col("neighbor_id")],
         k=k,
-        salt_col="neighbor_id",
     ).orderBy("query_id", "rk")
 
 

@@ -17,6 +17,13 @@ findings the way a reviewer would read ``.explain("formatted")``:
   the scan (expression not convertible, or a cast blocking pushdown).
 - ``many-shuffles`` (info): more than ``shuffle_budget`` hash
   exchanges — not wrong, but each one is a full network pass at scale.
+- ``python-pass-rerun`` (warn): a rangepartitioning Exchange whose
+  input stage (down to the next Exchange, checkpointed ``Scan
+  ExistingRDD`` or ``InMemoryTableScan``) holds a Python exec node
+  (MapInPandas, MapInArrow, ArrowEvalPython, BatchEvalPython,
+  FlatMapGroupsInPandas, ...). The range sampler runs that stage in a
+  job of its own, so every Python task runs twice; sort below the
+  Python pass instead. Found by walking the plan tree, not its string.
 
 Used by tests/test_plan_lint.py as a fleet-wide gate over every
 registered query, with an explicit allowlist for the documented
@@ -26,6 +33,7 @@ product fails CI, not the cluster.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -38,12 +46,59 @@ class Finding:
     detail: str
 
 
-def _physical_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+#: Node names of the physical operators that run Python workers.
+_PYTHON_EXEC = re.compile(r"Python|InPandas|InArrow")
+#: Nodes whose output is already materialized when a job reads it: the
+#: leaves of a stage as far as re-running its work is concerned.
+_STAGE_LEAVES = {
+    "Exchange",
+    "BroadcastExchange",
+    "ReusedExchange",
+    "Scan ExistingRDD",
+    "InMemoryTableScan",
+    "ShuffleQueryStage",
+    "BroadcastQueryStage",
+    "TableCacheQueryStage",
+}
+
+
+def _children(node) -> list:
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name == "ResultQueryStage":
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _stage_python_nodes(node) -> list[str]:
+    """Python exec nodes from ``node`` down to its stage's leaves."""
+    name = node.nodeName()
+    if name in _STAGE_LEAVES:
+        return []
+    found = [name] if _PYTHON_EXEC.search(name) else []
+    for child in _children(node):
+        found += _stage_python_nodes(child)
+    return found
+
+
+def _python_pass_reruns(node) -> list[str]:
+    """Python exec nodes in the input stage of every rangepartitioning
+    Exchange in the tree under ``node``."""
+    found = []
+    if node.nodeName() == "Exchange" and node.outputPartitioning().toString().startswith(
+        "rangepartitioning"
+    ):
+        found += _stage_python_nodes(node.child())
+    for child in _children(node):
+        found += _python_pass_reruns(child)
+    return found
 
 
 def lint_plan(df: DataFrame, shuffle_budget: int = 6) -> list[Finding]:
-    plan = _physical_plan(df)
+    executed = df._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
     findings: list[Finding] = []
 
     if "CartesianProduct" in plan:
@@ -83,6 +138,17 @@ def lint_plan(df: DataFrame, shuffle_budget: int = 6) -> list[Finding]:
                 "warn",
                 "parquet scan with PushedFilters: [] below a Filter node — "
                 "predicate not pushed (cast/expression blocks conversion?)",
+            )
+        )
+
+    rerun = _python_pass_reruns(executed)
+    if rerun:
+        findings.append(
+            Finding(
+                "python-pass-rerun",
+                "warn",
+                f"range sort directly over a Python pass ({', '.join(rerun)}): "
+                "the range sampler's job runs it a second time; sort below it",
             )
         )
 

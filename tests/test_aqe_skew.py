@@ -138,7 +138,7 @@ def test_aqe_skew_split_blocked_under_aggregation(
     a partial read of a reducer partition under an agg would emit the
     same group twice. AQE handles the bare-join case; aggregated and
     windowed shapes must de-skew in the plan (bucketed sessionization,
-    salted top-k)."""
+    the map-side limited top-k)."""
     e = _hot_events(spark, oracle_sf_dir)
     counts = e.groupBy("uid").agg(F.count(F.lit(1)).alias("n_events"))
     joined = e.join(counts, "uid").select("uid", "event_id", "n_events")

@@ -183,3 +183,36 @@ def test_ann_build_job_budget_and_tags(spark, sf_dir, tmp_path):
     assert 0 < len(jobs) <= ANN_BUILD_JOB_BUDGET, (
         f"ANN build ran {len(jobs)} jobs, budget {ANN_BUILD_JOB_BUDGET}"
     )
+
+
+#: Jobs of one ``graph_pagerank_bipartite`` call plus a noop write: the
+#: parquet footer read, the ``orders`` broadcast and the node count
+#: (which also fills the pinned edges) while building, then one
+#: destination-aggregate stage per hop and the final top-25 in the
+#: write. A budget: it may only be tightened.
+PAGERANK_JOB_BUDGET = 9
+
+
+def test_pagerank_job_budget(spark, sf_dir):
+    """PageRank builds its edges once, counts its nodes on the driver
+    and checkpoints no step, so the whole query runs a fixed handful of
+    jobs instead of four per iteration."""
+    from boltzmannclean_spark.plans.registry import all_queries
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    group = "test:pagerank_budget"
+    bus.waitUntilEmpty()
+    sc.setJobGroup(group, "pagerank job budget")
+    try:
+        df = all_queries()["graph_pagerank_bipartite"].spark_fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= PAGERANK_JOB_BUDGET, (
+        f"PageRank ran {len(jobs)} jobs, budget {PAGERANK_JOB_BUDGET}"
+    )

@@ -51,7 +51,6 @@ def _reference_rows(spark, sf_dir):
             keys=["m_id"],
             order=[F.col("dist_sq"), F.col("c_id")],
             k=KNN_K,
-            salt_col="c_id",
             rank_col="rn",
         )
         .groupBy("m_id")

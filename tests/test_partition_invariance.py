@@ -220,7 +220,7 @@ INVARIANT_QUERIES = (
     "stats_g_test",
     # batch 9: deterministic time-split train/eval with exact counts.
     "events_markov_eval",
-    # batch 10: per-pair IEEE cosine trees under the salted top-k.
+    # batch 10: per-pair IEEE cosine trees under the per-query top-k.
     "pairs_hard_negatives",
     # batch 11 (r14): exact bucket-offset global rank (the split must
     # not depend on physical layout — the whole point of deriving rank

@@ -171,10 +171,11 @@ def test_profile_columns_single_scan(spark, sf_dir):
 
 def test_pagerank_no_cartesian_blowup(spark, sf_dir):
     # Power iteration must stay equi-join + aggregate per iteration;
-    # the only nested-loop join allowed is the 1-row n_nodes broadcast.
+    # the node count is a literal, so no nested-loop join is left.
     df = QUERIES["graph_pagerank_bipartite"].spark_fn(spark, sf_dir)
     plan = _plan(df)
     assert "CartesianProduct" not in plan, plan
+    assert "NestedLoopJoin" not in plan, plan
 
 
 #: Every operator whose iteration runs through graph._hop, with the
@@ -243,7 +244,7 @@ def test_pagerank_conserves_rank_mass(spark, sf_dir):
     from pyspark.sql import functions as F
 
     ed = _cust_supp_edges(spark, sf_dir)
-    r, n = _pagerank_state(ed)
+    r, n_nodes = _pagerank_state(ed)
     dangling = (
         ed.select("dst")
         .distinct()
@@ -252,10 +253,9 @@ def test_pagerank_conserves_rank_mass(spark, sf_dir):
     )
     assert dangling == 0, f"{dangling} dst-only nodes would leak rank mass"
     n_edges = ed.count()
-    n_nodes = n.collect()[0]["n_nodes"]
     loss_bound = n_edges + n_nodes
     for _ in range(N_ITER):
-        r = _pagerank_step(ed, r, n).localCheckpoint()
+        r = _pagerank_step(ed, r, n_nodes).localCheckpoint()
         total = r.agg(F.sum("r").alias("t")).collect()[0]["t"]
         assert RSCALE - loss_bound * (N_ITER + 1) <= total <= RSCALE, (
             f"rank mass {total} outside envelope [{RSCALE - loss_bound}, {RSCALE}]"
@@ -347,11 +347,11 @@ def test_ivf_assignment_partial_aggregates_before_shuffle(spark, sf_dir):
         assert "partial_" in plan, name + " lost map-side partials:\n" + plan
 
 
-def test_similarity_topk_is_salted_two_stage(spark, sf_dir):
+def test_similarity_topk_limits_rows_below_the_exchange(spark, sf_dir):
     # Per-query top-k must not funnel the scored corpus into one task
-    # per query (N_QUERY=5): the salted local stage windows over
-    # (query_id, __salt) first, so the plan has TWO row_number windows
-    # and the bare query_id window only ranks the pruned survivors.
+    # per query (N_QUERY=5): functions/topk.py's one row_number window
+    # gets a Partial WindowGroupLimit BELOW its query_id Exchange, so
+    # each map task ships at most k rows per query.
     for name in (
         "similarity_cosine_topk",
         "similarity_ann_lsh",
@@ -359,7 +359,21 @@ def test_similarity_topk_is_salted_two_stage(spark, sf_dir):
         "similarity_ann_ivf_nprobe",
     ):
         plan = _plan(QUERIES[name].spark_fn(spark, sf_dir))
-        assert "__salt" in plan, name + " missing salted local top-k:\n" + plan
+        lines = plan.splitlines()
+        ex = next(
+            (i for i, ln in enumerate(lines) if "Exchange hashpartitioning(query_id" in ln),
+            None,
+        )
+        assert ex is not None, name + " has no query_id exchange:\n" + plan
+        depth = len(lines[ex]) - len(lines[ex].lstrip(" :+-"))
+        below = []
+        for ln in lines[ex + 1 :]:
+            if len(ln) - len(ln.lstrip(" :+-")) <= depth or "Exchange" in ln:
+                break
+            below.append(ln)
+        assert any("WindowGroupLimit" in ln and "Partial" in ln for ln in below), (
+            name + " lost the map-side top-k limit:\n" + plan
+        )
 
 
 def test_partitioned_events_read_prunes_date_range(spark, sf_dir):

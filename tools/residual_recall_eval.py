@@ -135,7 +135,6 @@ def main() -> int:
                 keys=["query_id"],
                 order=[F.desc("cosine"), F.col("neighbor_id")],
                 k=TOP_K,
-                salt_col="neighbor_id",
             ).select("query_id", "neighbor_id")
             hits = truth.join(adc, ["query_id", "neighbor_id"]).count()
             possible = truth.count()
