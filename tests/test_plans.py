@@ -193,7 +193,7 @@ _HOP_USERS = {
 def test_hop_state_join_is_never_broadcast(spark, sf_dir, monkeypatch, name):
     # The iteration state is node-count sized — it GROWS with the
     # graph, so the state⋈edges join must be a shuffle join (a forced
-    # broadcast is a guaranteed OOM at billions of nodes). The
+    # broadcast is a guaranteed OOM at billions of nodes). Most
     # registered plans end at localCheckpoint scans, so the loop's
     # joins are invisible there: record the plan of every hop the
     # operator actually runs. Other joins (edges⋈degree in the edge
