@@ -20,43 +20,60 @@ Layout:
     streaming/    — Structured Streaming ops over the events table
 """
 
+import importlib
+
 __version__ = "0.1.0"
 
 # Parameterized LLM-data-pipeline operators (pipeline.py): the public
 # DataFrame-in/DataFrame-out library surface. The query registry
 # instantiates these same functions with fixture constants, so the
 # oracle suite continuously verifies the exact code paths users run.
-from boltzmannclean_spark.pipeline import (  # noqa: E402,F401
-    ann_search,
-    apriori_triples,
-    bm25_topk,
-    build_ann_index,
-    cosine_topk,
-    exact_dedup,
-    grid_knn_join,
-    hampel_filter,
-    holt_smooth,
-    ks_two_sample,
-    language_id,
-    mann_whitney_u,
-    minhash_dedup,
-    permutation_test,
-    perplexity_buckets,
-    psi_drift,
-    quality_filter,
-    semantic_dedup,
-    sessionize,
-    sprt_monitor,
-    substring_dedup,
-    token_stats,
-    welch_ttest,
+# They are served on first access (PEP 562), so importing the package
+# loads no PySpark: the Python worker daemon (worker_daemon.py) runs
+# inside this package and must edit sys.path before PySpark is imported.
+_PIPELINE = (
+    "ann_search",
+    "apriori_triples",
+    "bm25_topk",
+    "build_ann_index",
+    "cosine_topk",
+    "exact_dedup",
+    "grid_knn_join",
+    "hampel_filter",
+    "holt_smooth",
+    "ks_two_sample",
+    "language_id",
+    "mann_whitney_u",
+    "minhash_dedup",
+    "permutation_test",
+    "perplexity_buckets",
+    "psi_drift",
+    "quality_filter",
+    "semantic_dedup",
+    "sessionize",
+    "sprt_monitor",
+    "substring_dedup",
+    "token_stats",
+    "welch_ttest",
 )
-from boltzmannclean_spark.functions.prefix import (  # noqa: E402,F401
-    sharded_prefix_sum,
-)
-from boltzmannclean_spark.functions.topk import (  # noqa: E402,F401
-    topk_per_key,
-)
+_REEXPORTS = {
+    **{name: "boltzmannclean_spark.pipeline" for name in _PIPELINE},
+    "sharded_prefix_sum": "boltzmannclean_spark.functions.prefix",
+    "topk_per_key": "boltzmannclean_spark.functions.topk",
+}
+
+
+def __getattr__(name: str):
+    module = _REEXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__():
+    return sorted(set(globals()) | set(_REEXPORTS))
 
 
 def clean(

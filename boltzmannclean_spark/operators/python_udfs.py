@@ -26,6 +26,14 @@ from boltzmannclean_spark.plans.registry import register
 from boltzmannclean_spark.sources.catalog import load_table
 
 
+def _sort_on_one_partition(df: DataFrame, *cols: str) -> DataFrame:
+    """Sort the few rows a grouped Python step emits (one per group key)
+    on a single partition. A range sort would run the grouped step twice
+    (once more in the range sampler's job), and it cannot go below the
+    step: the groupBy exchange there reorders rows."""
+    return df.repartition(1).sortWithinPartitions(*cols)
+
+
 @register(
     "udf_scalar_priority",
     oracle="""
@@ -119,7 +127,7 @@ def udaf_grouped_agg_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         customer.groupBy("c_mktsegment")
         .agg((cents_sum("c_acctbal") / 100.0).alias("total_acctbal"))
-        .orderBy("c_mktsegment")
+        .transform(_sort_on_one_partition, "c_mktsegment")
     )
 
 
@@ -171,7 +179,7 @@ def grouped_map_nation_top(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_acctbal double, top_custkey bigint"
             ),
         )
-        .orderBy("c_nationkey")
+        .transform(_sort_on_one_partition, "c_nationkey")
     )
 
 
@@ -304,7 +312,7 @@ def udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_nation,
         "nation_key INT, n_customers BIGINT, bal_cents_total BIGINT",
     )
-    return out.orderBy("nation_key")
+    return _sort_on_one_partition(out, "nation_key")
 
 
 SQL_UDF_QUERY = """

@@ -16,6 +16,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: The directory that holds this package, put on the Python workers'
+#: path so they import the engine wherever the driver runs from.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -72,6 +76,13 @@ def get_spark(app_name: str = "boltzmannclean_spark") -> SparkSession:
         # a microsecond timestamp (sources/catalog.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers: import the engine from this checkout, not from
+        # the driver's cwd, and run the engine's daemon, which takes
+        # Spark's bundled archives off the workers' sys.path when the
+        # interpreter has the same PySpark (worker_daemon.py) — each
+        # cached zip importer re-reads its archive on every task.
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
+        .config("spark.python.daemon.module", "boltzmannclean_spark.worker_daemon")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # Managed-table support (bucketed-join tests): keep the warehouse

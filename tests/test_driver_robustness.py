@@ -193,26 +193,90 @@ def test_ann_build_job_budget_and_tags(spark, sf_dir, tmp_path):
 PAGERANK_JOB_BUDGET = 9
 
 
-def test_pagerank_job_budget(spark, sf_dir):
-    """PageRank builds its edges once, counts its nodes on the driver
-    and checkpoints no step, so the whole query runs a fixed handful of
-    jobs instead of four per iteration."""
-    from boltzmannclean_spark.plans.registry import all_queries
-
+def _jobs_in_group(spark, group: str, run) -> int:
+    """Jobs ``run()`` launches, counted by tagging them with ``group``."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
-    tracker = sc.statusTracker()
-    group = "test:pagerank_budget"
     bus.waitUntilEmpty()
-    sc.setJobGroup(group, "pagerank job budget")
+    sc.setJobGroup(group, group)
     try:
-        df = all_queries()["graph_pagerank_bipartite"].spark_fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     bus.waitUntilEmpty()
-    jobs = tracker.getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= PAGERANK_JOB_BUDGET, (
-        f"PageRank ran {len(jobs)} jobs, budget {PAGERANK_JOB_BUDGET}"
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _call_and_write(spark, sf_dir, name):
+    from boltzmannclean_spark.plans.registry import all_queries
+
+    df = all_queries()[name].spark_fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_pagerank_job_budget(spark, sf_dir):
+    """PageRank builds its edges once, counts its nodes on the driver
+    and checkpoints no step, so the whole query runs a fixed handful of
+    jobs instead of four per iteration."""
+    name = "graph_pagerank_bipartite"
+    jobs = _jobs_in_group(spark, "test:pagerank_budget",
+                          lambda: _call_and_write(spark, sf_dir, name))
+    assert 0 < jobs <= PAGERANK_JOB_BUDGET, (
+        f"PageRank ran {jobs} jobs, budget {PAGERANK_JOB_BUDGET}"
+    )
+
+
+#: Jobs of one call plus a noop write, as the benchmark times these
+#: registry operations. Budgets: they may only be tightened.
+#: impute_rbm_distributed_fit — the parquet footer read, the fit's
+#: column statistics (2) and one gradient pass per epoch (3), then the
+#: input sort's sample and shuffle stages and the write;
+#: impute_knn_embedding — the footer read and the masked-side collect,
+#: then four adaptive query stages and the write.
+OP_JOB_BUDGETS = {
+    "impute_rbm_distributed_fit": 9,
+    "impute_knn_embedding": 7,
+}
+
+
+@pytest.mark.parametrize("name", sorted(OP_JOB_BUDGETS))
+def test_benchmark_op_job_budget(spark, sf_dir, name):
+    jobs = _jobs_in_group(spark, f"test:budget:{name}",
+                          lambda: _call_and_write(spark, sf_dir, name))
+    assert 0 < jobs <= OP_JOB_BUDGETS[name], (
+        f"{name} ran {jobs} jobs, budget {OP_JOB_BUDGETS[name]}"
+    )
+
+
+#: Jobs of one ``ann_search`` over the benchmark's probe set (4 corpus
+#: vectors, k=10, nprobe=2) against a prebuilt raw IVF+PQ index, plus a
+#: noop write: five parquet footer reads (the index parts and the
+#: probes), ten adaptive query stages and broadcasts, and the write. A
+#: budget: it may only be tightened.
+ANN_SEARCH_JOB_BUDGET = 16
+
+
+def test_ann_search_job_budget(spark, sf_dir, tmp_path):
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from boltzmannclean_spark import ann_search, build_ann_index
+    from boltzmannclean_spark.sources.catalog import load_table
+    from perfbench.workloads import ANN_BUILD, ANN_K, ANN_NPROBE, ANN_PROBES
+
+    vecs = load_table(spark, sf_dir, "embeddings")
+    index = str(tmp_path / "idx")
+    build_ann_index(vecs, index, **ANN_BUILD)
+    ids = np.random.default_rng(0).choice(vecs.count(), ANN_PROBES, replace=False)
+
+    def run():
+        probes = load_table(spark, sf_dir, "embeddings").where(
+            F.col("vec_id").isin([int(i) for i in ids]))
+        out = ann_search(spark, index, probes, k=ANN_K, nprobe=ANN_NPROBE)
+        out.write.format("noop").mode("overwrite").save()
+
+    jobs = _jobs_in_group(spark, "test:ann_search_budget", run)
+    assert 0 < jobs <= ANN_SEARCH_JOB_BUDGET, (
+        f"ann_search ran {jobs} jobs, budget {ANN_SEARCH_JOB_BUDGET}"
     )

@@ -21,12 +21,6 @@ ALLOWED_WARNINGS = {
     # analyze()-schema UDTF demo: Python row fan-out on the 5-value
     # o_orderpriority label domain, documented as the slow path
     "udtf_analyze_dynamic": {"python-row-udf"},
-    # The range sort sits over a grouped Python step; the groupBy
-    # exchange below that step reorders rows, so the sort cannot move
-    # under the Python pass (5- and 25-group outputs).
-    "udaf_grouped_agg_cents": {"python-pass-rerun"},
-    "grouped_map_nation_top": {"python-pass-rerun"},
-    "udf_apply_in_arrow": {"python-pass-rerun"},
     # pipeline.holt_smooth: the sort sits over the per-key grouped-map
     # Holt pass (8 keys here), above the groupBy exchange.
     "ts_holt_linear_smoothing": {"python-pass-rerun"},
