@@ -13,6 +13,11 @@ Scale design:
   md5(seed || shingle) hex strings — md5 is standardized, string min is
   total-ordered, so DuckDB reproduces signatures bit-for-bit (the usual
   integer xxhash minhash is engine-specific).
+
+The MinHash signature, LSH bands, token-set Jaccard verify, the
+DF-capped bigram overlap and the trigram prefix filter are built in
+``functions/shingles.py``, in their Spark form and as the CTE text the
+oracles here are composed from; the queries below wire them together.
 """
 
 from __future__ import annotations
@@ -22,6 +27,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from boltzmannclean_spark.functions.shingles import (
+    EDGES_SQL,
+    bands_sql,
+    bands_union_sql,
+    capped_bigram_overlap,
+    capped_bigram_sql,
+    in_prefix,
+    jaccard_sql,
+    lsh_bands,
+    minhash_signature,
+    near_dup_ids_sql,
+    prefix_sql,
+    signature_columns_sql,
+    signature_sql,
+    trigram_shingles,
+    trigram_sql,
+)
 from boltzmannclean_spark.plans.registry import register
 from boltzmannclean_spark.sources.catalog import load_table
 
@@ -74,30 +96,9 @@ WITH vocab AS (
   SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
   FROM documents
 ),
-toks AS (SELECT doc_id, UNNEST(toks) AS sh FROM vocab),
-seeds AS (SELECT UNNEST(range(0, {N_SEEDS})) AS seed),
-minh AS (
-  SELECT doc_id, seed,
-         MIN(substring(md5((seed // 4)::VARCHAR || '|' || sh),
-                       1 + 8 * (seed % 4), 8)) AS mh
-  FROM toks CROSS JOIN seeds
-  GROUP BY doc_id, seed
-),
-bands AS (
-  SELECT doc_id, seed // {BAND_ROWS} AS band,
-         STRING_AGG(mh, '' ORDER BY seed) AS band_key
-  FROM minh GROUP BY doc_id, seed // {BAND_ROWS}
-),
-edges AS (
-  SELECT DISTINCT b.doc_id,
-         MIN(b.doc_id) OVER (PARTITION BY b.band, b.band_key) AS rep
-  FROM bands b
-),
-verified AS (
+{signature_sql(N_SEEDS)}{bands_sql(BAND_ROWS)}{EDGES_SQL}verified AS (
   SELECT e.doc_id, e.rep,
-         CAST(LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
-           / CAST(LEN(va.toks) + LEN(vb.toks)
-                  - LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE) AS jaccard
+         {jaccard_sql(9)} AS jaccard
   FROM edges e
   JOIN vocab va ON va.doc_id = e.doc_id
   JOIN vocab vb ON vb.doc_id = e.rep
@@ -141,26 +142,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NGRAM_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, lang, UNNEST(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS pos
-  FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id, lang,
-         tok || ' ' || LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS sh
-  FROM toks
-  QUALIFY LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL
-),
-df AS (SELECT lang, sh FROM grams GROUP BY lang, sh HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-kept AS (SELECT g.* FROM grams g JOIN df USING (lang, sh)),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id),
-inter AS (
-  SELECT ga.doc_id AS doc_a, gb.doc_id AS doc_b, COUNT(*) AS n_int
-  FROM kept ga
-  JOIN kept gb ON ga.sh = gb.sh AND ga.lang = gb.lang AND ga.doc_id < gb.doc_id
-  GROUP BY ga.doc_id, gb.doc_id
-)
+WITH {capped_bigram_sql(NGRAM_DF_CAP)}
 SELECT i.doc_a, i.doc_b,
        CAST(i.n_int AS DOUBLE)
          / CAST(sa.n_sh + sb.n_sh - i.n_int AS DOUBLE) AS jaccard
@@ -183,40 +165,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles shared by more than NGRAM_DF_CAP docs are dropped before
     the join — each contributes O(df²) candidate pairs, so uncapped
     stop-bigrams are the one thing that breaks this plan at 100 TB."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    all_grams = (
-        toks.withColumn("nxt", F.lead("tok").over(w))
-        .where(F.col("nxt").isNotNull())
-        .select(
-            "doc_id",
-            "lang",
-            F.concat_ws(" ", F.col("tok"), F.col("nxt")).alias("sh"),
-        )
-        .distinct()
-    )
-    rare = (
-        all_grams.groupBy("lang", "sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .select("lang", "sh")
-    )
-    grams = all_grams.join(rare, ["lang", "sh"])
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ga = grams.alias("ga")
-    gb = grams.alias("gb")
-    inter = (
-        ga.join(
-            gb,
-            (F.col("ga.sh") == F.col("gb.sh"))
-            & (F.col("ga.lang") == F.col("gb.lang"))
-            & (F.col("ga.doc_id") < F.col("gb.doc_id")),
-        )
-        .groupBy(F.col("ga.doc_id").alias("doc_a"), F.col("gb.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_int"))
+    sizes, inter = capped_bigram_overlap(
+        load_table(spark, sf_dir, "documents"), NGRAM_DF_CAP
     )
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
@@ -799,36 +749,7 @@ exact_rep AS (
     FROM documents
   ) t WHERE doc_id = rep
 ),
-toks AS (SELECT doc_id, UNNEST(toks) AS sh FROM vocab),
-seeds AS (SELECT UNNEST(range(0, {N_SEEDS})) AS seed),
-minh AS (
-  SELECT doc_id, seed,
-         MIN(substring(md5((seed // 4)::VARCHAR || '|' || sh),
-                       1 + 8 * (seed % 4), 8)) AS mh
-  FROM toks CROSS JOIN seeds
-  GROUP BY doc_id, seed
-),
-bands AS (
-  SELECT doc_id, seed // {BAND_ROWS} AS band,
-         STRING_AGG(mh, '' ORDER BY seed) AS band_key
-  FROM minh GROUP BY doc_id, seed // {BAND_ROWS}
-),
-edges AS (
-  SELECT DISTINCT b.doc_id,
-         MIN(b.doc_id) OVER (PARTITION BY b.band, b.band_key) AS rep
-  FROM bands b
-),
-near_dups AS (
-  SELECT DISTINCT e.doc_id
-  FROM edges e
-  JOIN vocab va ON va.doc_id = e.doc_id
-  JOIN vocab vb ON vb.doc_id = e.rep
-  WHERE e.doc_id > e.rep
-    AND CAST(LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
-          / CAST(LEN(va.toks) + LEN(vb.toks)
-                 - LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
-        >= {MINHASH_JACCARD_THRESHOLD}
-)
+{signature_sql(N_SEEDS)}{bands_sql(BAND_ROWS)}{EDGES_SQL}{near_dup_ids_sql('near_dups', MINHASH_JACCARD_THRESHOLD)}
 SELECT d.doc_id, d.lang, d.n_chars
 FROM documents d
 JOIN quality  q ON q.doc_id = d.doc_id
@@ -1030,26 +951,7 @@ CONTAINMENT_THRESHOLD = 0.6
 @register(
     "dedup_containment",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, lang, UNNEST(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS pos
-  FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id, lang,
-         tok || ' ' || LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS sh
-  FROM toks
-  QUALIFY LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL
-),
-df AS (SELECT lang, sh FROM grams GROUP BY lang, sh HAVING COUNT(*) <= {NGRAM_DF_CAP}),
-kept AS (SELECT g.* FROM grams g JOIN df USING (lang, sh)),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id),
-inter AS (
-  SELECT ga.doc_id AS doc_a, gb.doc_id AS doc_b, COUNT(*) AS n_int
-  FROM kept ga
-  JOIN kept gb ON ga.sh = gb.sh AND ga.lang = gb.lang AND ga.doc_id < gb.doc_id
-  GROUP BY ga.doc_id, gb.doc_id
-)
+WITH {capped_bigram_sql(NGRAM_DF_CAP)}
 SELECT i.doc_a, i.doc_b, i.n_int,
        sa.n_sh AS n_a, sb.n_sh AS n_b,
        GREATEST(CAST(i.n_int AS DOUBLE) / sa.n_sh,
@@ -1071,39 +973,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF-capped shared-shingle equi-join as the Jaccard pass (pairs track
     actual overlap, stop-bigrams pre-dropped); the asymmetric ratios
     divide exact intersection counts."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    all_grams = (
-        toks.withColumn("nxt", F.lead("tok").over(w))
-        .where(F.col("nxt").isNotNull())
-        .select(
-            "doc_id",
-            "lang",
-            F.concat_ws(" ", F.col("tok"), F.col("nxt")).alias("sh"),
-        )
-        .distinct()
-    )
-    rare = (
-        all_grams.groupBy("lang", "sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .select("lang", "sh")
-    )
-    kept = all_grams.join(rare, ["lang", "sh"])
-    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ga, gb = kept.alias("ga"), kept.alias("gb")
-    inter = (
-        ga.join(
-            gb,
-            (F.col("ga.sh") == F.col("gb.sh"))
-            & (F.col("ga.lang") == F.col("gb.lang"))
-            & (F.col("ga.doc_id") < F.col("gb.doc_id")),
-        )
-        .groupBy(F.col("ga.doc_id").alias("doc_a"), F.col("gb.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_int"))
+    sizes, inter = capped_bigram_overlap(
+        load_table(spark, sf_dir, "documents"), NGRAM_DF_CAP
     )
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
     cont = F.greatest(
@@ -1396,20 +1267,11 @@ toks AS (
 ),
 minh AS (
   SELECT doc_id,
-         {", ".join(
-             f"MIN(substring(md5('{s // 4}|' || sh), {1 + 8 * (s % 4)}, 8))"
-             f" AS mh{s}"
-             for s in range(N_SEEDS)
-         )}
+         {signature_columns_sql(N_SEEDS)}
   FROM toks GROUP BY doc_id
 ),
 bands AS (
-  {" UNION ALL ".join(
-      "SELECT doc_id, " + str(b) + " AS band, "
-      + " || ".join(f"mh{b * BAND_ROWS + r}" for r in range(BAND_ROWS))
-      + " AS band_key FROM minh"
-      for b in range(N_SEEDS // BAND_ROWS)
-  )}
+  {bands_union_sql(N_SEEDS, BAND_ROWS)}
 ),
 pbands AS (
   SELECT b.doc_id, b.band, b.band_key
@@ -1467,8 +1329,7 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying pair must share a token). Candidates = the probes' LSH
     bands joined
     against the full corpus band table (broadcast probe side, map-side
-    again); signatures/bands are the exact dedup_minhash_lsh
-    derivation. The r12 design sampled a fixed 25% FRACTION and ran
+    again). The r12 design sampled a fixed 25% FRACTION and ran
     all-pairs truth over it — Θ((N/4)²), the measured ×30 scale-killer
     (single-task tail, killed at 12 min); the probe design evaluates
     the same banding against the same threshold with linear work and
@@ -1506,30 +1367,13 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # K rows; feeds three consumers + broadcasts
     )
     toks = sets.select("doc_id", F.explode("toks").alias("sh"))
-    minh = toks.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{s // 4}|"), F.col("sh"))),
-                    1 + 8 * (s % 4),
-                    8,
-                )
-            ).alias(f"mh{s}")
-            for s in range(N_SEEDS)
-        ]
-    )
-    band_cols = [
-        F.concat(*[F.col(f"mh{b * BAND_ROWS + r}") for r in range(BAND_ROWS)])
-        for b in range(N_SEEDS // BAND_ROWS)
-    ]
+    minh = minhash_signature(toks, ["doc_id"], N_SEEDS)
     # r15 round-close: the band/pair-set lazy checkpoints added mid-
     # round were REVERTED — the bench caught a x1.5 regression and an
     # in-process A/B (checkpoint-bypass monkeypatch) confirmed the
     # pinned form 15-20% slower warm (6.7-7.0 s vs 5.4-5.9 s); runtime
     # exchange reuse already covers the shared subtrees here.
-    bands = minh.select(
-        "doc_id", F.posexplode(F.array(*band_cols)).alias("band", "band_key")
-    )
+    bands = lsh_bands(minh, ["doc_id"], N_SEEDS, BAND_ROWS)
     pbands = bands.join(
         F.broadcast(probes.select("doc_id")), "doc_id"
     ).select(
@@ -1695,42 +1539,14 @@ PF_DF_CAP = 100
 @register(
     "dedup_prefix_filter_jaccard",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS pos
-  FROM documents
-),
-grams0 AS (
-  SELECT DISTINCT doc_id,
-         tok || ' ' || LEAD(tok, 1) OVER w || ' ' || LEAD(tok, 2) OVER w AS sh
-  FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-  QUALIFY LEAD(tok, 2) OVER w IS NOT NULL
-),
-df AS (SELECT sh, COUNT(*) AS df FROM grams0 GROUP BY sh),
+WITH {trigram_sql(False)}df AS (SELECT sh, COUNT(*) AS df FROM grams0 GROUP BY sh),
 -- MATERIALIZED boundaries (the HyperBall/graph-oracle lesson, applied
 -- after this oracle spilled 24 GiB at the organic x30 corpus): without
 -- them DuckDB inlines the CTEs and reorders the verify join into a
 -- shingle-first grams x grams join whose intermediate is Sigma df^2
 -- over the WHOLE universe; pinning grams/prefix/cand keeps the
 -- candidate set as the join spine, which is the algorithm.
-grams AS MATERIALIZED (
-  SELECT g.doc_id, g.sh, df.df
-  FROM grams0 g JOIN df ON g.sh = df.sh
-  WHERE df.df <= {PF_DF_CAP}
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-ranked AS (
-  SELECT g.doc_id, g.sh,
-         ROW_NUMBER() OVER (PARTITION BY g.doc_id
-                            ORDER BY g.df, g.sh) AS pos,
-         s.n
-  FROM grams g JOIN sizes s ON s.doc_id = g.doc_id
-),
-prefix AS MATERIALIZED (
-  SELECT doc_id, sh, n FROM ranked
-  WHERE pos <= n - (({PF_THRESHOLD_NUM} * n + {PF_THRESHOLD_NUM}) // {PF_THRESHOLD_DEN}) + 1
-),
-cand AS MATERIALIZED (
+{prefix_sql(PF_DF_CAP, PF_THRESHOLD_NUM, PF_THRESHOLD_DEN, 'doc_id, sh, n')}cand AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM prefix a JOIN prefix b
     ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -1792,25 +1608,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture scales (max df 25 at sf0.1 vs cap 100), and the drop
     counts are REPORTED by the dedup_prefix_filter_stats companion —
     no silent truncation."""
-    docs = load_table(spark, sf_dir, "documents")
-    # Shingling is ROW-LOCAL: a higher-order transform over the token
-    # array builds every trigram in place — no posexplode + per-doc
-    # window (which would shuffle the corpus on doc_id before any
-    # pruning). distinct() is the first exchange the corpus sees.
-    grams0 = (
-        docs.select("doc_id", F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 3),"
-                    " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
+    grams0 = trigram_shingles(load_table(spark, sf_dir, "documents"))
     df = grams0.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     grams = (
         grams0.join(df.where(F.col("df") <= PF_DF_CAP), "sh")
@@ -1825,14 +1623,9 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         grams.join(sizes, "doc_id")
         .select("doc_id", "sh", "n", F.row_number().over(w).alias("pos"))
     )
-    prefix = ranked.where(
-        F.col("pos")
-        <= F.col("n")
-        - F.expr(
-            f"({PF_THRESHOLD_NUM} * n + {PF_THRESHOLD_NUM}) div {PF_THRESHOLD_DEN}"
-        )
-        + 1
-    ).select("doc_id", "sh", "n")
+    prefix = ranked.where(in_prefix(PF_THRESHOLD_NUM, PF_THRESHOLD_DEN)).select(
+        "doc_id", "sh", "n"
+    )
     a = prefix.select(
         F.col("doc_id").alias("doc_a"), "sh", F.col("n").alias("na_p")
     )
@@ -1892,40 +1685,12 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_prefix_filter_stats",
     oracle=f"""
-WITH toks AS (
-  SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS pos
-  FROM documents
-),
-grams0 AS MATERIALIZED (
-  SELECT DISTINCT doc_id,
-         tok || ' ' || LEAD(tok, 1) OVER w || ' ' || LEAD(tok, 2) OVER w AS sh
-  FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-  QUALIFY LEAD(tok, 2) OVER w IS NOT NULL
-),
-df AS MATERIALIZED (SELECT sh, COUNT(*) AS df FROM grams0 GROUP BY sh),
+WITH {trigram_sql(True)}df AS MATERIALIZED (SELECT sh, COUNT(*) AS df FROM grams0 GROUP BY sh),
 -- MATERIALIZED throughout: this oracle's readout is EIGHT subqueries
 -- over the same chain; DuckDB's default inlining re-evaluates the
 -- join+window pipeline per reference (measured: 24 GiB spill at the
 -- verbatim x30 replica under a concurrent sweep).
-grams AS MATERIALIZED (
-  SELECT g.doc_id, g.sh, df.df
-  FROM grams0 g JOIN df ON g.sh = df.sh
-  WHERE df.df <= {PF_DF_CAP}
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM grams GROUP BY doc_id),
-ranked AS (
-  SELECT g.doc_id, g.sh,
-         ROW_NUMBER() OVER (PARTITION BY g.doc_id
-                            ORDER BY g.df, g.sh) AS pos,
-         s.n
-  FROM grams g JOIN sizes s ON s.doc_id = g.doc_id
-),
-prefix AS MATERIALIZED (
-  SELECT doc_id, sh FROM ranked
-  WHERE pos <= n - (({PF_THRESHOLD_NUM} * n + {PF_THRESHOLD_NUM}) // {PF_THRESHOLD_DEN}) + 1
-),
-pwidth AS MATERIALIZED (SELECT sh, COUNT(*) AS w FROM prefix GROUP BY sh)
+{prefix_sql(PF_DF_CAP, PF_THRESHOLD_NUM, PF_THRESHOLD_DEN, 'doc_id, sh')}pwidth AS MATERIALIZED (SELECT sh, COUNT(*) AS w FROM prefix GROUP BY sh)
 SELECT
   (SELECT COUNT(DISTINCT doc_id) FROM grams0) AS n_docs,
   (SELECT COUNT(*) FROM df) AS n_shingles_total,
@@ -1952,22 +1717,9 @@ def dedup_prefix_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     output itself is uncollectable; every count is computed with the
     exact derivation the main op runs (same shingling, same df cap,
     same ceil identity)."""
-    docs = load_table(spark, sf_dir, "documents")
-    grams0 = (
-        docs.select("doc_id", F.split("text", " ").alias("toks"))
-        .where(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 3),"
-                    " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    grams0 = trigram_shingles(
+        load_table(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=False)
     df = grams0.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     grams = grams0.join(df.where(F.col("df") <= PF_DF_CAP), "sh")
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -1975,15 +1727,7 @@ def dedup_prefix_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = (
         grams.join(sizes, "doc_id")
         .select("doc_id", "sh", "n", F.row_number().over(w).alias("pos"))
-        .where(
-            F.col("pos")
-            <= F.col("n")
-            - F.expr(
-                f"({PF_THRESHOLD_NUM} * n + {PF_THRESHOLD_NUM})"
-                f" div {PF_THRESHOLD_DEN}"
-            )
-            + 1
-        )
+        .where(in_prefix(PF_THRESHOLD_NUM, PF_THRESHOLD_DEN))
         .select("doc_id", "sh")
         .localCheckpoint(eager=False)
     )
@@ -2189,16 +1933,7 @@ WITH vocab AS (
   SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
   FROM documents
 ),
-toks AS (SELECT doc_id, UNNEST(toks) AS sh FROM vocab),
-seeds AS (SELECT UNNEST(range(0, {N_SEEDS})) AS seed),
-minh AS (
-  SELECT doc_id, seed,
-         MIN(substring(md5((seed // 4)::VARCHAR || '|' || sh),
-                       1 + 8 * (seed % 4), 8)) AS mh
-  FROM toks CROSS JOIN seeds
-  GROUP BY doc_id, seed
-),
-cfg AS (SELECT UNNEST([1, 2, 4, 8]) AS band_rows),
+{signature_sql(N_SEEDS)}cfg AS (SELECT UNNEST([1, 2, 4, 8]) AS band_rows),
 bands AS (
   SELECT cfg.band_rows, doc_id, seed // cfg.band_rows AS band,
          STRING_AGG(mh, '' ORDER BY seed) AS band_key
@@ -2238,35 +1973,13 @@ def dedup_minhash_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame
         "doc_id",
         F.explode(F.array_distinct(F.split("text", " "))).alias("sh"),
     )
-    minh = (
-        toks.groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{s // 4}|"), F.col("sh"))),
-                        1 + 8 * (s % 4),
-                        8,
-                    )
-                ).alias(f"mh{s}")
-                for s in range(N_SEEDS)
-            ]
-        )
-        .localCheckpoint(eager=False)
+    minh = minhash_signature(toks, ["doc_id"], N_SEEDS).localCheckpoint(
+        eager=False
     )
     out = None
     for r in (1, 2, 4, 8):
-        band_cols = [
-            F.concat(
-                *[F.col(f"mh{b * r + i}") for i in range(r)]
-            )
-            for b in range(N_SEEDS // r)
-        ]
         buckets = (
-            minh.select(
-                "doc_id",
-                F.posexplode(F.array(*band_cols)).alias("band", "band_key"),
-            )
+            lsh_bands(minh, ["doc_id"], N_SEEDS, r)
             .groupBy("band", "band_key")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -2462,36 +2175,7 @@ s1 AS (SELECT s0.* FROM s0 JOIN ex ON s0.doc_id = ex.keep),
 vocab AS (
   SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM s1
 ),
-toks AS (SELECT doc_id, UNNEST(toks) AS sh FROM vocab),
-seeds AS (SELECT UNNEST(range(0, {N_SEEDS})) AS seed),
-minh AS (
-  SELECT doc_id, seed,
-         MIN(substring(md5((seed // 4)::VARCHAR || '|' || sh),
-                       1 + 8 * (seed % 4), 8)) AS mh
-  FROM toks CROSS JOIN seeds
-  GROUP BY doc_id, seed
-),
-bands AS (
-  SELECT doc_id, seed // {BAND_ROWS} AS band,
-         STRING_AGG(mh, '' ORDER BY seed) AS band_key
-  FROM minh GROUP BY doc_id, seed // {BAND_ROWS}
-),
-edges AS (
-  SELECT DISTINCT b.doc_id,
-         MIN(b.doc_id) OVER (PARTITION BY b.band, b.band_key) AS rep
-  FROM bands b
-),
-mh_removed AS (
-  SELECT DISTINCT e.doc_id
-  FROM edges e
-  JOIN vocab va ON va.doc_id = e.doc_id
-  JOIN vocab vb ON vb.doc_id = e.rep
-  WHERE e.doc_id > e.rep
-    AND CAST(LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
-          / CAST(LEN(va.toks) + LEN(vb.toks)
-                 - LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
-        >= {MINHASH_JACCARD_THRESHOLD}
-),
+{signature_sql(N_SEEDS)}{bands_sql(BAND_ROWS)}{EDGES_SQL}{near_dup_ids_sql('mh_removed', MINHASH_JACCARD_THRESHOLD)},
 s2 AS (SELECT * FROM s1 WHERE doc_id NOT IN (SELECT doc_id FROM mh_removed)),
 tk2 AS (SELECT doc_id, string_split(text, ' ') AS a FROM s2),
 sh2 AS (
@@ -2963,21 +2647,7 @@ WITH vocab AS (
               THEN 1 ELSE 0 END AS is_new
   FROM documents
 ),
-toks AS (SELECT doc_id, is_new, UNNEST(toks) AS sh FROM vocab),
-seeds AS (SELECT UNNEST(range(0, {N_SEEDS})) AS seed),
-minh AS (
-  SELECT doc_id, is_new, seed,
-         MIN(substring(md5((seed // 4)::VARCHAR || '|' || sh),
-                       1 + 8 * (seed % 4), 8)) AS mh
-  FROM toks CROSS JOIN seeds
-  GROUP BY doc_id, is_new, seed
-),
-bands AS (
-  SELECT doc_id, is_new, seed // {BAND_ROWS} AS band,
-         STRING_AGG(mh, '' ORDER BY seed) AS band_key
-  FROM minh GROUP BY doc_id, is_new, seed // {BAND_ROWS}
-),
-corp_buckets AS (
+{signature_sql(N_SEEDS, 'doc_id, is_new')}{bands_sql(BAND_ROWS, 'doc_id, is_new')}corp_buckets AS (
   -- bucket-min pre-aggregation (r12): min-of-bucket-mins equals
   -- min-over-all-collisions, so candidates are batch x bands, never
   -- batch x bucket-width (mirrors the Spark-side fix).
@@ -2993,16 +2663,12 @@ cands AS (
   GROUP BY nb.doc_id
 )
 SELECT c.new_id AS doc_id, c.rep AS dup_of,
-       CAST(LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
-         / CAST(LEN(va.toks) + LEN(vb.toks)
-                - LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
+       {jaccard_sql(7)}
          AS jaccard
 FROM cands c
 JOIN vocab va ON va.doc_id = c.new_id
 JOIN vocab vb ON vb.doc_id = c.rep
-WHERE CAST(LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
-        / CAST(LEN(va.toks) + LEN(vb.toks)
-               - LEN(list_intersect(va.toks, vb.toks)) AS DOUBLE)
+WHERE {jaccard_sql(6)}
       >= {INCR_THRESHOLD}
 ORDER BY doc_id
 """,

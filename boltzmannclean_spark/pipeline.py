@@ -34,6 +34,11 @@ from pyspark.sql import functions as F
 from boltzmannclean_spark.ann import _quantize, ann_search, build_ann_index
 from boltzmannclean_spark.functions.combos import packed_combo_counts
 from boltzmannclean_spark.functions.exact import dec
+from boltzmannclean_spark.functions.shingles import (
+    jaccard_verify,
+    lsh_bands,
+    minhash_signature,
+)
 from boltzmannclean_spark.functions.topk import topk_per_key
 from boltzmannclean_spark.functions.vectors import (
     as_double,
@@ -109,46 +114,27 @@ def minhash_dedup(
     threshold: float = 0.9,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate dedup, representative-based:
-    whitespace-token shingles → ``n_hashes`` deterministic md5-string
-    minhashes → ``n_hashes / band_rows`` banded bucket keys → each doc
-    verified against its bucket's min-id representative by EXACT
-    token-set Jaccard → rows (id, dup_of, jaccard) for docs at
-    jaccard >= ``threshold``.
+    whitespace-token shingles → ``n_hashes`` minhashes →
+    ``n_hashes / band_rows`` banded bucket keys → each doc verified
+    against its bucket's min-id representative by EXACT token-set
+    Jaccard → rows (id, dup_of, jaccard) for docs at jaccard >=
+    ``threshold``. Signature, bands and verify are the shared builders
+    of ``functions/shingles.py``; ``n_hashes`` and ``band_rows`` must
+    be positive, with ``band_rows`` dividing ``n_hashes`` (else
+    ValueError).
 
     More hashes / more rows per band sharpen the LSH S-curve around the
     target threshold (production: 128 hashes, 4-8 rows/band at ~0.8).
     Representative-based verification bounds work at docs x bands and
     output at docs — the keep/drop form a 100 TB pipeline emits —
     instead of the Θ(similar pairs) all-pairs blowup."""
-    if n_hashes % band_rows:
-        raise ValueError("n_hashes must be a multiple of band_rows")
     vocab = docs.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(F.split(text_col, " ")).alias("toks"),
     )
     toks = vocab.select("doc_id", F.explode("toks").alias("sh"))
-    # All minhashes in ONE aggregation from n_hashes/4 md5 evaluations:
-    # each md5 is four independent 32-bit (8-hex) slices, and the min
-    # over a doc's tokens of each slice is a proper minhash.
-    minh = toks.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{s // 4}|"), F.col("sh"))),
-                    1 + 8 * (s % 4),
-                    8,
-                )
-            ).alias(f"mh{s}")
-            for s in range(n_hashes)
-        ]
-    )
-    band_cols = [
-        F.concat(*[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)])
-        for b in range(n_hashes // band_rows)
-    ]
-    bands = minh.select(
-        "doc_id", F.posexplode(F.array(*band_cols)).alias("band", "band_key")
-    )
+    minh = minhash_signature(toks, ["doc_id"], n_hashes)
+    bands = lsh_bands(minh, ["doc_id"], n_hashes, band_rows)
     w_bucket = Window.partitionBy("band", "band_key")
     edges = (
         bands.withColumn("rep", F.min("doc_id").over(w_bucket))
@@ -156,26 +142,11 @@ def minhash_dedup(
         .distinct()
         .where(F.col("doc_id") > F.col("rep"))
     )
-    va = vocab.alias("va")
-    vb = vocab.alias("vb")
-    n_int = F.size(F.array_intersect(F.col("va.toks"), F.col("vb.toks")))
-    n_sum = F.size(F.col("va.toks")) + F.size(F.col("vb.toks"))
-    jac = (n_int.cast("double") / (n_sum - n_int).cast("double")).alias(
-        "jaccard"
-    )
-    e = edges.alias("e")
     # No forced broadcast: AQE broadcasts the edge side when it is
     # actually small and falls back to a shuffle join on a
     # high-duplication corpus where edges ~ docs.
-    verified = (
-        e.join(va, F.col("va.doc_id") == F.col("e.doc_id"))
-        .join(vb, F.col("vb.doc_id") == F.col("e.rep"))
-        .select(
-            F.col("e.doc_id").alias("doc_id"),
-            F.col("e.rep").alias("dup_of"),
-            jac,
-        )
-        .where(F.col("jaccard") >= threshold)
+    verified = jaccard_verify(edges, vocab, "doc_id", "rep", "doc_id").where(
+        F.col("jaccard") >= threshold
     )
     w_doc = Window.partitionBy("doc_id").orderBy("dup_of")
     return (
@@ -1791,8 +1762,9 @@ def incremental_minhash_dedup(
     """Incremental near-dup dedup: flag docs of an incoming batch
     (``is_new``) that near-duplicate the EXISTING corpus — the shape a
     production ingest pipeline actually runs daily (dedupe the delta
-    against the index, never re-dedupe the corpus). Same deterministic
-    md5 minhash/banding as ``minhash_dedup``; the candidate join is
+    against the index, never re-dedupe the corpus). Signature, bands
+    and verify are the shared builders of ``functions/shingles.py``
+    (the same banding rules as ``minhash_dedup``); the candidate join is
     new-bands ⋈ corpus-bands on (band, band_key), so candidate volume
     is Θ(new × collisions), never corpus² — and in production the
     corpus side is the PRECOMPUTED signature store (here recomputed
@@ -1802,35 +1774,14 @@ def incremental_minhash_dedup(
     collision only (work bounded at new-docs × bands), and rows
     (id, dup_of, jaccard) at jaccard ≥ ``threshold`` come back —
     the keep/drop decision for the batch."""
-    if n_hashes % band_rows:
-        raise ValueError("n_hashes must be a multiple of band_rows")
     vocab = docs.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(F.split(text_col, " ")).alias("toks"),
         is_new.cast("int").alias("is_new"),
     )
     toks = vocab.select("doc_id", "is_new", F.explode("toks").alias("sh"))
-    minh = toks.groupBy("doc_id", "is_new").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{s // 4}|"), F.col("sh"))),
-                    1 + 8 * (s % 4),
-                    8,
-                )
-            ).alias(f"mh{s}")
-            for s in range(n_hashes)
-        ]
-    )
-    band_cols = [
-        F.concat(*[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)])
-        for b in range(n_hashes // band_rows)
-    ]
-    bands = minh.select(
-        "doc_id",
-        "is_new",
-        F.posexplode(F.array(*band_cols)).alias("band", "band_key"),
-    )
+    minh = minhash_signature(toks, ["doc_id", "is_new"], n_hashes)
+    bands = lsh_bands(minh, ["doc_id", "is_new"], n_hashes, band_rows)
     new_b = bands.where(F.col("is_new") == 1).select(
         F.col("doc_id").alias("new_id"), "band", "band_key"
     )
@@ -1855,22 +1806,8 @@ def incremental_minhash_dedup(
         .groupBy("new_id")
         .agg(F.min("bmin").alias("rep"))
     )
-    va = vocab.alias("va")
-    vb = vocab.alias("vb")
-    n_int = F.size(F.array_intersect(F.col("va.toks"), F.col("vb.toks")))
-    n_sum = F.size(F.col("va.toks")) + F.size(F.col("vb.toks"))
-    jac = (n_int.cast("double") / (n_sum - n_int).cast("double")).alias(
-        "jaccard"
-    )
-    c = cands.alias("c")
     return (
-        c.join(va, F.col("va.doc_id") == F.col("c.new_id"))
-        .join(vb, F.col("vb.doc_id") == F.col("c.rep"))
-        .select(
-            F.col("c.new_id").alias(id_col),
-            F.col("c.rep").alias("dup_of"),
-            jac,
-        )
+        jaccard_verify(cands, vocab, "new_id", "rep", id_col)
         .where(F.col("jaccard") >= threshold)
         .orderBy(id_col)
     )

@@ -234,6 +234,11 @@ INVARIANT_QUERIES = (
     "graph_bfs_levels",
     "graph_hyperball_reach",
     "graph_hyperball_saturation",
+    # the shared shingle builders (functions/shingles.py): md5-string
+    # minhash mins with min-id bucket reps, and integer capped-bigram
+    # overlap counts; each Jaccard is one double division of integers.
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
 )
 
 

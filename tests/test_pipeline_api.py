@@ -56,10 +56,25 @@ def test_minhash_dedup_threshold_knob(docs):
     assert (3, 1) in [(r.id, r.dup_of) for r in loose]
 
 
-def test_minhash_dedup_validates_banding(docs):
+@pytest.mark.parametrize(
+    "n_hashes,band_rows",
+    [(8, -2), (8, 0), (0, 2), (7, 2)],
+    ids=["8x-2", "8x0", "0x2", "7x2"],
+)
+@pytest.mark.parametrize(
+    "fn", ["minhash_dedup", "incremental_minhash_dedup"]
+)
+def test_minhash_dedup_validates_banding(docs, fn, n_hashes, band_rows):
+    # A negative band_rows once passed the divisibility check and built
+    # no bands (every duplicate silently dropped); zero divided by zero.
+    from boltzmannclean_spark import pipeline
+
+    args = (docs,) if fn == "minhash_dedup" else (docs, F.col("id") > 2)
     with pytest.raises(ValueError):
-        minhash_dedup(docs, id_col="id", text_col="body", n_hashes=7,
-                      band_rows=2)
+        getattr(pipeline, fn)(
+            *args, id_col="id", text_col="body", n_hashes=n_hashes,
+            band_rows=band_rows,
+        )
 
 
 def test_minhash_dedup_wide_signature(docs):
@@ -233,7 +248,8 @@ def test_api_tolerates_empty_corpus(spark):
     """Every pipeline function must return an EMPTY result — never
     crash — on an empty input (the short-doc shingle crash class,
     checked fleet-wide): a scheduled run on a day with no new data is
-    routine, not exceptional."""
+    routine, not exceptional. The MinHash pair also gets a one-doc
+    corpus and a corpus whose every text is NULL: no pair, no error."""
     from boltzmannclean_spark import (
         bm25_topk,
         cosine_topk,
@@ -252,8 +268,20 @@ def test_api_tolerates_empty_corpus(spark):
     ev = spark.createDataFrame(
         [], "user_id long, event_id long, ts timestamp, value double"
     )
+    from boltzmannclean_spark.pipeline import incremental_minhash_dedup
+
+    one = spark.createDataFrame(
+        [(1, "alpha beta gamma", "en")], "doc_id long, text string, lang string"
+    )
+    nulls = spark.createDataFrame(
+        [(1, None, "en"), (2, None, "en")],
+        "doc_id long, text string, lang string",
+    )
     assert exact_dedup(docs).count() == 0
-    assert minhash_dedup(docs).count() == 0
+    for corpus in (docs, one, nulls):
+        assert minhash_dedup(corpus).count() == 0
+        for is_new in (F.col("doc_id") > 1, F.lit(True)):
+            assert incremental_minhash_dedup(corpus, is_new).count() == 0
     assert substring_dedup(docs).count() == 0
     assert quality_filter(docs).count() == 0
     assert token_stats(docs).count() == 0
@@ -264,9 +292,10 @@ def test_api_tolerates_empty_corpus(spark):
     assert semantic_dedup(emb).count() == 0
 
 
-def _brute_minhash(docs, n_hashes, band_rows, threshold):
-    """Python replication of the deterministic md5-slice MinHash+LSH
-    representative dedup, for arbitrary (n_hashes, band_rows)."""
+def _brute_bands(docs, n_hashes, band_rows):
+    """Python replication of the deterministic md5-slice MinHash
+    signature and its LSH band keys, for arbitrary (n_hashes,
+    band_rows): (token sets, {doc: [(band, band_key), ...]})."""
     import hashlib
 
     vocab = {d: set(t.split(" ")) for d, t in docs.items()}
@@ -280,36 +309,62 @@ def _brute_minhash(docs, n_hashes, band_rows, threshold):
         )
 
     sigs = {d: [mh(d, s) for s in range(n_hashes)] for d in docs}
+    keys = {
+        d: [
+            (b, "".join(sigs[d][b * band_rows + r] for r in range(band_rows)))
+            for b in range(n_hashes // band_rows)
+        ]
+        for d in docs
+    }
+    return vocab, keys
+
+
+def _jaccard(vocab, a, b):
+    inter = len(vocab[a] & vocab[b])
+    return inter / (len(vocab[a]) + len(vocab[b]) - inter)
+
+
+def _brute_minhash(docs, n_hashes, band_rows, threshold):
+    """Representative dedup over ``_brute_bands``: each doc against its
+    buckets' min-id representatives, smallest verified one wins."""
+    vocab, keys = _brute_bands(docs, n_hashes, band_rows)
     buckets = {}
     for d in sorted(docs):
-        for b in range(n_hashes // band_rows):
-            key = (b, "".join(sigs[d][b * band_rows + r] for r in range(band_rows)))
+        for key in keys[d]:
             buckets.setdefault(key, []).append(d)
     out = {}
     for d in sorted(docs):
-        candidates = set()
-        for b in range(n_hashes // band_rows):
-            key = (b, "".join(sigs[d][b * band_rows + r] for r in range(band_rows)))
-            rep = min(buckets[key])
-            if rep < d:
-                candidates.add(rep)
-        best = None
-        for rep in sorted(candidates):
-            inter = len(vocab[d] & vocab[rep])
-            jac = inter / (len(vocab[d]) + len(vocab[rep]) - inter)
+        candidates = {min(buckets[key]) for key in keys[d]} - {d}
+        for rep in sorted(c for c in candidates if c < d):
+            jac = _jaccard(vocab, d, rep)
             if jac >= threshold:
-                best = (rep, jac)
+                out[d] = (rep, jac)
                 break  # smallest dup_of wins (rn=1 over dup_of asc)
-        if best:
-            out[d] = best
     return out
 
 
-def test_minhash_dedup_matches_brute_force_generalized(spark, tmp_path):
-    """The banding generalization (any n_hashes x band_rows, not just
-    the registry's 8x2) must agree with a Python brute-force replication
-    of the identical deterministic algorithm on a random corpus with
-    planted near-duplicates."""
+def _brute_incremental(docs, new, n_hashes, band_rows, threshold):
+    """Incremental dedup over ``_brute_bands``: each new doc against the
+    min id over the corpus (not-new) docs sharing any of its buckets."""
+    vocab, keys = _brute_bands(docs, n_hashes, band_rows)
+    bucket_min = {}
+    for d in docs:
+        if d not in new:
+            for key in keys[d]:
+                bucket_min[key] = min(bucket_min.get(key, d), d)
+    out = {}
+    for d in sorted(new):
+        reps = [bucket_min[key] for key in keys[d] if key in bucket_min]
+        if reps:
+            jac = _jaccard(vocab, d, min(reps))
+            if jac >= threshold:
+                out[d] = (min(reps), jac)
+    return out
+
+
+def _planted_corpus():
+    """40 random docs over a 120-word vocabulary plus 12 planted
+    near-dups (copies with at most one token swapped)."""
     import random
 
     rng = random.Random(20260814)
@@ -317,13 +372,32 @@ def test_minhash_dedup_matches_brute_force_generalized(spark, tmp_path):
     docs = {}
     for d in range(40):
         docs[d] = " ".join(rng.choice(vocab) for _ in range(rng.randint(8, 30)))
-    # planted near-dups: copy with small perturbations
     for d in range(40, 52):
         src = rng.randrange(40)
         toks = docs[src].split(" ")
         if rng.random() < 0.7 and len(toks) > 3:
             toks[rng.randrange(len(toks))] = rng.choice(vocab)
         docs[d] = " ".join(toks)
+    return docs
+
+
+def _assert_same_dups(got, want, label):
+    assert set(got) == set(want), (
+        f"{label}: "
+        f"missing={sorted(set(want) - set(got))[:5]} "
+        f"extra={sorted(set(got) - set(want))[:5]}"
+    )
+    for d in got:
+        assert got[d][0] == want[d][0], (d, got[d], want[d])
+        assert abs(got[d][1] - want[d][1]) < 1e-12
+
+
+def test_minhash_dedup_matches_brute_force_generalized(spark, tmp_path):
+    """The banding generalization (any n_hashes x band_rows, not just
+    the registry's 8x2) must agree with a Python brute-force replication
+    of the identical deterministic algorithm on a random corpus with
+    planted near-duplicates."""
+    docs = _planted_corpus()
     df = spark.createDataFrame(
         sorted(docs.items()), "doc_id long, text string"
     )
@@ -335,14 +409,32 @@ def test_minhash_dedup_matches_brute_force_generalized(spark, tmp_path):
             ).collect()
         }
         want = _brute_minhash(docs, n_hashes, band_rows, theta)
-        assert set(got) == set(want), (
-            f"{n_hashes}x{band_rows}@{theta}: "
-            f"missing={sorted(set(want) - set(got))[:5]} "
-            f"extra={sorted(set(got) - set(want))[:5]}"
-        )
-        for d in got:
-            assert got[d][0] == want[d][0], (d, got[d], want[d])
-            assert abs(got[d][1] - want[d][1]) < 1e-12
+        _assert_same_dups(got, want, f"{n_hashes}x{band_rows}@{theta}")
+
+
+def test_incremental_minhash_dedup_matches_brute_force(spark):
+    """``incremental_minhash_dedup`` away from the registry's 8x2
+    banding agrees with the brute-force replication: the planted
+    near-dups and every fifth original doc form the new batch."""
+    from boltzmannclean_spark.pipeline import incremental_minhash_dedup
+
+    docs = _planted_corpus()
+    new = {d for d in docs if d >= 40 or d % 5 == 0}
+    df = spark.createDataFrame(
+        sorted(docs.items()), "doc_id long, text string"
+    )
+    is_new = (F.col("doc_id") >= 40) | (F.col("doc_id") % 5 == 0)
+    for n_hashes, band_rows, theta in [(16, 4, 0.5), (12, 3, 0.7)]:
+        got = {
+            r.doc_id: (r.dup_of, r.jaccard)
+            for r in incremental_minhash_dedup(
+                df, is_new, n_hashes=n_hashes, band_rows=band_rows,
+                threshold=theta,
+            ).collect()
+        }
+        want = _brute_incremental(docs, new, n_hashes, band_rows, theta)
+        assert want, "the planted near-dups must be found"
+        _assert_same_dups(got, want, f"{n_hashes}x{band_rows}@{theta}")
 
 
 # ---------------------------------------------------------------------------

@@ -53,11 +53,15 @@ def contract() -> dict:
     }
 
 
+def digest(blob: str) -> str:
+    return hashlib.sha256(blob.encode("utf-8")).hexdigest()
+
+
 def main() -> None:
     blob = json.dumps(contract(), sort_keys=True, ensure_ascii=False)
     if "--dump" in sys.argv[1:]:
         print(blob)
-    print(hashlib.sha256(blob.encode("utf-8")).hexdigest())
+    print(digest(blob))
 
 
 if __name__ == "__main__":
