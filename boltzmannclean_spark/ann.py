@@ -53,9 +53,9 @@ from pyspark.sql import functions as F
 from boltzmannclean_spark.functions.lloyd import assign_blocks, train_blocks
 from boltzmannclean_spark.functions.topk import topk_per_key
 from boltzmannclean_spark.functions.vectors import (
-    as_double,
-    dot_unrolled,
-    norm,
+    cosine,
+    normed,
+    rank_by_cosine,
 )
 
 DEFAULT_MICRO = 1_000_000
@@ -660,25 +660,19 @@ def tune_nprobe(
         .orderBy(id_col)
         .limit(n_queries)
     )
-    qn = queries.select(
-        F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("qe")
-    ).withColumn("qnrm", norm(F.col("qe")))
-    cn = corpus.select(
-        F.col(id_col).alias("cid"), as_double(F.col(vec_col)).alias("ce")
-    ).withColumn("cnrm", norm(F.col("ce")))
-    dims = conf["dims"]
-    cos = dot_unrolled(F.col("qe"), F.col("ce"), dims) / (
-        F.col("qnrm") * F.col("cnrm")
-    )
-    truth = topk_per_key(
+    qn = normed(queries, [F.col(id_col).alias("qid")], F.col(vec_col),
+                e="qe", nrm="qnrm")
+    cn = normed(corpus, [F.col(id_col).alias("cid")], F.col(vec_col),
+                e="ce", nrm="cnrm")
+    cos = cosine("qe", "ce", "qnrm", "cnrm", conf["dims"])
+    truth = rank_by_cosine(
         qn.crossJoin(cn)
         .where(F.col("cid") != F.col("qid"))
         .select(F.col("qid").alias("query_id"),
                 F.col("cid").alias("neighbor_id"),
                 cos.alias("cosine")),
-        keys=["query_id"],
-        order=[F.desc("cosine"), F.col("neighbor_id")],
-        k=k,
+        k,
+        ordered=False,
     ).select("query_id", "neighbor_id").localCheckpoint()
     possible = truth.count()
     if possible == 0:

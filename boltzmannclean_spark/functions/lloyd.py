@@ -39,6 +39,11 @@ so a group's codebook is bit-identical to training it alone.
 Driver-side materialization is CODEBOOK-sized only (seed vectors at
 init, per-block k × width longs per round) — bounded by the model, not
 the corpus; the corpus itself only ever streams through the Arrow pass.
+
+DuckDB twins: the oracles re-derive the same rounds in SQL. The CTE
+builders at the end of this module (``ivf_cells_sql``,
+``pq_codebook_sql``, ``pq_codes_sql``, ``pq_lut_sql`` and the ADC
+tail) are that derivation, written once for every oracle.
 """
 
 from __future__ import annotations
@@ -52,7 +57,23 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["train_blocks", "assign_blocks"]
+from boltzmannclean_spark.functions.exact import sdiv_duck
+from boltzmannclean_spark.functions.vectors import list_matrix, topk_sql
+
+__all__ = [
+    "train_blocks",
+    "assign_blocks",
+    "quantized_sql",
+    "ivf_cells_sql",
+    "pq_sql",
+    "pq_rounds_sql",
+    "pq_codebook_sql",
+    "pq_codes_sql",
+    "pq_lut_sql",
+    "ADC_SCORED_SQL",
+    "adc_rank_sql",
+    "adc_topk_sql",
+]
 
 
 def _sdiv_np(num: np.ndarray, den: np.ndarray) -> np.ndarray:
@@ -68,23 +89,6 @@ def _sdiv_np(num: np.ndarray, den: np.ndarray) -> np.ndarray:
     q[pos] = num[pos] // np.broadcast_to(den, num.shape)[pos]
     q[neg] = -((-num[neg]) // np.broadcast_to(den, num.shape)[neg])
     return q
-
-
-def _list_to_matrix(col: pa.Array, dims: int) -> np.ndarray:
-    """array<long> Arrow column -> (n, dims) int64 matrix (zero-copy on
-    the flat values buffer when possible)."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
-    n = len(col)
-    if flat.size != n * dims:
-        raise ValueError(
-            f"lloyd: expected fixed {dims}-dim vectors, got "
-            f"{flat.size} values over {n} rows"
-        )
-    return flat.reshape(n, dims)
 
 
 class _Codebook:
@@ -201,7 +205,7 @@ def _partials_pass(
             for b, lo, hi in blocks
         }
         for batch in batches:
-            X = _list_to_matrix(batch.column(0), dims)
+            X = list_matrix(batch.column(0), dims)
             for b, lo, hi in blocks:
                 Xb = X[:, lo:hi]
                 idx = _assign_block(Xb, cb, b)
@@ -380,7 +384,7 @@ def assign_blocks(
         cbv: _Codebook = bc.value
         for batch in batches:
             ids = batch.column(0)
-            X = _list_to_matrix(batch.column(1), dims)
+            X = list_matrix(batch.column(1), dims)
             n = len(ids)
             # Block-major: every id for the first block, then the next —
             # order is irrelevant downstream (joins/aggregations), but
@@ -400,3 +404,236 @@ def assign_blocks(
             )
 
     return vecs.select(id_col, vec_col).mapInArrow(fn, schema)
+
+
+# --- DuckDB twins -------------------------------------------------------------
+#
+# The oracles re-derive every Lloyd round in SQL over the quantized
+# vectors: ``q`` (vec_id, d, qx) for the full-width IVF coarse quantizer,
+# ``pq`` (vec_id, b, d, qx) for the PQ blocks. A fragment holds no
+# leading ``WITH`` and no trailing comma, so callers join fragments
+# with ``,``.
+#
+# The rounds are PIVOTED (one row per vector with the dims as columns,
+# distance as one inline expression, argmin via arg_min over a HUGEINT
+# (dist, cid) pack) instead of the textbook per-(vec, dim) join +
+# per-(vec, cid) grouped distance. Identical results — arg_min on
+# dist·2^40 + cid IS lexicographic (dist, cid) because every cid < 2^40
+# and dist >= 0 — but the heavy hash aggregation shrinks from corpus×k
+# groups to corpus groups: measured 46.5 s → 1.0 s per PQ iteration at
+# the 20k-vector replica with k=256, the difference between tractable
+# and intractable ×10/×30 oracle sweeps (SCALING.md round 11).
+_ARGMIN_PACK = 1 << 40  # cid domain bound; dist·2^40 stays << 2^127
+
+_PQ_SQL = """pq AS (
+  SELECT vec_id,
+         (generate_subscripts(embedding, 1) - 1) // {PQ_DSUB} AS b,
+         (generate_subscripts(embedding, 1) - 1) % {PQ_DSUB} AS d,
+         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
+  FROM embeddings
+)"""
+
+
+def quantized_sql(micro: int, cols: str = "vec_id", d: str = "d") -> str:
+    """CTE ``q``: one row per (``cols``, dimension ``d``) with the
+    micro-unit value ``qx`` (the oracle form of ``ann._quantize``)."""
+    return f"""q AS (
+  SELECT {cols}, generate_subscripts(embedding, 1) - 1 AS {d},
+         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {micro}) AS BIGINT) AS qx
+  FROM embeddings
+)"""
+
+
+def pq_sql(dsub: int, micro: int) -> str:
+    """CTE ``pq``: ``q`` split into blocks ``b`` of ``dsub`` dims."""
+    return _PQ_SQL.format(PQ_DSUB=dsub, MICRO=micro)
+
+
+def _pivot_cols(expr: str, out: str, width: int) -> str:
+    return ", ".join(
+        f"MAX(CASE WHEN d = {d} THEN {expr} END) AS {out}{d}"
+        for d in range(width)
+    )
+
+
+def _argmin_sql(width: int) -> str:
+    """Nearest centroid ``c.cid`` of ``q`` (exact squared-L2 over the
+    pivoted ``x``/``c`` columns, ties to the smallest cid)."""
+    dist = " + ".join(
+        f"(q.x{d} - c.c{d}) * (q.x{d} - c.c{d})" for d in range(width)
+    )
+    return (
+        f"arg_min(c.cid, CAST({dist} AS HUGEINT)\n"
+        f"                          * {_ARGMIN_PACK}::HUGEINT + c.cid) AS cid"
+    )
+
+
+def _round_sql(k: int, prev: str, width: int, blocked: bool, src: str) -> str:
+    """Lloyd round ``k`` from codebook ``prev``: assign every vector of
+    ``src`` (pivoted once, in round 1), then the truncated integer mean
+    per centroid. Emits the codebook pivoted AND unpivoted as
+    ``{c}{k}`` (cid[, b], d, cx), the shape of the persisted artifact.
+    ``blocked`` rounds (PQ: ``p``-named CTEs) carry the block id ``b``
+    on every key; full-width rounds (IVF: ``k``-named) do not."""
+    p, c = ("p", "pc") if blocked else ("k", "c")
+    b, qb = (", b", ", q.b") if blocked else ("", "")
+    on = " ON q.b = c.b" if blocked else ""
+    pivot_src = (
+        f"{p}v1 AS (\n  SELECT vec_id{b}, {_pivot_cols('qx', 'x', width)}"
+        f"\n  FROM {src} GROUP BY vec_id{b}\n),\n"
+        if k == 1
+        else ""
+    )
+    means = ", ".join(
+        sdiv_duck(f"CAST(SUM(q.x{d}) AS BIGINT)", "COUNT(*)") + f" AS m{d}"
+        for d in range(width)
+    )
+    d_list = ", ".join(str(d) for d in range(width))
+    m_list = ", ".join(f"m{d}" for d in range(width))
+    join = "JOIN" if blocked else "CROSS JOIN"
+    return f"""
+{pivot_src}{p}w{k} AS (
+  SELECT cid{b}, {_pivot_cols('cx', 'c', width)} FROM {prev} GROUP BY cid{b}
+),
+{p}a{k} AS (
+  SELECT q.vec_id{qb},
+         {_argmin_sql(width)}
+  FROM {p}v1 q {join} {p}w{k} c{on}
+  GROUP BY q.vec_id{qb}
+),
+{p}m{k} AS (
+  SELECT a.cid{qb}, {means}
+  FROM {p}v1 q JOIN {p}a{k} a ON q.vec_id = a.vec_id{' AND q.b = a.b' if blocked else ''}
+  GROUP BY a.cid{qb}
+),
+{c}{k} AS (
+  SELECT cid{b}, UNNEST([{d_list}]) AS d, UNNEST([{m_list}]) AS cx
+  FROM {p}m{k}
+)"""
+
+
+def _rounds_sql(
+    iters: int, width: int, blocked: bool, src: str
+) -> tuple[str, str]:
+    """Rounds 1..``iters`` chained from codebook ``c0`` / ``pc0``;
+    returns the CTE text and the final codebook's name."""
+    c = "pc" if blocked else "c"
+    rounds = [
+        _round_sql(k, f"{c}{k - 1}", width, blocked, src)
+        for k in range(1, iters + 1)
+    ]
+    return ",".join(rounds), f"{c}{iters}"
+
+
+def ivf_cells_sql(
+    dims: int, iters: int, seed: str, micro: int
+) -> tuple[str, str]:
+    """CTEs ``q``, ``c0`` (the ``seed``-selected vectors, cid =
+    vec_id), ``iters`` full-width Lloyd rounds and ``af`` (vec_id, cid):
+    every vector's cell under the trained codebook (the oracle form of
+    ``ann._ivf_train``). Returns the text and the final codebook's
+    name."""
+    rounds, final = _rounds_sql(iters, dims, False, "q")
+    return (
+        f"""{quantized_sql(micro)},
+c0 AS (SELECT vec_id AS cid, d, qx AS cx FROM q WHERE {seed}),{rounds},
+afw AS (
+  SELECT cid, {_pivot_cols('cx', 'c', dims)} FROM {final} GROUP BY cid
+),
+af AS (
+  SELECT q.vec_id,
+         {_argmin_sql(dims)}
+  FROM kv1 q CROSS JOIN afw c
+  GROUP BY q.vec_id
+)""",
+        final,
+    )
+
+
+def pq_rounds_sql(iters: int, dsub: int, src: str = "pq") -> tuple[str, str]:
+    """PQ rounds 1..``iters`` from ``pc0`` over the training
+    population ``src``; returns the text and the final codebook's
+    name."""
+    return _rounds_sql(iters, dsub, True, src)
+
+
+def pq_codebook_sql(
+    dsub: int, iters: int, seed: str, micro: int
+) -> tuple[str, str]:
+    """CTEs ``pq``, ``pc0`` (the ``seed``-selected vectors' blocks) and
+    ``iters`` PQ rounds: the oracle form of ``ann._pq_train``. Returns
+    the text and the final codebook's name."""
+    rounds, final = pq_rounds_sql(iters, dsub)
+    return (
+        f"""{pq_sql(dsub, micro)},
+pc0 AS (SELECT vec_id AS cid, b, d, qx AS cx FROM pq WHERE {seed}),{rounds}""",
+        final,
+    )
+
+
+def pq_codes_sql(
+    final_cb: str, dsub: int, out: str = "codes", src: str = "pq"
+) -> str:
+    """CTE ``out`` (vec_id, b, cid): every vector of ``src`` encoded
+    against the trained codebook ``final_cb`` (the oracle form of
+    ``ann._pq_assign``). ``src`` may differ from the training
+    population (delta assignment encodes vectors the training never
+    saw), so it re-pivots under its own name."""
+    return f"""
+{out}v AS (
+  SELECT vec_id, b, {_pivot_cols('qx', 'x', dsub)} FROM {src} GROUP BY vec_id, b
+),
+{out}w AS (
+  SELECT cid, b, {_pivot_cols('cx', 'c', dsub)} FROM {final_cb} GROUP BY cid, b
+),
+{out} AS (
+  SELECT q.vec_id, q.b,
+         {_argmin_sql(dsub)}
+  FROM {out}v q JOIN {out}w c ON q.b = c.b
+  GROUP BY q.vec_id, q.b
+)"""
+
+
+def pq_lut_sql(
+    final_cb: str, n_query: int, out: str = "lut", src: str = "pq"
+) -> str:
+    """CTE ``out`` (query_id, b, cid, pdist): the ADC lookup table, the
+    exact block distance of each query (vec_id < ``n_query``) to every
+    code. Query-set-sized, so the textbook grouped-distance shape is
+    kept but the scan is pushed down to the query vectors BEFORE the
+    codebook join."""
+    return f"""
+{out} AS (
+  SELECT q.vec_id AS query_id, q.b, c.cid,
+         CAST(SUM((q.qx - c.cx) * (q.qx - c.cx)) AS BIGINT) AS pdist
+  FROM (SELECT * FROM {src} WHERE vec_id < {n_query}) q
+  JOIN {final_cb} c ON q.b = c.b AND q.d = c.d
+  GROUP BY q.vec_id, q.b, c.cid
+)"""
+
+
+#: CTE ``scored``: every (query, neighbor) ADC distance over the full
+#: code table, self excluded.
+ADC_SCORED_SQL = """scored AS (
+  SELECT l.query_id, c.vec_id AS neighbor_id,
+         CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
+  FROM codes c JOIN lut l ON c.b = l.b AND c.cid = l.cid
+  WHERE c.vec_id <> l.query_id
+  GROUP BY l.query_id, c.vec_id
+)"""
+
+
+def adc_rank_sql(col: int, partition: str = "query_id") -> str:
+    """``rk``: the ROW_NUMBER on ``(adc_dist, neighbor_id)`` per
+    ``partition``, written at column ``col``."""
+    return (
+        f"ROW_NUMBER() OVER (PARTITION BY {partition}\n"
+        + " " * (col + len("ROW_NUMBER() OVER ("))
+        + "ORDER BY adc_dist, neighbor_id) AS rk"
+    )
+
+
+def adc_topk_sql(k: int) -> str:
+    """The closing SELECT of an ADC oracle: each query's ``k`` nearest
+    rows of ``scored``, ordered by ``(query_id, rk)``."""
+    return topk_sql("query_id, neighbor_id, adc_dist, rk", k, adc_rank_sql(12))

@@ -38,6 +38,10 @@ the same training):
 
 The artifact lands under the system temp dir keyed by the input path,
 so repeated queries in a session (and across sessions) reuse it.
+
+The oracles are composed from the fixture's PQ/IVF fragments in
+``operators/similarity.py``, which are built by ``functions/lloyd.py``'s
+SQL twins of the trainer.
 """
 
 from __future__ import annotations
@@ -59,24 +63,33 @@ from boltzmannclean_spark.ann import (
     ann_search,
     build_ann_index,
 )
+from boltzmannclean_spark.functions.lloyd import (
+    ADC_SCORED_SQL,
+    adc_rank_sql,
+    pq_codes_sql,
+    pq_rounds_sql,
+    pq_sql,
+)
 from boltzmannclean_spark.functions.topk import topk_per_key
 from boltzmannclean_spark.operators.similarity import (
     CENT_MOD,
+    IVF_CELLS_SQL,
+    IVF_FINAL,
+    IVFPQ_ORACLE,
     KMEANS_ITERS,
     MICRO,
     N_QUERY,
+    PQ_CODEBOOK_SQL,
     PQ_DSUB,
+    PQ_FINAL,
     PQ_ITERS,
     PQ_K,
     PQ_M,
+    PQ_ORACLE,
+    PQ_SCAN_SQL,
     TOP_K,
     _EMB_DIMS,
     _ann_corpus,
-    _ivfpq_oracle,
-    _pq_codes_sql,
-    _pq_iter_sql,
-    _pq_lut_sql,
-    _pq_oracle,
 )
 from boltzmannclean_spark.plans.registry import register
 from boltzmannclean_spark.sources.catalog import load_table
@@ -230,37 +243,14 @@ def ensure_ann_index(
     return path
 
 
-def _pq_codebook_ctes() -> str:
-    """The PQ training CTE prefix (pq, pc0..pcN) shared with
-    ``similarity._pq_oracle`` — re-derives the exact codebook the build
-    job persists."""
-    iters, prev = [], "pc0"
-    for k in range(1, PQ_ITERS + 1):
-        iters.append(_pq_iter_sql(k, prev))
-        prev = f"pc{k}"
-    return (
-        f"""
-WITH pq AS (
-  SELECT vec_id,
-         (generate_subscripts(embedding, 1) - 1) // {PQ_DSUB} AS b,
-         (generate_subscripts(embedding, 1) - 1) % {PQ_DSUB} AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-pc0 AS (SELECT vec_id AS cid, b, d, qx AS cx FROM pq WHERE vec_id < {PQ_K}),"""
-        + ",".join(iters)
-    ), prev
-
-
-_BUILD_CTES, _BUILD_FINAL = _pq_codebook_ctes()
-
-ANN_BUILD_ORACLE = f"""{_BUILD_CTES}
+ANN_BUILD_ORACLE = f"""
+WITH {PQ_CODEBOOK_SQL}
 SELECT CAST(b AS BIGINT) AS b, CAST(cid AS BIGINT) AS cid,
        CAST(COUNT(*) AS BIGINT) AS n_dims,
        CAST(SUM(cx) AS BIGINT) AS cx_sum,
        CAST(MIN(cx) AS BIGINT) AS cx_min,
        CAST(MAX(cx) AS BIGINT) AS cx_max
-FROM {_BUILD_FINAL}
+FROM {PQ_FINAL}
 GROUP BY b, cid
 ORDER BY b, cid
 """
@@ -300,7 +290,7 @@ def sink_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_ann_pq_adc_prebuilt",
-    oracle=_pq_oracle(),
+    oracle=PQ_ORACLE,
     tags=("similarity", "ann", "pq", "prebuilt"),
 )
 def similarity_ann_pq_adc_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,18 +346,14 @@ def _exact_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     ).select("query_id", "neighbor_id")
 
 
-RECALL_ORACLE = f"""{_BUILD_CTES},{_pq_codes_sql(_BUILD_FINAL)},{_pq_lut_sql(_BUILD_FINAL)},
-scored AS (
-  SELECT l.query_id, c.vec_id AS neighbor_id,
-         CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
-  FROM codes c JOIN lut l ON c.b = l.b AND c.cid = l.cid
-  WHERE c.vec_id <> l.query_id
-  GROUP BY l.query_id, c.vec_id
-),
-adc_topk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY adc_dist, neighbor_id) AS rk
+def _adc_exact_topk_sql(by: str = "") -> str:
+    """CTEs ``adc_topk`` (``by``query_id, neighbor_id): each query's
+    ADC top-TOP_K of ``scored`` per ``by`` group, and ``exact`` /
+    ``exact_topk``: its exact integer-L2 top-TOP_K over ``pq``, self
+    excluded — the two sides of a recall overlap."""
+    return f"""adc_topk AS (
+  SELECT {by}query_id, neighbor_id FROM (
+    SELECT *, {adc_rank_sql(14, by + "query_id")}
     FROM scored
   ) t WHERE rk <= {TOP_K}
 ),
@@ -384,7 +370,13 @@ exact_topk AS (
                                  ORDER BY dist, neighbor_id) AS rk
     FROM exact
   ) t WHERE rk <= {TOP_K}
-)
+)"""
+
+
+RECALL_ORACLE = f"""
+WITH {PQ_CODEBOOK_SQL},{PQ_SCAN_SQL},
+{ADC_SCORED_SQL},
+{_adc_exact_topk_sql()}
 SELECT e.query_id,
        CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
             AS BIGINT) AS n_overlap,
@@ -460,21 +452,12 @@ _DELTA_MOD = 5  # vec_id % 5 == 0 is the "newly arrived" 20%
 def _delta_assign_oracle() -> str:
     """Train the codebook on the INITIAL 80% only (vec_id % 5 <> 0),
     then assign ALL vectors — the incremental-index-update contract."""
-    iters, prev = [], "pc0"
-    for k in range(1, PQ_ITERS + 1):
-        iters.append(_pq_iter_sql(k, prev, src="pq_init"))
-        prev = f"pc{k}"
+    rounds, final = pq_rounds_sql(PQ_ITERS, PQ_DSUB, src="pq_init")
     return f"""
-WITH pq AS (
-  SELECT vec_id,
-         (generate_subscripts(embedding, 1) - 1) // {PQ_DSUB} AS b,
-         (generate_subscripts(embedding, 1) - 1) % {PQ_DSUB} AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
+WITH {pq_sql(PQ_DSUB, MICRO)},
 pq_init AS (SELECT * FROM pq WHERE vec_id % {_DELTA_MOD} <> 0),
 pc0 AS (SELECT vec_id AS cid, b, d, qx AS cx
-        FROM pq_init WHERE vec_id < {PQ_K}),{",".join(iters)},{_pq_codes_sql(prev, src="pq")}
+        FROM pq_init WHERE vec_id < {PQ_K}),{rounds},{pq_codes_sql(final, PQ_DSUB)}
 SELECT CAST(b AS BIGINT) AS b, CAST(cid AS BIGINT) AS cid,
        COUNT(*) AS n_vectors,
        CAST(SUM(CASE WHEN vec_id % {_DELTA_MOD} = 0 THEN 1 ELSE 0 END)
@@ -530,7 +513,7 @@ def similarity_ann_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_ann_ivfpq_prebuilt",
-    oracle=_ivfpq_oracle(),
+    oracle=IVFPQ_ORACLE,
     tags=("similarity", "ann", "ivf", "pq", "prebuilt"),
 )
 def similarity_ann_ivfpq_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,34 +557,14 @@ def _recall_curve_oracle() -> str:
     per-query cell RANKING (crk), PQ codebook/codes/LUT CTEs, then one
     pruned ADC top-k per probe point via a lateral probes join, each
     overlapped against the exact integer-L2 top-k."""
-    from boltzmannclean_spark.operators.similarity import (
-        _kmeans_assign_sql,
-        _kmeans_iter_sql,
-    )
-
-    ivf_iters, prev = [], "c0"
-    for k in range(1, KMEANS_ITERS + 1):
-        ivf_iters.append(_kmeans_iter_sql(k, prev))
-        prev = f"c{k}"
-    ivf_final = prev
-    pq_iters, prev = [], "pc0"
-    for k in range(1, PQ_ITERS + 1):
-        pq_iters.append(_pq_iter_sql(k, prev))
-        prev = f"pc{k}"
-    pq_final = prev
     probes_values = ", ".join(f"({p})" for p in _PROBE_POINTS)
     return f"""
-WITH q AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-c0 AS (SELECT vec_id AS cid, d, qx AS cx FROM q WHERE vec_id % {CENT_MOD} = 0),{",".join(ivf_iters)},{_kmeans_assign_sql(ivf_final)},
+WITH {IVF_CELLS_SQL},
 qcdist AS (
   SELECT q.vec_id, c.cid,
          CAST(SUM((q.qx - c.cx) * (q.qx - c.cx)) AS BIGINT) AS dist
   FROM (SELECT * FROM q WHERE vec_id < {N_QUERY}) q
-  JOIN {ivf_final} c ON q.d = c.d GROUP BY q.vec_id, c.cid
+  JOIN {IVF_FINAL} c ON q.d = c.d GROUP BY q.vec_id, c.cid
 ),
 qprobe AS (
   SELECT vec_id, cid, crk FROM (
@@ -610,14 +573,7 @@ qprobe AS (
     FROM qcdist
   ) t WHERE crk <= {max(_PROBE_POINTS)}
 ),
-pq AS (
-  SELECT vec_id,
-         (generate_subscripts(embedding, 1) - 1) // {PQ_DSUB} AS b,
-         (generate_subscripts(embedding, 1) - 1) % {PQ_DSUB} AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-pc0 AS (SELECT vec_id AS cid, b, d, qx AS cx FROM pq WHERE vec_id < {PQ_K}),{",".join(pq_iters)},{_pq_codes_sql(pq_final)},{_pq_lut_sql(pq_final)},
+{PQ_CODEBOOK_SQL},{PQ_SCAN_SQL},
 probes AS (SELECT * FROM (VALUES {probes_values}) t(p)),
 scored AS (
   SELECT pr.p, l.query_id, c.vec_id AS neighbor_id,
@@ -630,27 +586,7 @@ scored AS (
   WHERE c.vec_id <> l.query_id
   GROUP BY pr.p, l.query_id, c.vec_id
 ),
-adc_topk AS (
-  SELECT p, query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY p, query_id
-                                 ORDER BY adc_dist, neighbor_id) AS rk
-    FROM scored
-  ) t WHERE rk <= {TOP_K}
-),
-exact AS (
-  SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-         CAST(SUM((q.qx - v.qx) * (q.qx - v.qx)) AS BIGINT) AS dist
-  FROM pq q JOIN pq v ON q.b = v.b AND q.d = v.d AND v.vec_id <> q.vec_id
-  WHERE q.vec_id < {N_QUERY}
-  GROUP BY q.vec_id, v.vec_id
-),
-exact_topk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY dist, neighbor_id) AS rk
-    FROM exact
-  ) t WHERE rk <= {TOP_K}
-)
+{_adc_exact_topk_sql("p, ")}
 SELECT CAST(pr.p AS BIGINT) AS nprobe,
        CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
             AS BIGINT) AS n_overlap,

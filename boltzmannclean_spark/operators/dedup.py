@@ -18,6 +18,9 @@ The MinHash signature, LSH bands, token-set Jaccard verify, the
 DF-capped bigram overlap and the trigram prefix filter are built in
 ``functions/shingles.py``, in their Spark form and as the CTE text the
 oracles here are composed from; the queries below wire them together.
+The embedding near-dup queries take their cosine preamble, cosine and
+Arrow vector reader from ``functions/vectors.py`` the same way, and
+SemDeDup's oracle its IVF rounds from ``functions/lloyd.py``.
 """
 
 from __future__ import annotations
@@ -43,6 +46,12 @@ from boltzmannclean_spark.functions.shingles import (
     signature_sql,
     trigram_shingles,
     trigram_sql,
+)
+from boltzmannclean_spark.functions.vectors import (
+    cosine_sql,
+    list_matrix,
+    normed,
+    normed_sql,
 )
 from boltzmannclean_spark.plans.registry import register
 from boltzmannclean_spark.sources.catalog import load_table
@@ -304,15 +313,7 @@ samp AS (
     )
     src = "samp" if sample_cap is not None else "n"
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x)) AS nrm
-  FROM v
-){samp},
+{normed_sql("vec_id")}{samp},
 planes AS (
   SELECT p, list_transform(range(1, 65),
            i -> CASE WHEN substring(md5(p::VARCHAR || '|' || i::VARCHAR), 1, 1)
@@ -344,15 +345,11 @@ cand AS (
     ON a.band = b.band AND a.band_key = b.band_key AND a.vec_id < b.vec_id
 )
 SELECT c.vec_a, c.vec_b,
-       list_reduce(list_transform(range(1, len(na.e) + 1),
-                                  i -> na.e[i] * nb.e[i]),
-                   (s, x) -> s + x) / (na.nrm * nb.nrm) AS cosine
+       {cosine_sql("na", "nb", 7, 3)} AS cosine
 FROM cand c
 JOIN {src} na ON na.vec_id = c.vec_a
 JOIN {src} nb ON nb.vec_id = c.vec_b
-WHERE list_reduce(list_transform(range(1, len(na.e) + 1),
-                                 i -> na.e[i] * nb.e[i]),
-                  (s, x) -> s + x) / (na.nrm * nb.nrm) >= {threshold}
+WHERE {cosine_sql("na", "nb", 6, 3)} >= {threshold}
 ORDER BY vec_a, vec_b
 """
 
@@ -383,12 +380,8 @@ def _cosine_dup_plan(
     and the verification dot is its vectorized NumPy twin (same fold
     order; see _verify below) — both bit-identical to DuckDB's
     list_reduce."""
-    from boltzmannclean_spark.functions.vectors import as_double, norm
-
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.select("vec_id", as_double("embedding").alias("e")).withColumn(
-        "nrm", norm(F.col("e"))
-    )
+    n = normed(emb, ["vec_id"])
     if sample_cap is not None:
         # Deterministic hash-sample, mirrored in the oracle: order by
         # md5(vec_id) and keep the first `sample_cap` rows (a global
@@ -421,32 +414,15 @@ def _cosine_dup_plan(
     # across the batch (s = (s + ea_j*eb_j) in order) — per row exactly
     # the 0.0-seeded sequential left fold of dot_unrolled, identical
     # IEEE order, no pairwise/FMA reassociation.
-    import numpy as np
     import pyarrow as pa
-
-    def _mat(col):
-        # (n, dims) view over the Arrow list<double> buffers — offsets-
-        # gathered (slice-safe), zero Python objects on the row path.
-        # Ragged or differently-sized embeddings fail loudly instead of
-        # silently gathering the wrong values (r15 ADVICE).
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        flat = col.values.to_numpy(zero_copy_only=False)
-        if not np.all(np.diff(offs) == dims):
-            raise ValueError(
-                f"cosine verify: expected fixed {dims}-dim embeddings"
-            )
-        gather = offs[:-1, None] + np.arange(dims)[None, :]
-        return flat[gather]
 
     def _verify(batches):
         for b in batches:
             n_rows = b.num_rows
             if n_rows == 0:
                 continue
-            ea = _mat(b.column("ea"))
-            eb = _mat(b.column("eb"))
+            ea = list_matrix(b.column("ea"), dims, np.float64)
+            eb = list_matrix(b.column("eb"), dims, np.float64)
             s = np.zeros(n_rows, dtype=np.float64)
             for j in range(ea.shape[1]):
                 s = s + ea[:, j] * eb[:, j]
@@ -2077,34 +2053,11 @@ SEMDEDUP_THETA = 0.40
 
 
 def _semdedup_oracle() -> str:
-    from boltzmannclean_spark.operators.similarity import (
-        CENT_MOD,
-        KMEANS_ITERS,
-        MICRO,
-        _kmeans_assign_sql,
-        _kmeans_iter_sql,
-    )
+    from boltzmannclean_spark.operators.similarity import IVF_CELLS_SQL
 
-    iters, prev = [], "c0"
-    for k in range(1, KMEANS_ITERS + 1):
-        iters.append(_kmeans_iter_sql(k, prev))
-        prev = f"c{k}"
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x)) AS nrm
-  FROM v
-),
-q AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-c0 AS (SELECT vec_id AS cid, d, qx AS cx FROM q WHERE vec_id % {CENT_MOD} = 0),{",".join(iters)},{_kmeans_assign_sql(prev)},
+{normed_sql("vec_id")},
+{IVF_CELLS_SQL},
 cells AS (
   SELECT n.vec_id, n.e, n.nrm, af.cid
   FROM n JOIN af ON n.vec_id = af.vec_id
@@ -2112,9 +2065,7 @@ cells AS (
 pairs AS (
   SELECT * FROM (
     SELECT a.vec_id AS va, b.vec_id AS vb,
-           list_reduce(list_transform(range(1, len(a.e) + 1),
-                                      i -> a.e[i] * b.e[i]),
-                       (s, x) -> s + x) / (a.nrm * b.nrm) AS cosine
+           {cosine_sql("a", "b", 11, 3)} AS cosine
     FROM cells a JOIN cells b ON a.cid = b.cid AND a.vec_id < b.vec_id
   ) t WHERE cosine >= {SEMDEDUP_THETA}
 ),

@@ -13,8 +13,14 @@ broadcast side is the query set either way.
 The IVF / PQ / IVF×PQ queries are fixture instantiations of
 ``boltzmannclean_spark/ann.py``: their Lloyd training, encoding and ADC
 top-k scoring are ``ann``'s trainer and scorer, called in memory. This
-module owns only their fixture constants and the DuckDB oracle SQL
-that re-derives the same exact-integer result.
+module owns only their fixture constants and the oracle strings.
+
+Every cosine path here (and in ``ann_index.py``, ``dedup.py`` and
+``pipeline.py``) builds its ``(vec_id, …, e, nrm)`` preamble, cosine
+column and per-query ranking from ``functions/vectors.py``, which also
+holds their DuckDB twins. The oracles' Lloyd rounds, quantized CTEs,
+PQ codes/LUT and ADC tail come from ``functions/lloyd.py``, next to the
+trainer they re-derive.
 """
 
 from __future__ import annotations
@@ -23,14 +29,35 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from boltzmannclean_spark.ann import _adc_topk, _ivf_train, _quantize, _train
+from boltzmannclean_spark.functions.lloyd import (
+    ADC_SCORED_SQL,
+    adc_topk_sql,
+    ivf_cells_sql,
+    pq_codebook_sql,
+    pq_codes_sql,
+    pq_lut_sql,
+    quantized_sql,
+)
 from boltzmannclean_spark.functions.topk import topk_per_key
-from boltzmannclean_spark.functions.vectors import as_double, dot_unrolled, norm
+from boltzmannclean_spark.functions.vectors import (
+    as_double,
+    cosine,
+    cosine_rank_sql,
+    cosine_sql,
+    dot_unrolled,
+    normed,
+    normed_sql,
+    rank_by_cosine,
+    scored_pairs,
+    topk_sql,
+)
 from boltzmannclean_spark.plans.registry import register
 from boltzmannclean_spark.sources.catalog import load_table
 
 TOP_K = 10
 N_QUERY = 5
 N_PLANES = 4  # 16 sign buckets
+_EMB_DIMS = 64
 
 # --- shared exact-integer helpers -------------------------------------------
 #
@@ -52,31 +79,14 @@ from boltzmannclean_spark.functions.exact import (  # noqa: E402
 
 
 SIM_TOPK_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x)) AS nrm
-  FROM v
-),
+{normed_sql()},
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         list_reduce(list_transform(range(1, len(q.e) + 1), i -> q.e[i] * c.e[i]),
-                     (s, x) -> s + x) / (q.nrm * c.nrm) AS cosine
+         {cosine_sql("q", "c", 9, 2)} AS cosine
   FROM n q JOIN n c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERY}
 )
-SELECT query_id, neighbor_id, neighbor_label, cosine, rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rk
-  FROM scored
-) t
-WHERE rk <= {TOP_K}
-ORDER BY query_id, rk
-"""
+{topk_sql("query_id, neighbor_id, neighbor_label, cosine, rk", TOP_K)}"""
 
 
 @register(
@@ -106,20 +116,23 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_side(df: DataFrame, *extra) -> DataFrame:
+    """``(vec_id, …, e, nrm)`` rows as the query side of
+    ``scored_pairs``: ``(query_id, qe, qnrm, extra…)``."""
+    return df.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("nrm").alias("qnrm"),
+        *extra,
+    )
+
+
 # Deterministic pseudo-random hyperplanes: coefficient for (plane p, dim i)
 # is +1 if hex digit (i mod 32) of md5('p|i') is >= '8' else -1. Both
 # engines derive identical planes from md5, so bucket assignment is
 # portable and the whole ANN pipeline is oracle-checkable.
 ANN_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x)) AS nrm
-  FROM v
-),
+{normed_sql()},
 planes AS (
   SELECT p, list_transform(range(1, 65),
            i -> CASE WHEN substring(md5(p::VARCHAR || '|' || i::VARCHAR), 1, 1)
@@ -138,21 +151,12 @@ bucketed AS (
 ),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_reduce(list_transform(range(1, len(q.e) + 1), i -> q.e[i] * c.e[i]),
-                     (s, x) -> s + x) / (q.nrm * c.nrm) AS cosine
+         {cosine_sql("q", "c", 9, 2)} AS cosine
   FROM bucketed q JOIN bucketed c
     ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERY}
 )
-SELECT query_id, neighbor_id, cosine, rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rk
-  FROM scored
-) t
-WHERE rk <= {TOP_K}
-ORDER BY query_id, rk
-"""
+{topk_sql("query_id, neighbor_id, cosine, rk", TOP_K)}"""
 
 
 @register("similarity_ann_lsh", oracle=ANN_ORACLE, tags=("similarity", "lsh", "ann"))
@@ -163,9 +167,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1/2^planes of it; planes are deterministic so the oracle replicates
     the identical pipeline."""
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.select("vec_id", "label", as_double("embedding").alias("e")).withColumn(
-        "nrm", norm(F.col("e"))
-    )
+    n = normed(emb, ["vec_id", "label"])
     planes = spark.range(N_PLANES).select(
         F.col("id").cast("int").alias("p"),
         F.transform(
@@ -201,32 +203,13 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bucket")
         )
     )
-    q = bucketed.where(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
+    q = _query_side(
+        bucketed.where(F.col("vec_id") < N_QUERY), F.col("bucket").alias("qbucket")
     )
-    scored = (
-        bucketed.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot_unrolled(F.col("qe"), F.col("e"), _EMB_DIMS)
-             / (F.col("qnrm") * F.col("nrm"))).alias(
-                "cosine"
-            ),
-        )
+    scored = scored_pairs(
+        bucketed, q, F.col("bucket") == F.col("qbucket"), dims=_EMB_DIMS
     )
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.desc("cosine"), F.col("neighbor_id")],
-        k=TOP_K,
-    ).orderBy("query_id", "rk")
+    return rank_by_cosine(scored, TOP_K)
 
 
 # IVF ANN with a TRAINED coarse quantizer: centroids are initialized
@@ -236,142 +219,32 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroid id), update by sign-safe TRUNCATED integer mean — so both
 # engines iterate bit-identically and the final cells are oracle-exact.
 # A query then scans only its own cell (nprobe=1) with exact cosine.
-# The Spark side is ann._ivf_train; the SQL below is the oracle.
+# The Spark side is ann._ivf_train; the oracle's rounds are
+# functions/lloyd.py's ivf_cells_sql.
 CENT_MOD = 100
 KMEANS_ITERS = 4
 
+#: The IVF oracles' CTEs q, c0..c{KMEANS_ITERS} and af, and the final
+#: codebook's name.
+IVF_CELLS_SQL, IVF_FINAL = ivf_cells_sql(
+    _EMB_DIMS, KMEANS_ITERS, f"vec_id % {CENT_MOD} = 0", MICRO
+)
 
-# The oracle Lloyd iterations are PIVOTED (one row per vector with the
-# dims as columns, distance as one inline expression, argmin via
-# arg_min over a HUGEINT (dist, cid) pack) instead of the textbook
-# per-(vec, dim) join + per-(vec, cid) grouped distance. Identical
-# results — arg_min on dist·2^40 + cid IS lexicographic (dist, cid)
-# because every cid < 2^40 and dist >= 0 — but the heavy hash
-# aggregation shrinks from corpus×k groups to corpus groups: measured
-# 46.5 s → 1.0 s per PQ iteration at the 20k-vector replica with
-# k=256, the difference between tractable and intractable ×10/×30
-# oracle sweeps (SCALING.md round 11).
-_ARGMIN_PACK = 1 << 40  # cid domain bound; dist·2^40 stays << 2^127
-
-
-_EMB_DIMS = 64
-
-
-def _kmeans_pivot_cols(expr: str, out: str) -> str:
-    return ", ".join(
-        f"MAX(CASE WHEN d = {d} THEN {expr} END) AS {out}{d}"
-        for d in range(_EMB_DIMS)
-    )
-
-
-def _kmeans_dist_expr() -> str:
-    return " + ".join(
-        f"(q.x{d} - c.c{d}) * (q.x{d} - c.c{d})" for d in range(_EMB_DIMS)
-    )
-
-
-def _kmeans_iter_sql(k: int, prev: str) -> str:
-    """One unrolled Lloyd iteration over the pivoted form; emits the
-    updated codebook BOTH pivoted (kw-naming, consumed by iteration
-    k+1 / final helpers) and unpivoted as ``c{k}`` (cid, d, cx) so
-    downstream SQL is shape-compatible with the persisted artifact."""
-    pivot_src = (
-        f"kv1 AS (\n  SELECT vec_id, {_kmeans_pivot_cols('qx', 'x')}"
-        "\n  FROM q GROUP BY vec_id\n),\n"
-        if k == 1
-        else ""
-    )
-    means = ", ".join(
-        _sdiv_duck(f"CAST(SUM(q.x{d}) AS BIGINT)", "COUNT(*)") + f" AS m{d}"
-        for d in range(_EMB_DIMS)
-    )
-    d_list = ", ".join(str(d) for d in range(_EMB_DIMS))
-    m_list = ", ".join(f"m{d}" for d in range(_EMB_DIMS))
-    return f"""
-{pivot_src}kw{k} AS (
-  SELECT cid, {_kmeans_pivot_cols('cx', 'c')} FROM {prev} GROUP BY cid
-),
-ka{k} AS (
-  SELECT q.vec_id,
-         arg_min(c.cid, CAST({_kmeans_dist_expr()} AS HUGEINT)
-                          * {_ARGMIN_PACK}::HUGEINT + c.cid) AS cid
-  FROM kv1 q CROSS JOIN kw{k} c
-  GROUP BY q.vec_id
-),
-km{k} AS (
-  SELECT a.cid, {means}
-  FROM kv1 q JOIN ka{k} a ON q.vec_id = a.vec_id
-  GROUP BY a.cid
-),
-c{k} AS (
-  SELECT cid, UNNEST([{d_list}]) AS d, UNNEST([{m_list}]) AS cx
-  FROM km{k}
-)"""
-
-
-def _kmeans_assign_sql(final_cb: str, out: str = "af") -> str:
-    """Final full-corpus nearest-cell assignment against the trained
-    codebook ``final_cb`` — the same pivoted arg_min as the iterations
-    (reuses kv1 from them)."""
-    return f"""
-{out}w AS (
-  SELECT cid, {_kmeans_pivot_cols('cx', 'c')} FROM {final_cb} GROUP BY cid
-),
-{out} AS (
-  SELECT q.vec_id,
-         arg_min(c.cid, CAST({_kmeans_dist_expr()} AS HUGEINT)
-                          * {_ARGMIN_PACK}::HUGEINT + c.cid) AS cid
-  FROM kv1 q CROSS JOIN {out}w c
-  GROUP BY q.vec_id
-)"""
-
-
-def _ivf_trained_oracle() -> str:
-    iters = []
-    prev = "c0"
-    for k in range(1, KMEANS_ITERS + 1):
-        iters.append(_kmeans_iter_sql(k, prev))
-        prev = f"c{k}"
-    return f"""
-WITH v AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x)) AS nrm
-  FROM v
-),
-q AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-c0 AS (SELECT vec_id AS cid, d, qx AS cx FROM q WHERE vec_id % {CENT_MOD} = 0),{",".join(iters)},{_kmeans_assign_sql(prev)},
+IVF_ORACLE = f"""
+{normed_sql()},
+{IVF_CELLS_SQL},
 cells AS (
   SELECT n.vec_id, n.e, n.nrm, af.cid
   FROM n JOIN af ON n.vec_id = af.vec_id
 ),
 scored AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         list_reduce(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]),
-                     (s, x) -> s + x) / (a.nrm * b.nrm) AS cosine
+         {cosine_sql("a", "b", 9, 2)} AS cosine
   FROM cells a JOIN cells b
     ON a.cid = b.cid AND b.vec_id <> a.vec_id
   WHERE a.vec_id < {N_QUERY}
 )
-SELECT query_id, neighbor_id, cosine, rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rk
-  FROM scored
-) t
-WHERE rk <= {TOP_K}
-ORDER BY query_id, rk
-"""
-
-
-IVF_ORACLE = _ivf_trained_oracle()
+{topk_sql("query_id, neighbor_id, cosine, rk", TOP_K)}"""
 
 
 def _assign_cells(n: DataFrame, cent: DataFrame) -> DataFrame:
@@ -386,12 +259,16 @@ def _assign_cells(n: DataFrame, cent: DataFrame) -> DataFrame:
     regardless of k. Ties break to the smallest centroid_id via the
     (ccos, -centroid_id) ordering struct, matching the oracle's
     ``ORDER BY ccos DESC, centroid_id``."""
-    ccos = dot_unrolled(F.col("e"), F.col("ce"), _EMB_DIMS) / (
-        F.col("nrm") * F.col("cnrm")
-    )
     return (
         n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "label", "e", "nrm", "centroid_id", ccos.alias("ccos"))
+        .select(
+            "vec_id",
+            "label",
+            "e",
+            "nrm",
+            "centroid_id",
+            cosine("e", "ce", "nrm", "cnrm", _EMB_DIMS).alias("ccos"),
+        )
         .groupBy("vec_id", "label", "e", "nrm")
         .agg(
             F.max_by(
@@ -399,6 +276,36 @@ def _assign_cells(n: DataFrame, cent: DataFrame) -> DataFrame:
                 F.struct(F.col("ccos"), (-F.col("centroid_id")).alias("nid")),
             ).alias("centroid_id")
         )
+    )
+
+
+def _seed_cells(n: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The seed-centroid IVF of the nprobe queries: centroids ``(centroid_id,
+    ce, cnrm)`` are the vectors with vec_id % CENT_MOD == 0, and every
+    vector of ``n`` is assigned to its nearest one (``_assign_cells``)."""
+    cent = n.where(F.col("vec_id") % CENT_MOD == 0).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("e").alias("ce"),
+        F.col("nrm").alias("cnrm"),
+    )
+    return cent, _assign_cells(n, cent)
+
+
+def _probes(
+    queries: DataFrame, cent: DataFrame, nprobe: int, rank_col: str, *keep
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest centroids by ``(ccos DESC,
+    centroid_id)``, as the query side ``(query_id, qe, qnrm, qcent,
+    keep…)``: a window over the query set × centroids, never the
+    corpus."""
+    w_probe = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "centroid_id")
+    return _query_side(
+        queries.crossJoin(F.broadcast(cent))
+        .withColumn("ccos", cosine("e", "ce", "nrm", "cnrm", _EMB_DIMS))
+        .withColumn(rank_col, F.row_number().over(w_probe))
+        .where(F.col(rank_col) <= nprobe),
+        F.col("centroid_id").alias("qcent"),
+        *keep,
     )
 
 
@@ -433,50 +340,23 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cid, so a query touches ~corpus/k vectors. Raising recall = raising
     nprobe (probe the query's top-p cells) — same plan shape."""
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("e"),
-        _quantize(F.col("embedding"), MICRO).alias("qvec"),
-    ).withColumn("nrm", norm(F.col("e")))
+    n = normed(
+        emb,
+        ["vec_id", "label"],
+        extra=[_quantize(F.col("embedding"), MICRO).alias("qvec")],
+    )
     cells = _kmeans_cells(n, _EMB_DIMS)
-    q = cells.where(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.col("cid").alias("qcid"),
+    q = _query_side(
+        cells.where(F.col("vec_id") < N_QUERY), F.col("cid").alias("qcid")
     )
-    scored = cells.join(
-        F.broadcast(q),
-        (F.col("cid") == F.col("qcid")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_unrolled(F.col("qe"), F.col("e"), _EMB_DIMS)
-             / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cosine"
-        ),
-    )
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.desc("cosine"), F.col("neighbor_id")],
-        k=TOP_K,
-    ).orderBy("query_id", "rk")
+    scored = scored_pairs(cells, q, F.col("cid") == F.col("qcid"), dims=_EMB_DIMS)
+    return rank_by_cosine(scored, TOP_K)
 
 
 NPROBE = 2
 
 IVF_NPROBE_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x)) AS nrm
-  FROM v
-),
+{normed_sql()},
 cent AS (
   SELECT vec_id AS centroid_id, e AS ce, nrm AS cnrm FROM n
   WHERE vec_id % {CENT_MOD} = 0
@@ -490,9 +370,7 @@ ranked AS MATERIALIZED (
   SELECT n.vec_id, cent.centroid_id,
          ROW_NUMBER() OVER (
            PARTITION BY n.vec_id
-           ORDER BY list_reduce(list_transform(range(1, len(n.e) + 1),
-                                               i -> n.e[i] * cent.ce[i]),
-                                (s, x) -> s + x) / (n.nrm * cent.cnrm) DESC,
+           ORDER BY {cosine_sql("n", "cent", 20, 3, "ce", "cnrm")} DESC,
                     cent.centroid_id) AS crk
   FROM n CROSS JOIN cent
 ),
@@ -507,20 +385,11 @@ probes AS (
 ),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_reduce(list_transform(range(1, len(q.e) + 1), i -> q.e[i] * c.e[i]),
-                     (s, x) -> s + x) / (q.nrm * c.nrm) AS cosine
+         {cosine_sql("q", "c", 9, 2)} AS cosine
   FROM probes q JOIN assigned c
     ON q.centroid_id = c.centroid_id AND c.vec_id <> q.vec_id
 )
-SELECT query_id, neighbor_id, cosine, rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rk
-  FROM scored
-) t
-WHERE rk <= {TOP_K}
-ORDER BY query_id, rk
-"""
+{topk_sql("query_id, neighbor_id, cosine, rk", TOP_K)}"""
 
 
 @register(
@@ -540,50 +409,13 @@ def similarity_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     full centroid ranking, and that window runs over a table the size
     of the query set, not the corpus."""
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.select("vec_id", "label", as_double("embedding").alias("e")).withColumn(
-        "nrm", norm(F.col("e"))
+    n = normed(emb, ["vec_id", "label"])
+    cent, assigned = _seed_cells(n)
+    probes = _probes(n.where(F.col("vec_id") < N_QUERY), cent, NPROBE, "crk")
+    scored = scored_pairs(
+        assigned, probes, F.col("centroid_id") == F.col("qcent"), dims=_EMB_DIMS
     )
-    cent = n.where(F.col("vec_id") % CENT_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    assigned = _assign_cells(n, cent)
-    ccos = dot_unrolled(F.col("e"), F.col("ce"), _EMB_DIMS) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    w_probe = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "centroid_id")
-    probes = (
-        n.where(F.col("vec_id") < N_QUERY)
-        .crossJoin(F.broadcast(cent))
-        .withColumn("ccos", ccos)
-        .withColumn("crk", F.row_number().over(w_probe))
-        .where(F.col("crk") <= NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.col("centroid_id").alias("qcent"),
-        )
-    )
-    scored = assigned.join(
-        F.broadcast(probes),
-        (F.col("centroid_id") == F.col("qcent"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot_unrolled(F.col("qe"), F.col("e"), _EMB_DIMS)
-             / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cosine"
-        ),
-    )
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.desc("cosine"), F.col("neighbor_id")],
-        k=TOP_K,
-    ).orderBy("query_id", "rk")
+    return rank_by_cosine(scored, TOP_K)
 
 
 # --- embedding aggregation / classification ---------------------------------
@@ -596,11 +428,7 @@ def similarity_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_centroids",
     oracle=f"""
-WITH q AS (
-  SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-)
+WITH {quantized_sql(MICRO, "label", "dim")}
 SELECT label, dim, COUNT(*) AS n_vecs,
        CAST(SUM(qx) AS DOUBLE) / (COUNT(*) * {MICRO}) AS centroid
 FROM q GROUP BY label, dim
@@ -632,11 +460,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_nearest_centroid",
     oracle=f"""
-WITH q AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
+WITH {quantized_sql(MICRO, "vec_id, label")},
 c AS (
   SELECT label AS cl, d,
          CAST(ROUND(CAST(SUM(qx) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cx
@@ -777,11 +601,7 @@ v{k} AS (
         )
         prev = f"v{k}"
     return f"""
-WITH q AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
+WITH {quantized_sql(MICRO)},
 g AS (
   SELECT a.d AS i, b.d AS j,
          {_sdiv_duck(f"CAST(SUM(a.qx * b.qx) AS BIGINT)", str(GRAM_DOWNSCALE))} AS gs
@@ -844,11 +664,7 @@ MASK_MOD = 10  # vec_id % 10 == 0 -> dimension 0 treated as missing
 @register(
     "impute_knn_embedding",
     oracle=f"""
-WITH q AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
+WITH {quantized_sql(MICRO)},
 masked AS (SELECT * FROM q WHERE vec_id % {MASK_MOD} = 0),
 cands  AS (SELECT * FROM q WHERE vec_id % {MASK_MOD} <> 0),
 ss AS (
@@ -914,7 +730,7 @@ def impute_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    from boltzmannclean_spark.functions.lloyd import _list_to_matrix
+    from boltzmannclean_spark.functions.vectors import list_matrix
 
     mrows = masked.collect()
     mrows.sort(key=lambda r: r[0])
@@ -936,7 +752,7 @@ def impute_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             c_ids = b.column(0).to_numpy(zero_copy_only=False).astype(
                 np.int64, copy=False
             )
-            C = _list_to_matrix(b.column(1), _EMB_DIMS)
+            C = list_matrix(b.column(1), _EMB_DIMS)
             c0 = C[:, 0]
             Csub = C[:, 1:]
             csq = np.einsum("ij,ij->i", Csub, Csub)
@@ -1078,129 +894,21 @@ PQ_K = 256
 PQ_ITERS = 2
 
 
-def _pq_pivot_cols(expr: str, out: str) -> str:
-    return ", ".join(
-        f"MAX(CASE WHEN d = {d} THEN {expr} END) AS {out}{d}"
-        for d in range(PQ_DSUB)
-    )
-
-
-def _pq_dist_expr() -> str:
-    return " + ".join(
-        f"(q.x{d} - c.c{d}) * (q.x{d} - c.c{d})" for d in range(PQ_DSUB)
-    )
-
-
-def _pq_iter_sql(k: int, prev: str, src: str = "pq") -> str:
-    """One unrolled per-block Lloyd iteration (block id `b` rides along
-    every key of the IVF iteration shape), in the pivoted arg_min form
-    (see _ARGMIN_PACK note above — measured 46.5 s → 1.0 s per
-    iteration at the ×10 replica with k=256). ``src`` selects the
-    training population CTE (the incremental-assign oracle trains on a
-    filtered subset). Emits the updated codebook pivoted (pw-naming)
-    AND unpivoted as ``pc{{k}}`` (cid, b, d, cx) for shape-compatible
-    downstream SQL."""
-    pivot_src = (
-        f"pv1 AS (\n  SELECT vec_id, b, {_pq_pivot_cols('qx', 'x')}"
-        f"\n  FROM {src} GROUP BY vec_id, b\n),\n"
-        if k == 1
-        else ""
-    )
-    means = ", ".join(
-        _sdiv_duck(f"CAST(SUM(q.x{d}) AS BIGINT)", "COUNT(*)") + f" AS m{d}"
-        for d in range(PQ_DSUB)
-    )
-    d_list = ", ".join(str(d) for d in range(PQ_DSUB))
-    m_list = ", ".join(f"m{d}" for d in range(PQ_DSUB))
-    return f"""
-{pivot_src}pw{k} AS (
-  SELECT cid, b, {_pq_pivot_cols('cx', 'c')} FROM {prev} GROUP BY cid, b
-),
-pa{k} AS (
-  SELECT q.vec_id, q.b,
-         arg_min(c.cid, CAST({_pq_dist_expr()} AS HUGEINT)
-                          * {_ARGMIN_PACK}::HUGEINT + c.cid) AS cid
-  FROM pv1 q JOIN pw{k} c ON q.b = c.b
-  GROUP BY q.vec_id, q.b
-),
-pm{k} AS (
-  SELECT a.cid, q.b, {means}
-  FROM pv1 q JOIN pa{k} a ON q.vec_id = a.vec_id AND q.b = a.b
-  GROUP BY a.cid, q.b
-),
-pc{k} AS (
-  SELECT cid, b, UNNEST([{d_list}]) AS d, UNNEST([{m_list}]) AS cx
-  FROM pm{k}
-)"""
-
-
-def _pq_codes_sql(final_cb: str, out: str = "codes", src: str = "pq") -> str:
-    """Full-corpus code assignment against the trained codebook — the
-    pivoted arg_min form. ``src`` may differ from the training
-    population (delta assignment encodes vectors the training never
-    saw), so it re-pivots under its own name."""
-    return f"""
-{out}v AS (
-  SELECT vec_id, b, {_pq_pivot_cols('qx', 'x')} FROM {src} GROUP BY vec_id, b
-),
-{out}w AS (
-  SELECT cid, b, {_pq_pivot_cols('cx', 'c')} FROM {final_cb} GROUP BY cid, b
-),
-{out} AS (
-  SELECT q.vec_id, q.b,
-         arg_min(c.cid, CAST({_pq_dist_expr()} AS HUGEINT)
-                          * {_ARGMIN_PACK}::HUGEINT + c.cid) AS cid
-  FROM {out}v q JOIN {out}w c ON q.b = c.b
-  GROUP BY q.vec_id, q.b
-)"""
-
-
-def _pq_lut_sql(final_cb: str, out: str = "lut", src: str = "pq") -> str:
-    """Per-(query, block, code) exact block distances — the ADC LUT.
-    Query-set-sized (N_QUERY × PQ_M × PQ_K rows), so the textbook
-    grouped-distance shape is kept but the scan is pushed down to the
-    query vectors BEFORE the codebook join."""
-    return f"""
-{out} AS (
-  SELECT q.vec_id AS query_id, q.b, c.cid,
-         CAST(SUM((q.qx - c.cx) * (q.qx - c.cx)) AS BIGINT) AS pdist
-  FROM (SELECT * FROM {src} WHERE vec_id < {{n_query}}) q
-  JOIN {final_cb} c ON q.b = c.b AND q.d = c.d
-  GROUP BY q.vec_id, q.b, c.cid
-)""".replace("{n_query}", str(N_QUERY))
-
-
-def _pq_oracle() -> str:
-    iters = []
-    prev = "pc0"
-    for k in range(1, PQ_ITERS + 1):
-        iters.append(_pq_iter_sql(k, prev))
-        prev = f"pc{k}"
-    return f"""
-WITH pq AS (
-  SELECT vec_id,
-         (generate_subscripts(embedding, 1) - 1) // {PQ_DSUB} AS b,
-         (generate_subscripts(embedding, 1) - 1) % {PQ_DSUB} AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-pc0 AS (SELECT vec_id AS cid, b, d, qx AS cx FROM pq WHERE vec_id < {PQ_K}),{",".join(iters)},{_pq_codes_sql(prev)},{_pq_lut_sql(prev)},
-scored AS (
-  SELECT l.query_id, c.vec_id AS neighbor_id,
-         CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
-  FROM codes c JOIN lut l ON c.b = l.b AND c.cid = l.cid
-  WHERE c.vec_id <> l.query_id
-  GROUP BY l.query_id, c.vec_id
+#: The PQ oracles' CTEs pq, pc0..pc{PQ_ITERS}, and the final codebook's
+#: name.
+PQ_CODEBOOK_SQL, PQ_FINAL = pq_codebook_sql(
+    PQ_DSUB, PQ_ITERS, f"vec_id < {PQ_K}", MICRO
 )
-SELECT query_id, neighbor_id, adc_dist, rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY adc_dist, neighbor_id) AS rk
-  FROM scored
-) t
-WHERE rk <= {TOP_K}
-ORDER BY query_id, rk
-"""
+
+#: CTEs codes and lut: the corpus codes and the queries' ADC table.
+PQ_SCAN_SQL = (
+    f"{pq_codes_sql(PQ_FINAL, PQ_DSUB)},{pq_lut_sql(PQ_FINAL, N_QUERY)}"
+)
+
+PQ_ORACLE = f"""
+WITH {PQ_CODEBOOK_SQL},{PQ_SCAN_SQL},
+{ADC_SCORED_SQL}
+{adc_topk_sql(TOP_K)}"""
 
 
 def _ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1217,7 +925,7 @@ def _ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_ann_pq_adc",
-    oracle=_pq_oracle(),
+    oracle=PQ_ORACLE,
     tags=("similarity", "ann", "pq", "quantization"),
 )
 def similarity_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1255,36 +963,13 @@ def similarity_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_oracle() -> str:
-    """IVF coarse quantizer CTEs (q/c*/af) + PQ codebook CTEs
-    (pq/pc*/codes/lut), then ADC scoring restricted to the query's IVF
-    cell — both trainings unrolled exactly as in their standalone
-    oracles."""
-    ivf_iters, prev = [], "c0"
-    for k in range(1, KMEANS_ITERS + 1):
-        ivf_iters.append(_kmeans_iter_sql(k, prev))
-        prev = f"c{k}"
-    ivf_final = prev
-    pq_iters, prev = [], "pc0"
-    for k in range(1, PQ_ITERS + 1):
-        pq_iters.append(_pq_iter_sql(k, prev))
-        prev = f"pc{k}"
-    pq_final = prev
-    return f"""
-WITH q AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-c0 AS (SELECT vec_id AS cid, d, qx AS cx FROM q WHERE vec_id % {CENT_MOD} = 0),{",".join(ivf_iters)},{_kmeans_assign_sql(ivf_final)},
-pq AS (
-  SELECT vec_id,
-         (generate_subscripts(embedding, 1) - 1) // {PQ_DSUB} AS b,
-         (generate_subscripts(embedding, 1) - 1) % {PQ_DSUB} AS d,
-         CAST(ROUND(CAST(UNNEST(embedding) AS DOUBLE) * {MICRO}) AS BIGINT) AS qx
-  FROM embeddings
-),
-pc0 AS (SELECT vec_id AS cid, b, d, qx AS cx FROM pq WHERE vec_id < {PQ_K}),{",".join(pq_iters)},{_pq_codes_sql(pq_final)},{_pq_lut_sql(pq_final)},
+#: IVF coarse quantizer CTEs (q/c*/af) + PQ codebook CTEs
+#: (pq/pc*/codes/lut), then ADC scoring restricted to the query's IVF
+#: cell — both trainings unrolled exactly as in their standalone
+#: oracles.
+IVFPQ_ORACLE = f"""
+WITH {IVF_CELLS_SQL},
+{PQ_CODEBOOK_SQL},{PQ_SCAN_SQL},
 scored AS (
   SELECT l.query_id, c.vec_id AS neighbor_id,
          CAST(SUM(l.pdist) AS BIGINT) AS adc_dist
@@ -1295,20 +980,12 @@ scored AS (
   WHERE c.vec_id <> l.query_id
   GROUP BY l.query_id, c.vec_id
 )
-SELECT query_id, neighbor_id, adc_dist, rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY adc_dist, neighbor_id) AS rk
-  FROM scored
-) t
-WHERE rk <= {TOP_K}
-ORDER BY query_id, rk
-"""
+{adc_topk_sql(TOP_K)}"""
 
 
 @register(
     "similarity_ann_ivfpq",
-    oracle=_ivfpq_oracle(),
+    oracle=IVFPQ_ORACLE,
     tags=("similarity", "ann", "ivf", "pq"),
 )
 def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1425,41 +1102,22 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 HARD_NEG_QUERIES = 10  # anchors (vec_id < this)
+_HARD_NEG_COLS = """query_id, query_label, neighbor_id, neighbor_label, cosine,
+       CAST(rk AS INT) AS rk"""
 
 
 @register(
     "pairs_hard_negatives",
     oracle=f"""
-WITH v AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x))
-           AS nrm
-  FROM v
-),
+{normed_sql(wrap=True)},
 scored AS (
   SELECT q.vec_id AS query_id, q.label AS query_label,
          c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         list_reduce(list_transform(range(1, len(q.e) + 1),
-                                    i -> q.e[i] * c.e[i]),
-                     (s, x) -> s + x) / (q.nrm * c.nrm) AS cosine
+         {cosine_sql("q", "c", 9, 3)} AS cosine
   FROM n q JOIN n c ON c.vec_id <> q.vec_id AND c.label <> q.label
   WHERE q.vec_id < {HARD_NEG_QUERIES}
 )
-SELECT query_id, query_label, neighbor_id, neighbor_label, cosine,
-       CAST(rk AS INT) AS rk
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rk
-  FROM scored
-) t
-WHERE rk <= {TOP_K}
-ORDER BY query_id, rk
-""",
+{topk_sql(_HARD_NEG_COLS, TOP_K)}""",
     tags=("similarity", "hard-negatives", "contrastive", "training-pairs"),
 )
 def pairs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1481,9 +1139,7 @@ def pairs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ann_search + label filter) exactly as similarity_cosine_topk
     documents; the mining semantics are unchanged."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", "label", as_double("embedding").alias("e")
-    ).withColumn("nrm", norm(F.col("e")))
+    v = normed(emb, ["vec_id", "label"])
     q = v.where(F.col("vec_id") < HARD_NEG_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("query_label"),
@@ -1501,18 +1157,10 @@ def pairs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_label",
             F.col("vec_id").alias("neighbor_id"),
             F.col("label").alias("neighbor_label"),
-            (
-                dot_unrolled(F.col("qe"), F.col("e"), _EMB_DIMS)
-                / (F.col("qnrm") * F.col("nrm"))
-            ).alias("cosine"),
+            cosine("qe", "e", "qnrm", "nrm", _EMB_DIMS).alias("cosine"),
         )
     )
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.desc("cosine"), F.col("neighbor_id")],
-        k=TOP_K,
-    ).select(
+    return rank_by_cosine(scored, TOP_K, ordered=False).select(
         "query_id",
         "query_label",
         "neighbor_id",
@@ -1530,17 +1178,13 @@ def _nprobe_autotune_oracle() -> str:
     """DuckDB twin of the nprobe recall sweep: the IVF_NPROBE building
     blocks (seed centroids, crk-ranked probes), one exact brute-force
     truth CTE, and one hits CTE per ladder rung."""
-    dot_sql = (
-        "list_reduce(list_transform(range(1, len(q.e) + 1),"
-        " i -> q.e[i] * c.e[i]), (s, x) -> s + x) / (q.nrm * c.nrm)"
-    )
+    dot_sql = cosine_sql("q", "c")
     rungs = ",\n".join(
         f"""h{p} AS (
   SELECT {p} AS nprobe, CAST(COUNT(*) AS BIGINT) AS hits
   FROM (
     SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rk
+           {cosine_rank_sql(11)}
     FROM scored WHERE probe_rk <= {p}
   ) t JOIN truth USING (query_id, neighbor_id)
   WHERE t.rk <= {TOP_K}
@@ -1551,15 +1195,7 @@ def _nprobe_autotune_oracle() -> str:
         f"SELECT nprobe, hits FROM h{p}" for p in TUNE_LADDER
     )
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, e,
-         sqrt(list_reduce(list_transform(e, x -> x * x), (s, x) -> s + x)) AS nrm
-  FROM v
-),
+{normed_sql("vec_id")},
 cent AS (
   SELECT vec_id AS centroid_id, e AS ce, nrm AS cnrm FROM n
   WHERE vec_id % {CENT_MOD} = 0
@@ -1569,9 +1205,7 @@ pairs AS MATERIALIZED (
   -- corpus x centroids fan-out is what made the naive form spill past
   -- 24 GiB at the x30 replica; arrays re-join by id afterwards.
   SELECT n.vec_id, cent.centroid_id,
-         list_reduce(list_transform(range(1, len(n.e) + 1),
-                                    i -> n.e[i] * cent.ce[i]),
-                     (s, x) -> s + x) / (n.nrm * cent.cnrm) AS ccos
+         {cosine_sql("n", "cent", 9, 3, "ce", "cnrm")} AS ccos
   FROM n CROSS JOIN cent
 ),
 ranked AS MATERIALIZED (
@@ -1651,72 +1285,34 @@ def similarity_ann_nprobe_autotune(spark: SparkSession, sf_dir: str) -> DataFram
     expressible seed-centroid IVF so the oracle can replicate every
     rung."""
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.select(
-        "vec_id", "label", as_double("embedding").alias("e")
-    ).withColumn("nrm", norm(F.col("e")))
-    cent = n.where(F.col("vec_id") % CENT_MOD == 0).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    assigned = _assign_cells(n, cent)
+    n = normed(emb, ["vec_id", "label"])
+    cent, assigned = _seed_cells(n)
     queries = n.where(F.col("vec_id") < N_QUERY)
-    ccos = dot_unrolled(F.col("e"), F.col("ce"), _EMB_DIMS) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    w_probe = Window.partitionBy("vec_id").orderBy(
-        F.desc("ccos"), "centroid_id"
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("ccos", ccos)
-        .withColumn("probe_rk", F.row_number().over(w_probe))
-        .where(F.col("probe_rk") <= max(TUNE_LADDER))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.col("centroid_id").alias("qcent"),
-            "probe_rk",
-        )
-    )
-    scored = assigned.join(
-        F.broadcast(probes),
-        (F.col("centroid_id") == F.col("qcent"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
+    probes = _probes(queries, cent, max(TUNE_LADDER), "probe_rk", "probe_rk")
+    scored = scored_pairs(
+        assigned,
+        probes,
+        F.col("centroid_id") == F.col("qcent"),
         "probe_rk",
-        (
-            dot_unrolled(F.col("qe"), F.col("e"), _EMB_DIMS)
-            / (F.col("qnrm") * F.col("nrm"))
-        ).alias("cosine"),
+        dims=_EMB_DIMS,
     )
-    truth = topk_per_key(
+    truth = rank_by_cosine(
         queries.alias("q")
         .crossJoin(n.alias("c"))
         .where(F.col("c.vec_id") != F.col("q.vec_id"))
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.vec_id").alias("neighbor_id"),
-            (
-                dot_unrolled(F.col("q.e"), F.col("c.e"), _EMB_DIMS)
-                / (F.col("q.nrm") * F.col("c.nrm"))
-            ).alias("cosine"),
+            cosine("q.e", "c.e", "q.nrm", "c.nrm", _EMB_DIMS).alias("cosine"),
         ),
-        keys=["query_id"],
-        order=[F.desc("cosine"), F.col("neighbor_id")],
-        k=TOP_K,
+        TOP_K,
+        ordered=False,
     ).select("query_id", "neighbor_id")
     possible = truth.agg(F.count(F.lit(1)).cast("long").alias("possible"))
     rungs = None
     for p in TUNE_LADDER:
-        topp = topk_per_key(
-            scored.where(F.col("probe_rk") <= p),
-            keys=["query_id"],
-            order=[F.desc("cosine"), F.col("neighbor_id")],
-            k=TOP_K,
+        topp = rank_by_cosine(
+            scored.where(F.col("probe_rk") <= p), TOP_K, ordered=False
         ).select("query_id", "neighbor_id")
         h = (
             topp.join(truth, ["query_id", "neighbor_id"])

@@ -39,12 +39,11 @@ from boltzmannclean_spark.functions.shingles import (
     lsh_bands,
     minhash_signature,
 )
-from boltzmannclean_spark.functions.topk import topk_per_key
 from boltzmannclean_spark.functions.vectors import (
-    as_double,
-    dot,
-    dot_unrolled,
-    norm,
+    cosine,
+    normed,
+    rank_by_cosine,
+    scored_pairs,
 )
 
 __all__ = [
@@ -272,12 +271,12 @@ def semantic_dedup(
     job)."""
     from boltzmannclean_spark.operators.similarity import MICRO, _kmeans_cells
 
-    n_full = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.lit("x").alias("label"),
-        as_double(vec_col).alias("e"),
-        _quantize(F.col(vec_col), MICRO).alias("qvec"),
-    ).withColumn("nrm", norm(F.col("e")))
+    n_full = normed(
+        emb,
+        [F.col(id_col).alias("vec_id"), F.lit("x").alias("label")],
+        vec_col,
+        extra=[_quantize(F.col(vec_col), MICRO).alias("qvec")],
+    )
     if dims is None:
         first = n_full.select(F.size("qvec")).first()
         train_dims = first[0] if first else 1
@@ -312,18 +311,13 @@ def semantic_dedup(
     # fold evaluated interpreted lambdas per element (~25 s of a 31 s
     # query at sf0.1); the unrolled form is bit-identical (same seeded
     # left-fold order) in whole-stage codegen.
-    dotp = (
-        dot_unrolled(F.col("ea"), F.col("eb"), dims)
-        if dims is not None
-        else dot(F.col("ea"), F.col("eb"))
-    )
     pairs = (
         a.join(b, "cid")
         .where(F.col("va") < F.col("vb"))
         .select(
             "va",
             "vb",
-            (dotp / (F.col("na") * F.col("nb"))).alias("cosine"),
+            cosine("ea", "eb", "na", "nb", dims).alias("cosine"),
         )
         .where(F.col("cosine") >= theta)
         # Pair-set sized (theta-filtered); feeds BOTH union legs of the
@@ -373,42 +367,15 @@ def cosine_topk(
     so the scored corpus never lands on |queries| tasks. ``queries`` shares the corpus
     schema (id + vector columns); a query never matches itself.
     Returns (query_id, neighbor_id[, neighbor_label], cosine, rk)."""
-    proj = [
-        F.col(id_col).alias("vec_id"),
-        as_double(vec_col).alias("e"),
-    ]
+    keys = [F.col(id_col).alias("vec_id")]
     if label_col:
-        proj.insert(1, F.col(label_col).alias("label"))
-    v = corpus.select(*proj).withColumn("nrm", norm(F.col("e")))
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double(vec_col).alias("qe")
-        )
-        .withColumn("qnrm", norm(F.col("qe")))
+        keys.append(F.col(label_col).alias("label"))
+    v = normed(corpus, keys, vec_col)
+    q = normed(
+        queries, [F.col(id_col).alias("query_id")], vec_col, e="qe", nrm="qnrm"
     )
-    out_cols = [
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (
-            (
-                dot_unrolled(F.col("qe"), F.col("e"), dims)
-                if dims is not None
-                else dot(F.col("qe"), F.col("e"))
-            )
-            / (F.col("qnrm") * F.col("nrm"))
-        ).alias("cosine"),
-    ]
-    if label_col:
-        out_cols.insert(2, F.col("label").alias("neighbor_label"))
-    scored = v.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
-    ).select(*out_cols)
-    return topk_per_key(
-        scored,
-        keys=["query_id"],
-        order=[F.desc("cosine"), F.col("neighbor_id")],
-        k=k,
-    ).orderBy("query_id", "rk")
+    keep = [F.col("label").alias("neighbor_label")] if label_col else []
+    return rank_by_cosine(scored_pairs(v, q, None, *keep, dims=dims), k)
 
 
 def bm25_topk(

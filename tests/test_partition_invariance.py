@@ -239,6 +239,15 @@ INVARIANT_QUERIES = (
     # overlap counts; each Jaccard is one double division of integers.
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
+    # the shared cosine builders (functions/vectors.py): per-pair IEEE
+    # cosine trees, integer Lloyd cells and max_by cell picks under the
+    # (cosine DESC, neighbor_id) per-query rank (pairs_hard_negatives,
+    # batch 10 above, is the fifth query built on them).
+    "similarity_cosine_topk",
+    "similarity_ann_lsh",
+    "similarity_ann_ivf",
+    "similarity_ann_ivf_nprobe",
+    "similarity_ann_nprobe_autotune",
 )
 
 

@@ -357,6 +357,7 @@ def test_similarity_topk_limits_rows_below_the_exchange(spark, sf_dir):
         "similarity_ann_lsh",
         "similarity_ann_ivf",
         "similarity_ann_ivf_nprobe",
+        "pairs_hard_negatives",
     ):
         plan = _plan(QUERIES[name].spark_fn(spark, sf_dir))
         lines = plan.splitlines()
