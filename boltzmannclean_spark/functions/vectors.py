@@ -14,7 +14,11 @@ shape is built here once for both engines:
 
 - ``normed`` / ``normed_sql``: the ``(vec_id[, label], e, nrm)``
   preamble — double-cast vector and its norm.
-- ``cosine`` / ``cosine_sql``: dot over the norm product.
+- ``cosine`` / ``cosine_sql``: dot over the norm product. A zero
+  vector has no direction, and its cosine is NULL in both engines:
+  DuckDB evaluates 0.0/0.0 to NULL, and Spark's ``try_divide`` does the
+  same under ANSI mode instead of raising DIVIDE_BY_ZERO. NULL ranks
+  last under ``cosine DESC`` in both.
 - ``scored_pairs`` / ``rank_by_cosine`` and ``cosine_rank_sql`` /
   ``topk_sql``: the per-query ranking on ``(cosine DESC, neighbor_id)``
   and its ``ROW_NUMBER … WHERE rk <= k ORDER BY query_id, rk`` twin.
@@ -107,10 +111,10 @@ def cosine(
     """Cosine of double vectors ``a`` and ``b`` with norms ``na`` and
     ``nb``: the 0.0-seeded left-fold dot, unrolled when ``dims`` is
     known (r15: pays off only on large pair fan-outs, where the HOF
-    fold's interpreted lambdas dominate)."""
+    fold's interpreted lambdas dominate). NULL when a norm is 0."""
     a, b = _col(a), _col(b)
     dotp = dot_unrolled(a, b, dims) if dims is not None else dot(a, b)
-    return dotp / (_col(na) * _col(nb))
+    return F.try_divide(dotp, _col(na) * _col(nb))
 
 
 def scored_pairs(

@@ -413,7 +413,9 @@ def _cosine_dup_plan(
     # impossible. Exactness: the fold accumulates dimension-by-dimension
     # across the batch (s = (s + ea_j*eb_j) in order) — per row exactly
     # the 0.0-seeded sequential left fold of dot_unrolled, identical
-    # IEEE order, no pairwise/FMA reassociation.
+    # IEEE order, no pairwise/FMA reassociation. A zero-norm pair's
+    # cosine is NULL, as the shared ``cosine`` builder's and DuckDB's
+    # (NumPy's NaN would pass Spark's threshold: NaN sorts above all).
     import pyarrow as pa
 
     def _verify(batches):
@@ -426,12 +428,13 @@ def _cosine_dup_plan(
             s = np.zeros(n_rows, dtype=np.float64)
             for j in range(ea.shape[1]):
                 s = s + ea[:, j] * eb[:, j]
-            cos = s / (
-                b.column("na").to_numpy(zero_copy_only=False)
-                * b.column("nb").to_numpy(zero_copy_only=False)
-            )
+            den = b.column("na").to_numpy(zero_copy_only=False) * b.column(
+                "nb"
+            ).to_numpy(zero_copy_only=False)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                cos = s / den
             yield pa.RecordBatch.from_arrays(
-                [b.column("vec_a"), b.column("vec_b"), pa.array(cos)],
+                [b.column("vec_a"), b.column("vec_b"), pa.array(cos, mask=den == 0)],
                 ["vec_a", "vec_b", "cosine"],
             )
 

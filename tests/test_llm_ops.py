@@ -255,6 +255,45 @@ def test_embedding_dedup_demo_finds_pairs(spark, oracle_sf_dir):
     assert all(r.cosine >= 0.35 for r in rows)
 
 
+def test_embedding_dedup_zero_vector_matches_oracle(spark, tmp_path):
+    # A zero vector's sign bits all read '1', so it collides with other
+    # vectors in some band; its cosine is NULL in the DuckDB oracle
+    # (0.0/0.0) and the pair fails the threshold. The NumPy verify must
+    # agree (a NaN cosine would pass Spark's threshold filter).
+    import duckdb
+
+    from boltzmannclean_spark.operators.dedup import (
+        DEMO_BANDS,
+        DEMO_COSINE_THRESHOLD,
+        DEMO_ROWS,
+        _cosine_dup_oracle,
+        _cosine_dup_plan,
+    )
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(40, 64)).astype(np.float32)
+    vecs[3] = 0.0
+    rows = [(i, vecs[i].tolist(), i % 3) for i in range(len(vecs))]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+    got = _cosine_dup_plan(
+        spark, str(tmp_path), DEMO_BANDS, DEMO_ROWS, DEMO_COSINE_THRESHOLD
+    ).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/embeddings.parquet/*.parquet')"
+    )
+    want = con.execute(
+        _cosine_dup_oracle(DEMO_BANDS, DEMO_ROWS, DEMO_COSINE_THRESHOLD)
+    ).fetchall()
+    assert want, "no pair clears the demo threshold"
+    assert [(r.vec_a, r.vec_b, r.cosine.hex()) for r in got] == [
+        (a, b, c.hex()) for a, b, c in want
+    ]
+
+
 def test_embedding_dedup_numpy_cosine_bit_equals_fold(spark, oracle_sf_dir):
     # The r15 verify stage computes the cosine in NumPy (mapInArrow,
     # dimension-ordered fold). It must be BIT-identical to the JVM

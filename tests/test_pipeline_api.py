@@ -125,6 +125,52 @@ def test_cosine_topk_k_knob(spark):
     assert [r.rk for r in out] == [1, 2, 3]
 
 
+def test_cosine_topk_zero_vector_matches_oracle(spark):
+    # A zero vector has no direction. DuckDB evaluates its 0.0/0.0
+    # cosine to NULL, which ranks last under cosine DESC; the Spark
+    # path must return the same rows, bit for bit, with and without
+    # the unrolled dot (under ANSI mode a plain division raised
+    # DIVIDE_BY_ZERO instead).
+    import duckdb
+
+    from boltzmannclean_spark.operators.similarity import (
+        N_QUERY,
+        SIM_TOPK_ORACLE,
+        TOP_K,
+    )
+
+    rows = [
+        (0, [0.5, 0.5], 1),
+        (1, [0.0, 0.0], 0),
+        (2, [1.0, 0.0], 1),
+        (3, [0.25, -1.0], 2),
+        (4, [-1.0, 0.5], 0),
+        (5, [0.0, 2.0], 2),
+        (6, [1.5, 1.0], 1),
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[], label INTEGER)"
+    )
+    con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
+    want = con.execute(SIM_TOPK_ORACLE).fetchall()
+    assert any(r[3] is None for r in want)
+
+    def canon(rs):
+        return [
+            tuple(v.hex() if isinstance(v, float) else v for v in r) for r in rs
+        ]
+
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    for dims in (None, 2):
+        got = cosine_topk(
+            emb, emb.where(F.col("vec_id") < N_QUERY), k=TOP_K, dims=dims
+        ).collect()
+        assert canon(got) == canon(want), dims
+
+
 def test_semantic_dedup_any_dimensionality(spark):
     # 8-dim corpus in two clusters seeded by ids 0 and 100 (the vec_ids
     # divisible by the seed modulus). Within a cluster the members sit

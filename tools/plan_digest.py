@@ -13,7 +13,9 @@ jobs here), takes ``queryExecution().optimizedPlan()`` and removes
   - RDD ids (``MapPartitionsRDD[42]`` -> ``MapPartitionsRDD``),
 
 then prints ``<sha256>  <name>`` per query. Run it on both commits
-(copy the script onto a ``git archive`` of the parent) and diff.
+(copy the script onto a ``git archive`` of the parent) and diff. What
+the plan string does not print is not compared: a division's eval mode,
+for one (``try_divide`` prints as ``/``).
 
 Usage: python tools/plan_digest.py --sf-dir DIR [--show] NAME [NAME ...]
   --sf-dir  the table directory the queries read
