@@ -477,7 +477,11 @@ def _round_sql(k: int, prev: str, width: int, blocked: bool, src: str) -> str:
     on every key; full-width rounds (IVF: ``k``-named) do not."""
     p, c = ("p", "pc") if blocked else ("k", "c")
     b, qb = (", b", ", q.b") if blocked else ("", "")
-    on = " ON q.b = c.b" if blocked else ""
+    join, on, ab = (
+        ("JOIN", " ON q.b = c.b", " AND q.b = a.b")
+        if blocked
+        else ("CROSS JOIN", "", "")
+    )
     pivot_src = (
         f"{p}v1 AS (\n  SELECT vec_id{b}, {_pivot_cols('qx', 'x', width)}"
         f"\n  FROM {src} GROUP BY vec_id{b}\n),\n"
@@ -490,7 +494,6 @@ def _round_sql(k: int, prev: str, width: int, blocked: bool, src: str) -> str:
     )
     d_list = ", ".join(str(d) for d in range(width))
     m_list = ", ".join(f"m{d}" for d in range(width))
-    join = "JOIN" if blocked else "CROSS JOIN"
     return f"""
 {pivot_src}{p}w{k} AS (
   SELECT cid{b}, {_pivot_cols('cx', 'c', width)} FROM {prev} GROUP BY cid{b}
@@ -503,7 +506,7 @@ def _round_sql(k: int, prev: str, width: int, blocked: bool, src: str) -> str:
 ),
 {p}m{k} AS (
   SELECT a.cid{qb}, {means}
-  FROM {p}v1 q JOIN {p}a{k} a ON q.vec_id = a.vec_id{' AND q.b = a.b' if blocked else ''}
+  FROM {p}v1 q JOIN {p}a{k} a ON q.vec_id = a.vec_id{ab}
   GROUP BY a.cid{qb}
 ),
 {c}{k} AS (

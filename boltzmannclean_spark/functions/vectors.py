@@ -217,7 +217,9 @@ ORDER BY query_id, rk
 # --- the Arrow reader ----------------------------------------------------------
 
 
-def list_matrix(col: pa.Array | pa.ChunkedArray, dims: int, dtype=np.int64) -> np.ndarray:
+def list_matrix(
+    col: pa.Array | pa.ChunkedArray, dims: int, dtype=np.int64
+) -> np.ndarray:
     """Arrow ``list<…>`` column → ``(n, dims)`` ``dtype`` matrix. Every
     row must hold exactly ``dims`` values: the offsets are checked row
     by row (a total of ``n * dims`` values can hide ragged rows) and a
