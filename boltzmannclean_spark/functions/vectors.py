@@ -221,11 +221,12 @@ def list_matrix(
     col: pa.Array | pa.ChunkedArray, dims: int, dtype=np.int64
 ) -> np.ndarray:
     """Arrow ``list<…>`` column → ``(n, dims)`` ``dtype`` matrix. Every
-    row must hold exactly ``dims`` values: the offsets are checked row
-    by row (a total of ``n * dims`` values can hide ragged rows) and a
-    NULL row is rejected. Offsets-gathered, so a sliced array reads its
-    own rows; zero-copy on the values buffer when the rows are
-    contiguous."""
+    row must hold exactly ``dims`` non-NULL values: the offsets are
+    checked row by row (a total of ``n * dims`` values can hide ragged
+    rows), and a NULL row or element is rejected (NumPy would read a
+    NULL long as -2^63). Offsets-gathered, so a sliced array reads its
+    own rows; zero-copy on the values buffer when it already has
+    ``dtype``."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     if col.null_count:
@@ -236,5 +237,8 @@ def list_matrix(
             f"expected fixed {dims}-dim vectors, got row lengths "
             f"{sorted(set(np.diff(offs).tolist()))}"
         )
-    flat = col.values.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
-    return flat[offs[0] : offs[-1]].reshape(len(col), dims)
+    values = col.values.slice(offs[0], offs[-1] - offs[0])
+    if values.null_count:
+        raise ValueError(f"expected {dims}-dim vectors, got a NULL element")
+    flat = values.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    return flat.reshape(len(col), dims)

@@ -23,6 +23,9 @@ def test_reads_fixed_rows(arrow_type, dtype):
     chunked = pa.chunked_array([arr.slice(0, 1), arr.slice(1)])
     assert list_matrix(chunked, 2, dtype).tolist() == m.tolist()
     assert list_matrix(arr.slice(3), 2, dtype).shape == (0, 2)
+    # NULL elements outside the slice are not the slice's.
+    holed = pa.array([[None, 0], [7, 8]], pa.list_(arrow_type))
+    assert list_matrix(holed.slice(1), 2, dtype).tolist() == [[7, 8]]
 
 
 def _ragged(t):
@@ -38,8 +41,12 @@ def _null_row(t):
     return pa.array([[1] * 4, None], pa.list_(t))
 
 
+def _null_element(t):
+    return pa.array([[1] * 4, [1, None, 3, 4]], pa.list_(t))
+
+
 @pytest.mark.parametrize("arrow_type,dtype", DTYPES)
-@pytest.mark.parametrize("make", [_ragged, _ragged_slice, _null_row])
+@pytest.mark.parametrize("make", [_ragged, _ragged_slice, _null_row, _null_element])
 def test_rejects_rows_of_another_length(make, arrow_type, dtype):
     with pytest.raises(ValueError):
         list_matrix(make(arrow_type), 4, dtype)
