@@ -107,34 +107,23 @@ def main() -> int:
             # exact truth = the tune_nprobe truth definition (cosine);
             # recompute identically for the ceiling measurement
             from boltzmannclean_spark.functions.vectors import (
-                as_double,
-                dot,
-                norm,
+                cosine,
+                normed,
+                rank_by_cosine,
             )
-            from boltzmannclean_spark.functions.topk import topk_per_key
 
-            qn = probes.select(
-                F.col("vec_id").alias("qid"),
-                as_double(F.col("embedding")).alias("qe"),
-            ).withColumn("qnrm", norm(F.col("qe")))
-            cn = emb.select(
-                F.col("vec_id").alias("cid"),
-                as_double(F.col("embedding")).alias("ce"),
-            ).withColumn("cnrm", norm(F.col("ce")))
-            cos = dot(F.col("qe"), F.col("ce")) / (
-                F.col("qnrm") * F.col("cnrm")
-            )
-            truth = topk_per_key(
+            qn = normed(probes, [F.col("vec_id").alias("qid")], e="qe", nrm="qnrm")
+            cn = normed(emb, [F.col("vec_id").alias("cid")], e="ce", nrm="cnrm")
+            truth = rank_by_cosine(
                 qn.crossJoin(cn)
                 .where(F.col("cid") != F.col("qid"))
                 .select(
                     F.col("qid").alias("query_id"),
                     F.col("cid").alias("neighbor_id"),
-                    cos.alias("cosine"),
+                    cosine("qe", "ce", "qnrm", "cnrm").alias("cosine"),
                 ),
-                keys=["query_id"],
-                order=[F.desc("cosine"), F.col("neighbor_id")],
-                k=TOP_K,
+                TOP_K,
+                ordered=False,
             ).select("query_id", "neighbor_id")
             hits = truth.join(adc, ["query_id", "neighbor_id"]).count()
             possible = truth.count()
